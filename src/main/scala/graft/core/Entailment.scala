@@ -251,28 +251,6 @@ object Entailment {
     e.join(wit, Seq("src", "dst"), "left_anti")
   }
 
-  /** OWL-RL equality rules (eq-sym, eq-trans, eq-rep-s, eq-rep-o) over a
-    * triple table, materialized the only way that survives web scale:
-    * REPRESENTATIVE REWRITE, not sameAs-pair explosion. Naively chaining
-    * eq-trans + eq-rep multiplies every triple by the size of its
-    * subject's AND object's equality clique — a k-clique of aliases (dbpedia
-    * sameAs hubs run to hundreds) inflates each fact k² times. Rewriting
-    * every id to its clique representative keeps the output ≤ |triples| and
-    * IS the closure up to renaming: any entailed triple is recovered by
-    * substituting clique members back.
-    *
-    * `rep` is the (id, rep) map — eq-sym/eq-trans are exactly connected
-    * components over the sameAs pair graph, so callers feed
-    * `ConnectedComponents.run(sameAsPairs)` (alternating-star / union-find,
-    * already size-gated there); this operator is the eq-rep half: two
-    * left joins (subject, object) + coalesce + one distinct. The rep map is
-    * |aliased ids|-sized — orders of magnitude below the triple table — so
-    * at or below `broadcastMaxRows` it rides two BroadcastHashJoins (the
-    * fact stream never shuffles before the final distinct); above, the
-    * same plan shuffles on the join keys and AQE's skew split handles hub
-    * representatives (same gate philosophy as Canonicalize.saltedMapJoin,
-    * which is where a pipeline with a measured-skewed alias map should
-    * route instead). */
   /** OWL-RL prp-fp / prp-ifp — the equality GENERATOR that feeds
     * [[sameAsRewrite]]: a FUNCTIONAL property p with p(x, y₁) ∧ p(x, y₂)
     * entails y₁ sameAs y₂ (prp-fp); an INVERSE-functional property with
@@ -473,10 +451,30 @@ object Entailment {
     out.reduce(_ unionAll _).distinct()
   }
 
-  def sameAsRewrite(triples: DataFrame, rep: DataFrame,
-                    broadcastMaxRows: Long = 10L * 1000 * 1000): DataFrame = {
-    val r0 = rep.select(col("id"), col("rep"))
-    val r = if (r0.count() <= broadcastMaxRows) broadcast(r0) else r0
+  /** OWL-RL equality rules (eq-sym, eq-trans, eq-rep-s, eq-rep-o) over a
+    * triple table, materialized the only way that survives web scale:
+    * REPRESENTATIVE REWRITE, not sameAs-pair explosion. Naively chaining
+    * eq-trans + eq-rep multiplies every triple by the size of its
+    * subject's AND object's equality clique — a k-clique of aliases (dbpedia
+    * sameAs hubs run to hundreds) inflates each fact k² times. Rewriting
+    * every id to its clique representative keeps the output ≤ |triples| and
+    * IS the closure up to renaming: any entailed triple is recovered by
+    * substituting clique members back.
+    *
+    * `rep` is the (id, rep) map — eq-sym/eq-trans are exactly connected
+    * components over the sameAs pair graph, so callers feed
+    * `ConnectedComponents.run(sameAsPairs)` (alternating-star / union-find,
+    * already size-gated there); this operator is the eq-rep half: two
+    * left joins (subject, object) + coalesce + one distinct. The rep map is
+    * |aliased ids|-sized — orders of magnitude below the triple table —
+    * and pinned, so while it fits the broadcast threshold it rides two
+    * BroadcastHashJoins (the fact stream never shuffles before the final
+    * distinct); above, the same plan shuffles on the join keys and AQE's
+    * skew split handles hub representatives (same gate philosophy as
+    * Canonicalize.saltedMapJoin, which is where a pipeline with a
+    * measured-skewed alias map should route instead). */
+  def sameAsRewrite(triples: DataFrame, rep: DataFrame): DataFrame = {
+    val r = Pin(rep.select(col("id"), col("rep"))).df
     val bySubj = triples.select(col("subj"), col("pred"), col("obj"))
       .join(r.withColumnRenamed("id", "subj"), Seq("subj"), "left")
       .select(coalesce(col("rep"), col("subj")).as("subj"), col("pred"), col("obj"))

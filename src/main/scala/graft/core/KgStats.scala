@@ -303,20 +303,14 @@ object KgStats {
     // join each scan it, and an un-materialized e would re-run the
     // caller's full edge derivation (for the TPC-H KG: a union with two
     // distinct shuffles) up to three times
-    val e = edges.select(col("src"), col("pred"), col("dst"))
-      .localCheckpoint(true)
+    val e = Pin(edges.select(col("src"), col("pred"), col("dst"))).df
     val predFreq = e.groupBy(col("pred")).agg(count(lit(1)).as("n_pred"))
+    // objFreq is an aggregate of the pinned e, so it broadcasts on its
+    // counted size while it fits the threshold, shuffled join above
     val objFreq = e.groupBy(col("dst")).agg(count(lit(1)).as("n_obj"))
-    // the checkpoint reports unknown-stats default size, so the objFreq
-    // join planned as SMJ (two exchanges of the |E| rows); objFreq is
-    // |V|-bounded — broadcast it while the counted edge table fits the
-    // envelope (|V| ≤ |E|), shuffled join above (strategy-only)
-    val objSide =
-      if (e.count() <= graft.sample.Louvain.BroadcastMaxNodes) broadcast(objFreq)
-      else objFreq
     val scored = e
       .join(broadcast(predFreq), Seq("pred"))
-      .join(objSide, Seq("dst"))
+      .join(objFreq, Seq("dst"))
       .select(col("src").as("node"), col("pred"), col("dst"),
         expr("1000000000L div n_pred + 1000000000L div n_obj").as("score_micro"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("node"))

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Pin
 import graft.text.TextOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -200,21 +201,6 @@ object Dedup {
       .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("keeper"))
   }
-
-  /** exact n-gram Jaccard for given (a, b) pairs: |A∩B| / |A∪B| over
-    * distinct shingles, rounded to 5.
-    *
-    * Shape: each doc's distinct-shingle set rides as ONE array row (the
-    * per-doc set is bounded by document length), so the pair-level
-    * intersection is a map-side `array_intersect` — no shuffle proportional
-    * to |pairs|·|shingles|, which explodes on near-dup-saturated corpora
-    * where candidate pairs are quadratic. Catalyst broadcasts the array
-    * table when small; at larger scale it hash-joins on the pair keys —
-    * either way the intersection itself never shuffles. */
-  /** docs-count ceiling for broadcasting the shingle-array table into the
-    * pair verify (arrays are ~KBs per doc — the budget is the same
-    * broadcast memory envelope as Canonicalize's 2·10⁷-row string map). */
-  val JaccardBroadcastMaxDocs = 250000L
 
   /** The raw blocking output: DISTINCT band-bucket collision pairs
     * (a < b), BEFORE the signature-agreement prefilter and the exact
@@ -435,35 +421,30 @@ object Dedup {
       lit(if (nt == 0) 1000000L else 1000000L * tp / nt).as("pc_micros"))
   }
 
+  /** exact n-gram Jaccard for given (a, b) pairs: |A∩B| / |A∪B| over
+    * distinct shingles, rounded to 5.
+    *
+    * Shape: each doc's distinct-shingle set rides as ONE array row (the
+    * per-doc set is bounded by document length), so the pair-level
+    * intersection is a map-side `array_intersect` — no shuffle proportional
+    * to |pairs|·|shingles|, which explodes on near-dup-saturated corpora
+    * where candidate pairs are quadratic. The array table broadcasts while
+    * it fits the broadcast threshold; above it the join hash-joins on the
+    * pair keys — either way the intersection itself never shuffles. */
   def jaccardOf(corpus: DataFrame, pairs: DataFrame,
-                atLeast: Option[Double] = None,
-                broadcastMaxDocs: Long = JaccardBroadcastMaxDocs): DataFrame = {
-    // per-doc SORTED distinct-shingle int arrays: |docs| rows × bounded
-    // length, localCheckpoint-materialized so the size gate's count is a
-    // metadata read, not a recompute. The join strategy is SIZE-GATED like
-    // every canonicalization join: when the array table fits the broadcast
-    // envelope the (orders-of-magnitude larger) pair stream NEVER
-    // shuffles — measured 2.5 s off the sf0.1 verify, where both
-    // pair-stream exchanges were the cost, not the merge CPU — and above
-    // the gate (the 100-TB corpus) it falls back to SHUFFLE_HASH: the hash
-    // join builds on the array side and streams the pairs unsorted (a
-    // sort-merge join would SORT the array-laden pair rows). Intersection
-    // is the codegen two-pointer merge (SigOps), not array_intersect's
-    // per-row hash set. When the caller only wants pairs at J ≥ `atLeast`,
-    // the merge takes the threshold-aware EARLY-EXIT form: it returns -1
-    // the moment the pair provably cannot round to the threshold, and
-    // those rows drop before the jaccard arithmetic — the surviving
-    // (a, b, jaccard) rows are identical to the exhaustive merge's.
-    val shArr = TextOps.shingleArrays(corpus).localCheckpoint(true)
+                atLeast: Option[Double] = None): DataFrame = {
+    // Intersection is the codegen two-pointer merge (SigOps), not
+    // array_intersect's per-row hash set. When the caller only wants pairs
+    // at J ≥ `atLeast`, the merge takes the threshold-aware EARLY-EXIT
+    // form: it returns -1 the moment the pair provably cannot round to the
+    // threshold, and those rows drop before the jaccard arithmetic — the
+    // surviving (a, b, jaccard) rows are identical to the exhaustive
+    // merge's.
     val overlap = atLeast match {
       case Some(t) => graft.expr.SigOps.sortedOverlapAtLeast(col("ha"), col("hb"), t)
       case None    => graft.expr.SigOps.sortedOverlap(col("ha"), col("hb"))
     }
-    val aSide = shArr.select(col("doc_id").as("a"), col("hs").as("ha"))
-    val bSide = shArr.select(col("doc_id").as("b"), col("hs").as("hb"))
-    val (ja, jb) =
-      if (shArr.count() <= broadcastMaxDocs) (broadcast(aSide), broadcast(bSide))
-      else (aSide.hint("shuffle_hash"), bSide.hint("shuffle_hash"))
+    val (ja, jb) = arraySides(corpus)
     pairs
       .join(ja, Seq("a"))
       .join(jb, Seq("b"))
@@ -485,14 +466,8 @@ object Dedup {
     * two-pointer merge as [[jaccardOf]] (exhaustive — containment needs
     * the exact intersection, so no early exit), one extra division per
     * surviving pair. */
-  def containmentOf(corpus: DataFrame, pairs: DataFrame,
-                    broadcastMaxDocs: Long = JaccardBroadcastMaxDocs): DataFrame = {
-    val shArr = TextOps.shingleArrays(corpus).localCheckpoint(true)
-    val aSide = shArr.select(col("doc_id").as("a"), col("hs").as("ha"))
-    val bSide = shArr.select(col("doc_id").as("b"), col("hs").as("hb"))
-    val (ja, jb) =
-      if (shArr.count() <= broadcastMaxDocs) (broadcast(aSide), broadcast(bSide))
-      else (aSide.hint("shuffle_hash"), bSide.hint("shuffle_hash"))
+  def containmentOf(corpus: DataFrame, pairs: DataFrame): DataFrame = {
+    val (ja, jb) = arraySides(corpus)
     pairs
       .join(ja, Seq("a"))
       .join(jb, Seq("b"))
@@ -503,6 +478,24 @@ object Dedup {
         round(col("i").cast("double") / (col("na") + col("nb") - col("i")), 5).as("jaccard"),
         round(col("i").cast("double") / col("na"), 5).as("cont_a"),
         round(col("i").cast("double") / col("nb"), 5).as("cont_b"))
+  }
+
+  /** The per-doc SORTED distinct-shingle int arrays (|docs| rows × bounded
+    * length) as the `(a, ha)` / `(b, hb)` join sides of [[jaccardOf]] and
+    * [[containmentOf]]. Pinned, so the gate reads the table's counted bytes
+    * (arrays are ~KBs per doc; a schema estimate calls them 4 B). While the
+    * table fits the broadcast threshold the (orders-of-magnitude larger)
+    * pair stream NEVER shuffles — measured 2.5 s off the sf0.1 verify,
+    * where both pair-stream exchanges were the cost, not the merge CPU;
+    * above it (the 100-TB corpus) the join is SHUFFLE_HASH: the hash join
+    * builds on the array side and streams the pairs unsorted (a sort-merge
+    * join would SORT the array-laden pair rows). */
+  private def arraySides(corpus: DataFrame): (DataFrame, DataFrame) = {
+    val shArr = Pin(TextOps.shingleArrays(corpus))
+    val aSide = shArr.df.select(col("doc_id").as("a"), col("hs").as("ha"))
+    val bSide = shArr.df.select(col("doc_id").as("b"), col("hs").as("hb"))
+    if (shArr.fits) (aSide, bSide)
+    else (aSide.hint("shuffle_hash"), bSide.hint("shuffle_hash"))
   }
 
   /** Corpus-level containment ESTIMATE from the [[corpusOverlap]] surface

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.{Pin, Pinned}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,20 +33,18 @@ object Canonicalize {
     entComp.join(canon, Seq("component")).select(col("id").as("entity_id"), col("canonical"))
   }
 
-  /** Broadcast-vs-shuffle gate (north_rule: skew handled explicitly).
-    * Dictionary-scale catalogs broadcast; above `broadcastMaxRows` the hint
-    * would ship a web-scale catalog (10⁸+ entities) to the driver and every
-    * executor, so the join falls back to a SALTED shuffle-hash join — see
-    * [[saltedMapJoin]]. */
-  val DefaultBroadcastMaxRows: Long = 20L * 1000 * 1000
   /** Salt fan-out for the big-catalog path. */
   val DefaultSaltBuckets: Int = 8
 
-  /** Inner-join `df` to a unique-keyed map (`entity_id` → `canonical`,
-    * renamed to `key`/`out`), catalog-size-gated:
+  /** Inner-join `df` to a unique-keyed pinned map (`entity_id` →
+    * `canonical`, renamed to `key`/`out`), gated on the map's counted size
+    * (north_rule: skew handled explicitly):
     *
-    *  - ≤ `broadcastMaxRows`: BroadcastHashJoin (the map is the build side).
-    *  - above: SALTED ShuffledHashJoin. The map side is replicated
+    *  - fits the broadcast threshold: BroadcastHashJoin (the map is the
+    *    build side — the planner picks it from the pinned stats).
+    *  - above: a broadcast would ship a web-scale catalog (10⁸+ entities)
+    *    to the driver and every executor, so the join is a SALTED
+    *    ShuffledHashJoin. The map side is replicated
     *    ×`saltBuckets` and the fact side computes a deterministic per-row
     *    salt, so a head entity's rows (north_rule's skew case: a handful of
     *    canonical ids dominating the triple stream) spread over
@@ -54,13 +53,10 @@ object Canonicalize {
     *    still matches exactly once) and costs |map|·saltBuckets — linear.
     *    SHUFFLE_HASH keeps Spark from sort-merging the fact stream.
     */
-  def saltedMapJoin(df: DataFrame, map: DataFrame, key: String, out: String,
-                    broadcastMaxRows: Long = DefaultBroadcastMaxRows,
-                    saltBuckets: Int = DefaultSaltBuckets,
-                    mapRows: Option[Long] = None): DataFrame = {
-    val m = map.select(col("entity_id").as(key), col("canonical").as(out))
-    val rows = mapRows.getOrElse(map.count())
-    if (rows <= broadcastMaxRows) df.join(broadcast(m), Seq(key))
+  def saltedMapJoin(df: DataFrame, map: Pinned, key: String, out: String,
+                    saltBuckets: Int = DefaultSaltBuckets): DataFrame = {
+    val m = map.df.select(col("entity_id").as(key), col("canonical").as(out))
+    if (map.fits) df.join(m, Seq(key))
     else {
       // per-row salt: hash of the non-key columns MIXED with a per-partition
       // row counter (monotonically_increasing_id = partition_id·2³³ + row
@@ -102,19 +98,18 @@ object Canonicalize {
     * Exact-key and fuzzy blocking compose: pass `alsoExactKey = true` to
     * union the [[canonicalMap]] key edges (catalogs usually want both). */
   def fuzzyCanonicalMap(aliases: DataFrame, threshold: Double,
-                        alsoExactKey: Boolean = false,
-                        broadcastMaxRows: Long = DefaultBroadcastMaxRows): DataFrame = {
-    val resolved = graft.pipeline.Link.resolveAliases(aliases).localCheckpoint(true)
+                        alsoExactKey: Boolean = false): DataFrame = {
+    val pinned = Pin(graft.pipeline.Link.resolveAliases(aliases))
+    val resolved = pinned.df
     val surfaceCorpus = resolved.select(col("surface").as("doc_id"), col("surface").as("text"))
     val pairs = graft.dedup.Dedup.minhashLsh(surfaceCorpus, threshold)
     val entOf = resolved.select(col("surface"), col("entity_id"))
-    // surface → entity attachment, size-gated like the canonical-map joins:
-    // broadcast while the alias table is dictionary-scale, shuffle-hash
-    // when it is web-scale (the candidate-pair side is bucketed-linear, so
-    // a pair shuffle on the surface key stays proportional to the blocking
-    // output, never all-pairs)
-    val big = resolved.count() > broadcastMaxRows
-    def gate(df: DataFrame): DataFrame = if (big) df.hint("shuffle_hash") else broadcast(df)
+    // surface → entity attachment, gated like the canonical-map joins: the
+    // pinned alias table broadcasts while it fits the threshold and
+    // shuffle-hashes when it is web-scale (the candidate-pair side is
+    // bucketed-linear, so a pair shuffle on the surface key stays
+    // proportional to the blocking output, never all-pairs)
+    def gate(df: DataFrame): DataFrame = if (pinned.fits) df else df.hint("shuffle_hash")
     val fuzzyEdges = pairs
       .join(gate(entOf.withColumnRenamed("surface", "a")
         .withColumnRenamed("entity_id", "src")), Seq("a"))
@@ -187,12 +182,12 @@ object Canonicalize {
   /** Rewrite linked triples onto canonical ids. `keep` passes extra columns
     * through (streaming callers keep their event-time column).
     *
-    * The canonical map is materialized once (localCheckpoint — both joins
-    * reuse it instead of re-running connected components) and counted; the
-    * joins then go through the size-gated [[saltedMapJoin]]: broadcast for
-    * dictionary-scale catalogs, salted shuffle-hash for web-scale ones
-    * (an unconditional broadcast hint would force a driver-killing build
-    * at 10⁸+ entities regardless of AQE/statistics).
+    * The canonical map is pinned once ([[graft.core.Pin]] — both joins
+    * reuse it instead of re-running connected components); the joins then
+    * go through [[saltedMapJoin]]: broadcast while the map fits the
+    * broadcast threshold, salted shuffle-hash for web-scale catalogs (an
+    * unconditional broadcast hint would force a driver-killing build at
+    * 10⁸+ entities regardless of AQE/statistics).
     *
     * Durability note: localCheckpoint blocks live on executors (same
     * contract as the CC rounds feeding this map — the engine-wide trade of
@@ -204,14 +199,11 @@ object Canonicalize {
     * (StreamingKgSpec's durable-refresh case exercises the full cycle). */
   def apply(linked: DataFrame, aliases: DataFrame,
             keep: Seq[String] = Nil,
-            broadcastMaxRows: Long = DefaultBroadcastMaxRows,
             saltBuckets: Int = DefaultSaltBuckets,
             mapOverride: Option[DataFrame] = None): DataFrame = {
-    val canon = mapOverride.getOrElse(canonicalMap(aliases)).localCheckpoint(true)
-    val rows = Some(canon.count())
-    val subj = saltedMapJoin(linked, canon, "subj_id", "subj",
-      broadcastMaxRows, saltBuckets, rows)
-    saltedMapJoin(subj, canon, "obj_id", "obj", broadcastMaxRows, saltBuckets, rows)
+    val canon = Pin(mapOverride.getOrElse(canonicalMap(aliases)))
+    val subj = saltedMapJoin(linked, canon, "subj_id", "subj", saltBuckets)
+    saltedMapJoin(subj, canon, "obj_id", "obj", saltBuckets)
       .select(keep.map(col) :+ col("subj") :+ col("pred") :+ col("obj"): _*)
   }
 

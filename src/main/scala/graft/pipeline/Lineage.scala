@@ -56,38 +56,49 @@ object Lineage {
       src.observe(obs, metrics.head, metrics.tail: _*)
         .write.mode("overwrite").parquet(path)
       val m = obs.get
-      val out = spark.read.parquet(path)
-      record(spark, baseDir, name, out,
+      record(spark, baseDir, name,
         m("rows").asInstanceOf[Long], m("checksum").asInstanceOf[Long])
       Files.createDirectories(Paths.get(path))
       Files.write(marker(baseDir, name), Array.emptyByteArray)
-      out
+      spark.read.parquet(path)
     }
   }
 
   /** Append the stage's lineage rows: per-file row counts + the `_total_`
     * row carrying the write-pass checksum. Per-file rows come straight
     * from the parquet FOOTER metadata on the driver (the row counts are
-    * in every file's footer; O(files) metadata reads) — r6: this replaces
-    * a scheduled zero-column Spark scan per stage, whose job launch was
-    * pure fixed overhead on the 5-stage pipeline. Same rows: Σ per-file
-    * rows == the total row's rows stays the consumers' integrity
-    * equation. */
-  def record(spark: SparkSession, baseDir: String, name: String, out: DataFrame,
+    * in every file's footer; O(files) metadata reads, no Spark job), over
+    * every data file under the stage directory — partitioned or nested
+    * output included. Σ per-file rows == `totalRows` is the consumers'
+    * integrity equation, so it is checked here: a mismatch (a lost or
+    * foreign file in the stage directory) fails the write instead of
+    * landing inconsistent lineage. */
+  def record(spark: SparkSession, baseDir: String, name: String,
              totalRows: Long, checksum: Long): Unit = {
     val ts = java.time.Instant.now().toString
     val conf = spark.sessionState.newHadoopConf()
     val dir = new org.apache.hadoop.fs.Path(stagePath(baseDir, name))
     val fs = dir.getFileSystem(conf)
-    val perFileRows: Seq[org.apache.spark.sql.Row] = fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val rows = try reader.getRecordCount finally reader.close()
-        org.apache.spark.sql.Row(name, st.getPath.toString, rows,
-          null.asInstanceOf[java.lang.Long], ts)
-      }
+    // the files a parquet read of the stage sees: no component of the path
+    // below the stage directory is hidden (`_temporary`, `.crc`, markers)
+    val root = fs.makeQualified(dir).toUri.getPath
+    val files = fs.listFiles(dir, true)
+    val dataFiles = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .filter { st =>
+        val rel = st.getPath.toUri.getPath.stripPrefix(root).split('/').filter(_.nonEmpty)
+        rel.last.endsWith(".parquet") && rel.forall(c => !c.startsWith("_") && !c.startsWith("."))
+      }.toSeq
+    val perFileRows: Seq[org.apache.spark.sql.Row] = dataFiles.map { st =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val rows = try reader.getRecordCount finally reader.close()
+      org.apache.spark.sql.Row(name, st.getPath.toString, rows,
+        null.asInstanceOf[java.lang.Long], ts)
+    }
+    val footerRows = perFileRows.map(_.getLong(2)).sum
+    if (footerRows != totalRows)
+      throw new IllegalStateException(s"stage $name: parquet footers under $dir " +
+        s"hold $footerRows rows but the write pass counted $totalRows")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("stage",
         org.apache.spark.sql.types.StringType, nullable = false),

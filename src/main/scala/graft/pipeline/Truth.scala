@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,9 +33,11 @@ import org.apache.spark.sql.functions._
   *   - the trust update joins claims to the winner table on (subj, pred)
   *     (both sides just shuffled on that key — co-partitioned) and
   *     re-aggregates keyed src, map-side-combinable again;
-  *   - rounds are FIXED and small (default 2); each round's trust table is
-  *     |sources|-sized and localCheckpointed so lineage stays flat and the
-  *     next round's join starts from materialized partitions.
+  *   - rounds are FIXED and small (default 2); the claims and each
+  *     round's trust (|sources|-sized) and winner tables are pinned
+  *     ([[graft.core.Pin]]) so lineage stays flat, the next round's join
+  *     starts from materialized partitions, and each voting join
+  *     broadcasts its small side while it fits the broadcast threshold.
   *   - skewed head items (a fact asserted by every page of a mirror farm)
   *     ride AQE's skew split on the (subj, pred) shuffle; the aggregates
   *     themselves never hold more than one partial per key.
@@ -43,16 +46,8 @@ object Truth {
 
   val TrustScale = 1000000L
 
-  /** broadcast gate for the voting-round joins: trust is |sources|-bounded
-    * and winners |items|-bounded, both ≤ |claims|; checkpointed claim
-    * frames report unknown-stats default size, so without the hint every
-    * round planned as SMJ with full exchanges. Above the gate the
-    * shuffled joins a 100-TB claim stream needs stand (strategy-only). */
-  val BroadcastMaxRows: Long = 20000000L
-
-  private def beliefOf(claims: DataFrame, trust: DataFrame,
-                       bc: DataFrame => DataFrame): DataFrame =
-    claims.join(bc(trust), "src")
+  private def beliefOf(claims: DataFrame, trust: DataFrame): DataFrame =
+    claims.join(trust, "src")
       .groupBy(col("subj"), col("pred"), col("obj"))
       .agg(sum(col("trust_micros")).as("belief_micros"),
         count(lit(1)).as("n_src"))
@@ -64,10 +59,9 @@ object Truth {
       .select(col("subj"), col("pred"), col("w.obj").as("obj"),
         (-col("w.nb")).as("belief_micros"), col("w.n_src").as("n_src"))
 
-  private def trustOf(claims: DataFrame, winners: DataFrame,
-                      bc: DataFrame => DataFrame): DataFrame =
+  private def trustOf(claims: DataFrame, winners: DataFrame): DataFrame =
     claims
-      .join(bc(winners.select(col("subj"), col("pred"), col("obj").as("__wobj"))),
+      .join(winners.select(col("subj"), col("pred"), col("obj").as("__wobj")),
         Seq("subj", "pred"))
       .groupBy(col("src"))
       .agg(expr(s"$TrustScale * sum(CASE WHEN obj = __wobj THEN 1 ELSE 0 END) div count(1)")
@@ -78,16 +72,13 @@ object Truth {
     * and supporting-source count. */
   def resolve(claims: DataFrame, rounds: Int = 2): DataFrame = {
     require(rounds >= 1, "at least one voting round")
-    val c = claims.select(col("src"), col("subj"), col("pred"), col("obj"))
-      .distinct().localCheckpoint(true)
-    val bc: DataFrame => DataFrame =
-      if (c.count() <= BroadcastMaxRows) broadcast else identity
+    val c = Pin(claims.select(col("src"), col("subj"), col("pred"), col("obj")).distinct()).df
     var trust = c.select(col("src")).distinct()
       .withColumn("trust_micros", lit(TrustScale))
-    var winners = winnersOf(beliefOf(c, trust, bc))
+    var winners = winnersOf(beliefOf(c, trust))
     for (_ <- 2 to rounds) {
-      trust = trustOf(c, winners.localCheckpoint(true), bc).localCheckpoint(true)
-      winners = winnersOf(beliefOf(c, trust, bc))
+      trust = Pin(trustOf(c, Pin(winners).df)).df
+      winners = winnersOf(beliefOf(c, trust))
     }
     winners
   }
@@ -98,18 +89,15 @@ object Truth {
     * definition, so `rounds` ≥ 2 is required for a meaningful table. */
   def sourceTrust(claims: DataFrame, rounds: Int = 2): DataFrame = {
     require(rounds >= 2, "trust is uniform before round 2")
-    val c = claims.select(col("src"), col("subj"), col("pred"), col("obj"))
-      .distinct().localCheckpoint(true)
-    val bc: DataFrame => DataFrame =
-      if (c.count() <= BroadcastMaxRows) broadcast else identity
+    val c = Pin(claims.select(col("src"), col("subj"), col("pred"), col("obj")).distinct()).df
     var trust = c.select(col("src")).distinct()
       .withColumn("trust_micros", lit(TrustScale))
-    var winners = winnersOf(beliefOf(c, trust, bc))
+    var winners = winnersOf(beliefOf(c, trust))
     for (_ <- 3 to rounds) {
-      trust = trustOf(c, winners.localCheckpoint(true), bc).localCheckpoint(true)
-      winners = winnersOf(beliefOf(c, trust, bc))
+      trust = Pin(trustOf(c, Pin(winners).df)).df
+      winners = winnersOf(beliefOf(c, trust))
     }
-    trustOf(c, winners.localCheckpoint(true), bc)
+    trustOf(c, Pin(winners).df)
   }
 
   /** Temporal scoping of facts from crawl provenance: per canonical

@@ -1,5 +1,6 @@
 package graft.sample
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,32 +46,20 @@ object Betweenness {
     // materialization job (the round loop is job-launch-bound at small
     // scale; at large scale the bytes scanned are identical either way)
     val sym = und.unionAll(und.select(col("v").as("u"), col("u").as("v")))
-    var settled = sources.select(col("id").as("src"), col("id").as("node"),
-      lit(0).as("dist"), lit(1L).as("sigma")).localCheckpoint(true)
+    // every level frame is pinned, so the frontier and the settled union
+    // (a sum of counted sizes) broadcast into the sym scan while they fit
+    // the threshold; a 100-TB k-source run outgrows it after a round or two
+    // and falls back to the shuffled joins it needs
+    var settled = Pin(sources.select(col("id").as("src"), col("id").as("node"),
+      lit(0).as("dist"), lit(1L).as("sigma"))).df
     var frontier = settled
-    // checkpointed frames carry the unknown-stats default size, so both
-    // per-round joins planned as SMJ with full exchanges of the 2|E| sym
-    // rows. The frontier/settled sides are (src, node)-scale; broadcast
-    // them while their COUNTED row counts (metadata-cheap over
-    // materialized partitions) fit the envelope — the loop then runs
-    // map-side over the sym scan. A 100-TB k-source run outgrows the gate
-    // after a round or two and falls back to the shuffled joins it needs.
-    // Strategy-only: identical output (A/B in SpCountsAb, 7.3 → 2.8 s).
-    var settledRows = settled.count()
-    var frontierRows = settledRows
-    def gated(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= BroadcastMaxRows) broadcast(df) else df
     for (r <- 1 to maxR) {
-      val nxt = gated(frontier, frontierRows)
+      val nxt = Pin(frontier
         .join(sym.withColumnRenamed("u", "node"), Seq("node"))
         .select(col("src"), col("v").as("node"), col("sigma"))
-        .join(gated(settled.select(col("src"), col("node")), settledRows),
-          Seq("src", "node"), "left_anti")
+        .join(settled.select(col("src"), col("node")), Seq("src", "node"), "left_anti")
         .groupBy("src", "node").agg(sum(col("sigma")).as("sigma"))
-        .select(col("src"), col("node"), lit(r).as("dist"), col("sigma"))
-        .localCheckpoint(true)
-      frontierRows = nxt.count()
-      settledRows += frontierRows
+        .select(col("src"), col("node"), lit(r).as("dist"), col("sigma"))).df
       // settled is a lazy union of ALREADY-materialized level frames: the
       // per-round anti-join scans the same settled bytes either way, and
       // dropping the union re-checkpoint halves the round's job count
@@ -79,10 +68,6 @@ object Betweenness {
     }
     settled
   }
-
-  /** row gate for broadcasting the frontier/settled sides of the σ-BFS
-    * loop (~60 B per (src, node) row → ≤ ~250 MB broadcast). */
-  val BroadcastMaxRows: Long = 4000000L
 
   /** Brandes backward accumulation over a [[spCounts]] table: pair
     * dependency δ(s,v) = Σ_{w ∈ succ(v)} σ(s,v)/σ(s,w) · (1 + δ(s,w)),

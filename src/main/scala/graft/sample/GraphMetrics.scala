@@ -1,5 +1,6 @@
 package graft.sample
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -33,24 +34,15 @@ object GraphMetrics {
     */
   def cooccurrence(edges: DataFrame, pred: String): DataFrame = {
     // one materialization for the two wedge-join sides (the projection
-    // carries a distinct — an un-materialized e runs it twice)
-    val e = edges.filter(col("pred") === pred)
-      .select(col("src"), col("dst")).distinct().localCheckpoint(true)
-    // the checkpoint reports unknown-stats default size, so the wedge
-    // self-join planned as SMJ with two exchanges; size-gate an explicit
-    // broadcast of one side (counting materialized partitions is cheap).
-    // Above the gate — the 100-TB projection — the shuffled join stands.
-    val b = if (e.count() <= CooccurrenceBroadcastMaxEdges)
-      broadcast(e.as("b")) else e.as("b")
-    val pairs = e.as("a").join(b,
+    // carries a distinct — an un-materialized e runs it twice); pinned, so
+    // one side broadcasts while e fits the threshold
+    val e = Pin(edges.filter(col("pred") === pred)
+      .select(col("src"), col("dst")).distinct()).df
+    val pairs = e.as("a").join(e.as("b"),
       col("a.src") === col("b.src") && col("a.dst") < col("b.dst"))
       .select(col("a.dst").as("u"), col("b.dst").as("v"))
     pairs.distinct()
   }
-
-  /** broadcast gate for [[cooccurrence]]'s wedge self-join side (two
-    * ~20-byte strings per row — the usual broadcast envelope). */
-  val CooccurrenceBroadcastMaxEdges: Long = 20000000L
 
   /** Frequent co-occurring pairs with minimum support — the market-basket
     * pair miner (the length-2 case of Apriori/FP-growth, which covers
@@ -587,34 +579,27 @@ object GraphMetrics {
   def linkPredFeatures(und0: DataFrame, maxZDeg: Int = 32,
                        minSupport: Int = 2): DataFrame = {
     require(maxZDeg >= 1 && minSupport >= 1, s"maxZDeg=$maxZDeg minSupport=$minSupport")
-    val und = und0.localCheckpoint(true)
-    // size gate for the strategy hints below: checkpointed frames report
-    // the unknown-stats default (~100 GiB), so every join here planned as
-    // SMJ with full exchanges; und/deg/zok are edge-bounded, so while the
-    // counted size (metadata-cheap) fits the broadcast envelope, hint the
-    // build sides explicitly. Above the gate — the 100-TB graph — the
-    // shuffled joins stand. Strategy-only: identical output.
-    val eRows = und.count()
-    def bc(df: DataFrame): DataFrame =
-      if (eRows <= Betweenness.BroadcastMaxRows) broadcast(df) else df
+    // und and zok are pinned: deg (an aggregate of und), both zok sides of
+    // the wedge self-join and the edge anti-join side broadcast on their
+    // counted sizes while they fit the threshold
+    val und = Pin(und0).df
     val deg = degrees(und)
     val sym = und.select(col("u"), col("v"))
       .unionAll(und.select(col("v").as("u"), col("u").as("v")))
     // zok feeds BOTH sides of the wedge self-join below: un-materialized,
     // the sym⋈deg subtree (and deg's aggregate over the union) evaluates
     // twice — same single-materialization rule as triangleRows' orient
-    val zok = sym.join(bc(deg.withColumnRenamed("id", "u")), Seq("u"))
+    val zok = Pin(sym.join(deg.withColumnRenamed("id", "u"), Seq("u"))
       .filter(col("deg") <= maxZDeg)
-      .select(col("u").as("z"), col("v").as("n"), col("deg").as("zdeg"))
-      .localCheckpoint(true)
+      .select(col("u").as("z"), col("v").as("n"), col("deg").as("zdeg"))).df
     val pairs = zok.select(col("z"), col("n").as("u"), col("zdeg"))
-      .join(bc(zok.select(col("z"), col("n").as("w"))), Seq("z"))
+      .join(zok.select(col("z"), col("n").as("w")), Seq("z"))
       .filter(col("u") < col("w"))
       .groupBy("u", "w")
       .agg(count(lit(1)).as("cn"),
         sum(expr("1000000 div zdeg")).as("ra_micros"))
       .filter(col("cn") >= minSupport)
-    pairs.join(bc(und.withColumnRenamed("v", "w")), Seq("u", "w"), "left_anti")
+    pairs.join(und.withColumnRenamed("v", "w"), Seq("u", "w"), "left_anti")
       .select(col("u"), col("w"), col("cn"), col("ra_micros"))
   }
 

@@ -1,5 +1,6 @@
 package graft.sample
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -64,29 +65,20 @@ object Louvain {
     // over checkpointed rows, cheaper than a second materialization job
     val sym = und.unionAll(
         und.select(col("v").as("u"), col("u").as("v"), col("w")))
-    val deg = sym.groupBy(col("u").as("id")).agg(sum(col("w")).as("k"))
-      .localCheckpoint(true)
+    val deg = Pin(sym.groupBy(col("u").as("id")).agg(sum(col("w")).as("k")))
     // 2m = Σ_id k(id): every edge weight appears once per endpoint in sym,
     // so the degree table already carries the edge-mass total — reading it
     // from the 20k-row deg frame replaces a second full scan of und
-    val twoM = deg.agg(coalesce(sum(col("k")), lit(0L))).head().getLong(0)
-    // localCheckpoint frames report the UNKNOWN-stats default size
-    // (~100 GiB), so every per-round join planned as a SortMergeJoin with
-    // two exchanges even though comm/deg/Σtot/sizes are |V|-bounded
-    // (~20k rows at sf0.1). Size-gate explicit broadcasts on the counted
-    // |V| (the count scans materialized partitions — cheap) so the loop
-    // runs broadcast-hash at fixture-to-mid scale and keeps SMJ above the
-    // gate, where a |V|-sized broadcast would not fit. Strategy-only:
-    // results are identical on both paths.
-    val nV = deg.count()
-    def bc(df: DataFrame): DataFrame =
-      if (nV <= Louvain.BroadcastMaxNodes) broadcast(df) else df
-    var comm = deg.select(col("id"), col("id").as("c")).localCheckpoint(true)
+    val twoM = deg.df.agg(coalesce(sum(col("k")), lit(0L))).head().getLong(0)
+    // deg and comm are pinned, so joins against them (or projections of
+    // them) broadcast on their counted size; the Σtot/size/k2 sides come
+    // out of joins and take deg's fit as the |V|-bounded envelope
+    var comm = Pin(deg.df.select(col("id"), col("id").as("c"))).df
     for (_ <- 1 to rounds) {
       // ONE community aggregate carries both Σtot (scored join) and the
       // member count (singleton-swap guard) — was two separate
       // shuffles + an extra join per round
-      val cstats = comm.join(bc(deg), Seq("id"))
+      val cstats = comm.join(deg.df, Seq("id"))
         .groupBy("c").agg(sum(col("k")).as("stot"), count(lit(1)).as("n"))
       val stot = cstats.select(col("c"), col("stot"))
       // k_{i,in}(c): i's edge WEIGHT into each neighbor community under
@@ -97,16 +89,17 @@ object Louvain {
       // measured cheaper than a per-round checkpoint job (A/B: 4.5 s bc
       // lazy vs 5.4 s bc + ckpt for the 2-round loop at sf0.1)
       val kin = sym
-        .join(bc(comm.select(col("id").as("v"), col("c"))), Seq("v"))
+        .join(comm.select(col("id").as("v"), col("c")), Seq("v"))
         .groupBy(col("u").as("id"), col("c"))
         .agg(sum(col("w")).as("kin"))
       // candidates = the node's own community (ALWAYS present — kin(own)
       // is 0 when no neighbor shares it) ∪ neighbor communities; stay
       // rows carry flag 0 so exact ties prefer staying
       val own = comm.select(col("id"), col("c").as("oc"))
-      val k2 = kin.join(bc(own), Seq("id"))
+      val k2 = kin.join(own, Seq("id"))
       val stay = own
-        .join(bc(k2.filter(col("c") === col("oc")).select(col("id"), col("kin"))),
+        .join(deg.broadcastIfFits(
+            k2.filter(col("c") === col("oc")).select(col("id"), col("kin"))),
           Seq("id"), "left_outer")
         .select(col("id"), col("oc").as("c"),
           coalesce(col("kin"), lit(0L)).as("kin"), lit(0).as("flag"))
@@ -119,30 +112,24 @@ object Louvain {
       // pair merges next round)
       val sizes = cstats.select(col("c"), col("n"))
       val moves = k2.filter(col("c") =!= col("oc"))
-        .join(bc(sizes.select(col("c"), col("n").as("tn"))), Seq("c"))
-        .join(bc(sizes.select(col("c").as("oc"), col("n").as("on"))), Seq("oc"))
+        .join(deg.broadcastIfFits(sizes.select(col("c"), col("n").as("tn"))), Seq("c"))
+        .join(deg.broadcastIfFits(sizes.select(col("c").as("oc"), col("n").as("on"))),
+          Seq("oc"))
         .filter(!(col("on") === 1 && col("tn") === 1 && col("c") > col("oc")))
         .select(col("id"), col("c"), col("kin"), lit(1).as("flag"))
       val cand = stay.unionAll(moves)
       val scored = cand
-        .join(bc(stot), Seq("c"))
-        .join(bc(deg), Seq("id"))
+        .join(deg.broadcastIfFits(stot), Seq("c"))
+        .join(deg.df, Seq("id"))
         // Σtot′ excludes the moving node itself from its own community
         .select(col("id"), col("c"), col("flag"),
           (lit(twoM) * col("kin") - col("k") *
             (col("stot") - when(col("flag") === 0, col("k")).otherwise(lit(0L))))
             .as("score"))
-      comm = scored.groupBy("id")
+      comm = Pin(scored.groupBy("id")
         .agg(min(struct((-col("score")).as("ns"), col("flag"), col("c"))).as("m"))
-        .select(col("id"), col("m.c").as("c"))
-        .localCheckpoint(true)
+        .select(col("id"), col("m.c").as("c"))).df
     }
     comm.select(col("id"), col("c").as("community"))
   }
-
-  /** |V| gate for broadcasting the per-round |V|-bounded tables (comm,
-    * deg, Σtot, sizes): the same broadcast-memory envelope as
-    * Canonicalize's 2·10⁷-row string-map gate. Above it the loop keeps
-    * the shuffled joins a 100-TB graph needs. */
-  val BroadcastMaxNodes: Long = 20000000L
 }

@@ -1,6 +1,6 @@
 package graft.sample
 
-import graft.core.Kb
+import graft.core.{Kb, Pin}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -86,10 +86,6 @@ object PageRank {
     * private cloned session, so the caller's conf is untouched. */
   val RowsPerSweepPartition: Long = 2L * 1024 * 1024
 
-  /** |E| gate for broadcasting the |V|-bounded setup-join sides (outdeg,
-    * dstNodes) — the usual 2·10⁷-row broadcast envelope. */
-  val SetupBroadcastMaxRows: Long = 20000000L
-
   private def computeInner(nodesIn: DataFrame, edgesW0: DataFrame,
                            d: Double, iterations: Int,
                            checkpointEvery: Int): DataFrame = {
@@ -98,33 +94,27 @@ object PageRank {
     // aggregate, the adj join and the const/iter split — un-materialized
     // it was re-evaluated 2-3× (for the TPC-H KG: a 6-way union with two
     // lineitem-scale distincts per evaluation; r6 stage evidence)
-    val edgesW = edgesW0.localCheckpoint(true)
-    val eCnt = edgesW.count()
+    val edgesW = Pin(edgesW0)
     val np = math.max(1L,
-      math.min(65536L, eCnt / RowsPerSweepPartition)).toInt
+      math.min(65536L, edgesW.rows / RowsPerSweepPartition)).toInt
     // the session here is the compute()/computeWeighted() PRIVATE clone —
     // setting its shuffle width cannot leak to the caller
     nodesIn.sparkSession.conf.set("spark.sql.shuffle.partitions", np)
-    // setup-join strategy: outdeg/dstNodes are |V|-bounded while the
-    // checkpointed edgesW reports unknown-stats default size, so these
-    // one-off joins planned as SMJ with |E|-row exchanges. Gate explicit
-    // broadcasts on the counted |E| (≥ |V|); above the envelope the
-    // shuffled joins a web graph needs stand. Sweep-loop joins untouched
-    // (their co-partitioning is the invariant). Strategy-only.
-    val bcSetup: DataFrame => DataFrame =
-      if (eCnt <= SetupBroadcastMaxRows)
-        org.apache.spark.sql.functions.broadcast else identity
-    val outdeg = edgesW.groupBy("src").agg(sum(col("w")).as("outdeg"))
-    val adj = edgesW.select("src", "dst", "w").join(bcSetup(outdeg), Seq("src")).cache()
+    // setup joins: outdeg is an aggregate of the pinned edges, so it
+    // broadcasts on its counted size; dstNodes comes out of the adj join
+    // and is hinted while the edge table fits. Sweep-loop joins untouched
+    // (their co-partitioning is the invariant).
+    val outdeg = edgesW.df.groupBy("src").agg(sum(col("w")).as("outdeg"))
+    val adj = edgesW.df.select("src", "dst", "w").join(outdeg, Seq("src")).cache()
     val dstNodes = adj.select(col("dst").as("id")).distinct().cache()
 
     // edges from source-only nodes (pr = d/n from sweep 2 on) vs edges from
     // in-linked nodes (pr evolves). The iterating slice is cached
     // hash-partitioned on src so every sweep's rank join co-partitions.
-    val adjIter = adj.join(bcSetup(dstNodes.withColumnRenamed("id", "src")),
+    val adjIter = adj.join(edgesW.broadcastIfFits(dstNodes.withColumnRenamed("id", "src")),
         Seq("src"), "left_semi")
       .repartition(col("src")).cache()
-    val adjConst = adj.join(bcSetup(dstNodes.withColumnRenamed("id", "src")),
+    val adjConst = adj.join(edgesW.broadcastIfFits(dstNodes.withColumnRenamed("id", "src")),
       Seq("src"), "left_anti")
 
     def massOf(a: DataFrame, ranks: DataFrame): DataFrame = a

@@ -84,8 +84,9 @@ object ExplainAudit {
       nbrs.unpersist()
       println("walk_prioritized_step: OK (single cached scan, no per-step rank probe)")
     }
-    // canonical-map join gate (r3 verdict #1): above the catalog threshold
-    // the join must be a salted shuffle-hash, never a forced broadcast
+    // canonical-map join gate (r3 verdict #1): above the broadcast
+    // threshold (forced here with a threshold of -1) the join must be a
+    // salted shuffle-hash, never a forced broadcast
     locally {
       import org.apache.spark.sql.functions._
       val linked = spark.createDataset(Seq(
@@ -94,11 +95,15 @@ object ExplainAudit {
           org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING,
           org.apache.spark.sql.Encoders.STRING))
         .toDF("url", "subj_id", "pred", "obj_id")
-      val gated = graft.pipeline.Canonicalize(linked,
-        graft.pipeline.Pages.aliases(spark), broadcastMaxRows = 1)
-      println("\n========== canonicalize_salted_fallback (asserted) ==========")
-      gated.explain("formatted")
-      val plan = gated.queryExecution.executedPlan.toString
+      val threshold = "spark.sql.autoBroadcastJoinThreshold"
+      val saved = spark.conf.get(threshold)
+      spark.conf.set(threshold, "-1")
+      val plan = try {
+        val gated = graft.pipeline.Canonicalize(linked, graft.pipeline.Pages.aliases(spark))
+        println("\n========== canonicalize_salted_fallback (asserted) ==========")
+        gated.explain("formatted")
+        gated.queryExecution.executedPlan.toString
+      } finally spark.conf.set(threshold, saved)
       require(plan.contains("ShuffledHashJoin"),
         "big-catalog canonical join must shuffle-hash")
       require(!plan.contains("BroadcastHashJoin"),

@@ -106,13 +106,14 @@ class PlanShapeSpec extends SparkSpec {
       s"under the doc gate the array table must broadcast:\n$underPlan")
     assert(!underPlan.contains("SortMergeJoin"),
       "array-laden rows must never sort")
-    // over the gate (forced): shuffle-hash fallback, never a sort-merge
-    // over the array-laden pair rows
+    // over the gate (forced with a broadcast threshold of -1): shuffle-hash
+    // fallback, never a sort-merge over the array-laden pair rows
     val ids = corpus.select(col("doc_id"))
     val somePairs = ids.select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
-    val over = graft.dedup.Dedup.jaccardOf(corpus, somePairs,
-      atLeast = Some(0.8), broadcastMaxDocs = 0L)
-    val overPlan = over.queryExecution.executedPlan.toString
+    val overPlan = noBroadcast {
+      graft.dedup.Dedup.jaccardOf(corpus, somePairs, atLeast = Some(0.8))
+        .queryExecution.executedPlan.toString
+    }
     assert(overPlan.contains("ShuffledHashJoin"),
       s"over the doc gate the attachment must build a hash table:\n$overPlan")
     assert(!overPlan.contains("SortMergeJoin"),

@@ -21,4 +21,21 @@ trait SparkSpec extends AnyFunSuite {
   }
   def ids(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.getString(0)).toSet
+
+  /** Run `body` with SQL conf overrides, restoring the previous values
+    * after; build AND plan/collect inside `body` so the overrides apply. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Broadcast threshold -1: no join broadcasts on size, every pin is
+    * over the envelope. */
+  def noBroadcast[T](body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 }

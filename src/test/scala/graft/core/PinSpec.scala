@@ -1,0 +1,90 @@
+package graft.core
+
+import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.functions._
+
+/** [[Pin]]: the counted size is the real size, the planner reads it, and
+  * every operator that dropped its hand-written broadcast hint in favour of
+  * pinned stats returns the same rows when nothing may broadcast. */
+class PinSpec extends SparkSpec {
+
+  private def recountBytes(df: DataFrame): Long =
+    df.queryExecution.toRdd
+      .map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).fold(0L)(_ + _)
+
+  test("counted rows and bytes equal a recount; the leaf carries them") {
+    // an int-array column: its schema default is 4 B, its real rows KBs
+    val df = spark.range(0, 2000, 1, 3)
+      .select(col("id"), sequence(lit(1), (col("id") % 300 + 1).cast("int")).as("hs"))
+    val p = Pin(df)
+    assert(p.rows === df.count())
+    assert(p.bytes === recountBytes(df))
+    assert(p.bytes === recountBytes(p.df))
+    assert(p.bytes > p.rows * 300, "array payload must be counted, not estimated")
+    val st = p.df.queryExecution.optimizedPlan.stats
+    assert(st.sizeInBytes === BigInt(p.bytes) && st.rowCount === Some(BigInt(p.rows)))
+    assert(p.fits)
+    assert(noBroadcast(!Pin(df).fits))
+    assert(p.df.collect().map(_.getLong(0)).sorted.toSeq === (0L until 2000L))
+  }
+
+  test("a pinned 50k-row aggregate plans BroadcastHashJoin unhinted; a bare checkpoint SMJ") {
+    val agg = spark.range(0, 3000000, 1, 4).select((col("id") % 50000).as("k"), col("id").as("v"))
+      .groupBy("k").agg(sum(col("v")).as("s"))
+    val fact = spark.range(0, 4000000).select((col("id") % 50000).as("k"))
+    def plan(side: DataFrame) = fact.join(side, "k").queryExecution.executedPlan.toString
+    val pinned = plan(Pin(agg).df)
+    assert(pinned.contains("BroadcastHashJoin") && !pinned.contains("SortMergeJoin"),
+      s"counted stats must plan a broadcast:\n$pinned")
+    val bare = plan(agg.localCheckpoint(true))
+    assert(bare.contains("SortMergeJoin") && !bare.contains("BroadcastHashJoin"),
+      s"a bare checkpoint keeps its plan's estimate:\n$bare")
+  }
+
+  /** Rows as sorted strings; doubles to 10 significant digits (a join
+    * strategy may reorder a float sum's terms). */
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => f"$d%.10g"
+      case other => String.valueOf(other)
+    }.mkString("|")).sorted
+
+  private def sameUnderNoBroadcast(name: String)(op: => DataFrame): Unit = {
+    val default = rows(op)
+    assert(default.nonEmpty, s"$name: fixture must produce rows")
+    assert(noBroadcast(rows(op)) === default, s"$name: rows changed with the join strategy")
+  }
+
+  test("operators that dropped their hints: same rows when nothing broadcasts") {
+    import spark.implicits._
+    // a bipartite orders→parts "contains" graph: 300 orders of 3 hashed parts
+    val edges = spark.range(0, 900, 1, 3).select(
+      concat(lit("o"), (col("id") / 3).cast("long")).as("src"), lit("contains").as("pred"),
+      concat(lit("p"), pmod(xxhash64(col("id")), lit(100L))).as("dst")).distinct()
+    def und = graft.sample.GraphMetrics.undirected(edges, "contains")
+    def cooc = graft.sample.GraphMetrics.cooccurrence(edges, "contains")
+    sameUnderNoBroadcast("cooccurrence")(cooc)
+    sameUnderNoBroadcast("louvain")(graft.sample.Louvain.run(cooc, rounds = 2))
+    sameUnderNoBroadcast("spCounts")(graft.sample.Betweenness.spCounts(
+      und, Seq("o0", "o7", "p3").toDF("id"), 3))
+    sameUnderNoBroadcast("linkPredFeatures")(graft.sample.GraphMetrics.linkPredFeatures(und))
+    sameUnderNoBroadcast("entitySummaries")(KgStats.entitySummaries(edges, 2))
+    sameUnderNoBroadcast("pagerank")(graft.sample.PageRank.compute(
+      graft.fixtures.HepatitisLikeKb.kb(spark), iterations = 10))
+    // 12 sources asserting conflicting objects for 40 (subj, pred) items
+    val claims = spark.range(0, 480, 1, 3).select(
+      concat(lit("s"), col("id") % 12).as("src"), concat(lit("e"), col("id") % 40).as("subj"),
+      lit("p").as("pred"), concat(lit("v"), pmod(xxhash64(col("id") % 97), lit(3L))).as("obj"))
+    sameUnderNoBroadcast("Truth.resolve")(graft.pipeline.Truth.resolve(claims))
+    val docs = spark.range(0, 60, 1, 3).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("shared opening words"), col("id") % 7, lit("and a tail")).as("text"))
+    val pairs = spark.range(0, 59).select(col("id").as("a"), (col("id") + 1).as("b"))
+    sameUnderNoBroadcast("jaccardOf")(graft.dedup.Dedup.jaccardOf(docs, pairs))
+    val triples = edges.select(col("src").as("subj"), col("pred"), col("dst").as("obj"))
+    val rep = spark.range(0, 100).select(concat(lit("p"), col("id")).as("id"),
+      concat(lit("p"), col("id") % 10).as("rep"))
+    sameUnderNoBroadcast("sameAsRewrite")(Entailment.sameAsRewrite(triples, rep))
+  }
+}

@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The catalog-size gate on the canonicalization joins (VERDICT r3 #1):
-  * under the threshold the canonical map broadcasts; above it the join is
-  * a SALTED shuffle-hash — both paths must return identical rows, and the
+  * while the pinned canonical map fits the broadcast threshold it
+  * broadcasts; above it (forced with a threshold of -1) the join is a
+  * SALTED shuffle-hash — both paths must return identical rows, and the
   * plan shapes must actually differ (a silent fall-through to an
   * unconditional broadcast is exactly the scale bug being gated). */
 class SaltedJoinSpec extends SparkSpec {
@@ -26,16 +27,16 @@ class SaltedJoinSpec extends SparkSpec {
   test("broadcast and salted paths agree; plans differ as gated") {
     // Pages.aliases already catalogs the city_*/org_* object entities
     val aliases = Pages.aliases(spark)
-    val small = Canonicalize(linked, aliases) // default threshold: broadcast
-    val big = Canonicalize(linked, aliases, broadcastMaxRows = 1, saltBuckets = 4)
-
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    val small = Canonicalize(linked, aliases) // default threshold: broadcast
     assert(rows(small) === canonExpected)
-    assert(rows(big) === canonExpected)
-
     val smallPlan = small.queryExecution.executedPlan.toString
-    val bigPlan = big.queryExecution.executedPlan.toString
+    val bigPlan = noBroadcast {
+      val big = Canonicalize(linked, aliases, saltBuckets = 4)
+      assert(rows(big) === canonExpected)
+      big.queryExecution.executedPlan.toString
+    }
     assert(smallPlan.contains("BroadcastHashJoin"),
       "small-catalog path must broadcast the canonical map")
     assert(bigPlan.contains("ShuffledHashJoin"),
@@ -46,11 +47,12 @@ class SaltedJoinSpec extends SparkSpec {
 
   test("fuzzy canonicalization gates its alias-attachment joins the same way") {
     val aliases = Pages.aliases(spark)
-    val bc = Canonicalize.fuzzyCanonicalMap(aliases, threshold = 0.9, alsoExactKey = true)
-    val sh = Canonicalize.fuzzyCanonicalMap(aliases, threshold = 0.9, alsoExactKey = true,
-      broadcastMaxRows = 1)
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(m(bc) === m(sh))
+    val bc = m(Canonicalize.fuzzyCanonicalMap(aliases, threshold = 0.9, alsoExactKey = true))
+    val sh = noBroadcast {
+      m(Canonicalize.fuzzyCanonicalMap(aliases, threshold = 0.9, alsoExactKey = true))
+    }
+    assert(bc === sh)
   }
 }
