@@ -52,7 +52,9 @@ object Determinism {
   // byte-equal to the in-plan column — DeterminismSpec fuzzes the parity.
   // This is what lets the walk loop pre-compute teleport landing ranks and
   // frontier buckets and push them as isin() pruning filters into the
-  // cached-table scans instead of probing the whole O(|V|) cache per step.
+  // cached-table scans instead of probing the whole O(|V|) cache per step,
+  // and what lets the walk and fire samplers replay a whole draw on the
+  // driver when their graph fits the broadcast envelope.
   import org.apache.spark.sql.catalyst.expressions.XXH64
   import org.apache.spark.unsafe.types.UTF8String
 
@@ -62,20 +64,36 @@ object Determinism {
   def xxhashJvm(key: String): Long =
     XXH64.hashUTF8String(UTF8String.fromString(key), XxSeed)
 
-  /** JVM mirror of [[detHash]](seed, col) for a single LONG key column. */
-  def detHashJvm(seed: Long, key: Long): Long =
-    XXH64.hashLong(key, XXH64.hashLong(seed, XxSeed))
-
-  /** JVM mirror of [[detHash]](seed, col) for a single STRING key column. */
-  def detHashJvm(seed: Long, key: String): Long =
-    XXH64.hashUTF8String(UTF8String.fromString(key), XXH64.hashLong(seed, XxSeed))
+  /** JVM mirror of [[detHash]](seed, keys...) over LONG and STRING key
+    * columns, folded in order (an Int key hashes as IntegerType; a null
+    * key is skipped, as xxhash64 skips null children). */
+  def detHashJvm(seed: Long, keys: Any*): Long =
+    keys.foldLeft(XXH64.hashLong(seed, XxSeed)) {
+      case (h, null) => h
+      case (h, k: Long) => XXH64.hashLong(k, h)
+      case (h, k: Int) => XXH64.hashInt(k, h)
+      case (h, k: String) => XXH64.hashUTF8String(UTF8String.fromString(k), h)
+      case (_, k) => throw new IllegalArgumentException(s"no xxhash64 mirror for ${k.getClass}")
+    }
 
   /** Non-negative remainder, mirroring SQL pmod on longs. */
   def pmodJvm(v: Long, m: Long): Long = { val r = v % m; if (r < 0) r + m else r }
 
-  /** JVM mirror of [[detRand]] for a single LONG key column. */
-  def detRandJvm(seed: Long, key: Long): Double =
-    pmodJvm(detHashJvm(seed, key), 1000000007L).toDouble / 1000000007.0
+  /** JVM mirror of [[detRand]] (same keys as [[detHashJvm]]). */
+  def detRandJvm(seed: Long, keys: Any*): Double =
+    pmodJvm(detHashJvm(seed, keys: _*), 1000000007L).toDouble / 1000000007.0
+
+  /** JVM mirror of [[detGeometric]]: Spark's `log` is StrictMath.log; the
+    * divisor is the same driver-side `math.log` literal the column embeds. */
+  def detGeometricJvm(p: Double, seed: Long, keys: Any*): Int =
+    (math.floor(StrictMath.log(1.0 - detRandJvm(seed, keys: _*)) / math.log(1.0 - p)) + 1).toInt
+
+  /** JVM mirror of Spark's STRING sort order (UTF8_BINARY: unsigned bytes
+    * of the UTF-8 encoding). It differs from `String.compareTo`, which
+    * compares UTF-16 units, where a surrogate pair meets a BMP character
+    * above U+E000. */
+  val utf8Order: Ordering[String] = (a: String, b: String) =>
+    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
 
   /** Geometric(p) sample (support 1,2,...) from a deterministic uniform:
     * floor(log(1-u)/log(1-p)) + 1 — used by ForestFire burn counts

@@ -1,6 +1,6 @@
 package graft.sample
 
-import graft.core.{Determinism, Kb}
+import graft.core.{Determinism, Kb, Pin}
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,7 +50,10 @@ final class RandomEdgeSampler(
       .select(col("id").as("src"), col("ord").as("o"))
     def pos(g: org.apache.spark.sql.Column) =
       struct(g.as("g"), col("o"), col("src").as("s")).as("pos")
-    val posEdges = {
+    // both draw frames are pinned: the lazy Drawn below reads the
+    // checkpoints, so finalize's actions never re-derive the picks, and no
+    // cache entry outlives the draw
+    val posEdges = Pin {
       val base = picked.join(srcOrd, Seq("src"))
       if (lpc) {
         val tiers = Samplers.lpcTiers(kb, lpSeeds).select(col("id").as("src"), col("tier"))
@@ -62,7 +65,7 @@ final class RandomEdgeSampler(
         base.join(broadcast(lpDf), Seq("src"), "left_outer")
           .select(col("src"), col("pred"), col("dst"), pos(coalesce(col("pre"), lit(1L))))
       } else base.select(col("src"), col("pred"), col("dst"), pos(lit(0L)))
-    }.cache()
+    }.df
 
     // (3) first-occurrence position per node; LP nodes pre-inserted below
     // every real position
@@ -74,10 +77,11 @@ final class RandomEdgeSampler(
         spark.createDataset(lpSeeds)(Encoders.STRING).toDF("id")
           .select(col("id"), struct(lit(-1L).as("g"), lit(Long.MinValue).as("o"),
             lit("").as("s")).as("pos")))
-    val fo = withLp.groupBy("id").agg(min(col("pos")).as("fo")).cache()
+    val foPin = Pin(withLp.groupBy("id").agg(min(col("pos")).as("fo")))
+    val fo = foPin.df
 
-    val reachable = fo.count()
-    val drawn = if (reachable >= n) {
+    val reachable = foPin.rows
+    if (reachable >= n) {
       // (4) cutoff = n-th smallest fo (TakeOrdered on the struct order; the
       // 1-row cutoff broadcast-joins into both prefix filters)
       val pStar = fo.orderBy(col("fo")).limit(n)
@@ -93,8 +97,6 @@ final class RandomEdgeSampler(
       Drawn(fo.select("id").unionAll(fill),
         Some(posEdges.select("src", "pred", "dst")))
     }
-    fo.unpersist()
-    drawn
   }
 
   def sample(n: Int, dpp: Double = 1.0): Kb = {

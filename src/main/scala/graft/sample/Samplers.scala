@@ -12,6 +12,10 @@ final case class Drawn(
     sampledNodes: DataFrame,            // id
     selectedEdges: Option[DataFrame])   // src, pred, dst; None ⇒ include_all_edges
 
+/** What the most recent draw of a step-wise sampler took: walk steps or
+  * forest-fire burn rounds. */
+final case class DrawStats(steps: Int)
+
 /** Shared sampler machinery (reference ontosample/_base.py).
   *
   * Determinism contract: every random draw derives from (data key, seed) via

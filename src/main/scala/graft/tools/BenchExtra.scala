@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *    count()-action plan pruning the frozen Bench uses.
   *
   * Driver-loop samplers (walk family, forest fire) have no single plan;
-  * their evidence is WalkProbe / FfProbe. Bench.scala itself is frozen —
+  * the benchmark's per-span job counts cover them. Bench.scala itself is frozen —
   * this is the extra-benchmark surface OPTIMIZATION_r06.md cites.
   *
   * Usage: runMain graft.tools.BenchExtra <plan|time> <suffix> [names...]

@@ -58,4 +58,60 @@ class DeterminismSpec extends SparkSpec {
       assert(r.getInt(1) === Determinism.pmodJvm(Determinism.xxhashJvm(r.getString(0)), 16).toInt)
     }
   }
+
+  // keys for the multi-key fold: empty, non-ASCII, a surrogate pair, a
+  // null (xxhash64 skips null children)
+  private val foldStrs: Seq[String] =
+    Seq("", "a", "ü-ünïcode-☃", "\uD83D\uDE00-pair", "\uFFFD", null) ++ strKeys.take(40)
+
+  test("detHashJvm folds LONG and STRING keys like the multi-column SQL hash") {
+    val rows = for {
+      (a, i) <- foldStrs.zipWithIndex
+      b <- foldStrs.take(12)
+    } yield (longKeys(i % longKeys.size), a, b)
+    val df = rows.toDF("l", "a", "b")
+    for (seed <- seeds) {
+      val got = df.select(col("l"), col("a"), col("b"),
+        Determinism.detHash(seed, col("l"), col("a"), col("b")).as("h1"),
+        Determinism.detHash(seed, col("a"), col("l"), col("b")).as("h2"),
+        Determinism.detHash(seed, col("a"), col("b")).as("h3")).collect()
+      got.foreach { r =>
+        val (l, a, b) = (r.getLong(0), r.getString(1), r.getString(2))
+        assert(r.getLong(3) === Determinism.detHashJvm(seed, l, a, b), s"($seed, $l, $a, $b)")
+        assert(r.getLong(4) === Determinism.detHashJvm(seed, a, l, b), s"($seed, $a, $l, $b)")
+        assert(r.getLong(5) === Determinism.detHashJvm(seed, a, b), s"($seed, $a, $b)")
+      }
+    }
+  }
+
+  test("detRandJvm matches the SQL column for STRING keys") {
+    val df = foldStrs.toDF("k")
+    for (seed <- seeds) {
+      df.select(col("k"), Determinism.detRand(seed, col("k")).as("r")).collect().foreach { r =>
+        assert(r.getDouble(1) === Determinism.detRandJvm(seed, r.getString(0)),
+          s"detRand($seed, '${r.getString(0)}')")
+      }
+    }
+  }
+
+  test("detGeometricJvm matches the SQL column at p = 0.4") {
+    val df = strKeys.toDF("k")
+    for (seed <- seeds ++ (1 to 20).map(i => 17L * i + 7)) {
+      val got = df.select(col("k"), Determinism.detGeometric(0.4, seed, col("k")).as("g")).collect()
+      got.foreach { r =>
+        assert(r.getInt(1) === Determinism.detGeometricJvm(0.4, seed, r.getString(0)),
+          s"detGeometric(0.4, $seed, '${r.getString(0).take(20)}')")
+      }
+      assert(got.map(_.getInt(1)).distinct.length > 1)
+    }
+  }
+
+  test("utf8Order sorts strings as Spark does, surrogate pairs included") {
+    val keys = Seq("\uD83D\uDE00", "\uFFFD", "\uE000", "\uD7FF", "z", "", "a\uD83D\uDE00",
+      "a\uFFFD", "ü", "A") ++ strKeys.take(30)
+    val inPlan = keys.toDF("k").orderBy(col("k")).collect().map(_.getString(0)).toSeq
+    assert(inPlan === keys.sorted(Determinism.utf8Order))
+    // the case the mirror exists for: UTF-16 order puts the pair first
+    assert(keys.sorted !== inPlan)
+  }
 }

@@ -69,7 +69,8 @@ class SamplerSpec extends SparkSpec {
     assert(nodeCount(s) === 50); edgesValid(s)
   }
 
-  test("rwj: bucketed neighbor cache (100-TB gate forced on) is byte-identical") {
+  // threshold -1 keeps this draw on the per-step path the gate is part of
+  test("rwj: bucketed neighbor cache (100-TB gate forced on) is byte-identical") { noBroadcast {
     def run(minEdges: Long) = {
       val s = new WalkSampler(kb, seed = 4, jumpProb = Some(0.1),
         bucketMinNodes = minEdges, walkBuckets = 8).sample(50)
@@ -79,7 +80,7 @@ class SamplerSpec extends SparkSpec {
     val natural = run(Long.MaxValue) // gate can never fire
     val bucketed = run(0L)           // gate always fires
     assert(natural === bucketed)
-  }
+  }}
 
   test("rwp: bucketed neighbor cache carries the rank weights identically") {
     def run(minEdges: Long) = {
@@ -203,7 +204,8 @@ class SamplerSpec extends SparkSpec {
     assert(c === d)
   }
 
-  test("ff: a large draw crosses the broadcast anti-join gate (smoke)") {
+  // threshold -1 keeps this draw on the per-step path the gate is part of
+  test("ff: a large draw crosses the broadcast anti-join gate (smoke)") { noBroadcast {
     // burned.size > ForestFireSampler.BurnedInListMax (4096) switches the
     // per-round unburnt filter from a growing IN-list to a broadcast
     // anti-join; the draw must stay round-bound, not quadratic in n
@@ -214,7 +216,7 @@ class SamplerSpec extends SparkSpec {
     assert(drawn.sampledNodes.count() === n)
     val sec = (System.nanoTime() - t0) / 1e9
     assert(sec < 300.0, f"large FF draw took $sec%.0f s — IN-list gating suspect")
-  }
+  }}
 
   test("check_input rejects oversized n and bad dpp") {
     intercept[IllegalArgumentException] { new RandomNodeSampler(kb).sample(100000) }
