@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The knowledge base: four ABox fact tables + TBox metadata.
@@ -235,25 +235,40 @@ final case class Kb(
   /** Restrict the KB to a set of surviving nodes: removing a node removes
     * all of its incident assertions — edges require BOTH endpoints to
     * survive (reference _base.py:178-180; SURVEY §7.3 #5). `keep` must have
-    * a single column named `id`. */
+    * a single column named `id`.
+    *
+    * Two forms of one restriction, picked by the broadcast envelope
+    * ([[Pin.collectIfFits]]): when `keep` fits, its ids are collected once
+    * (eagerly) and the four tables are IN-set filtered — a probe of a
+    * driver-sized hash set needs no exchange, and the set rides in the
+    * task binary; otherwise `keep` is distinct'ed and semi-joined. */
   def restrictedTo(keep: DataFrame): Kb = {
-    val k = keep.select(col("id")).distinct()
+    val id = keep.select(col("id"))
+    // rows of `df` whose column `c` is a kept id
+    val kept: (DataFrame, String) => DataFrame = Pin.collectIfFits(id) match {
+      case Some(rows) =>
+        val ids = rows.map(_.get(0)).distinct.toSeq
+        (df, c) => df.filter(col(c).isInCollection(ids))
+      case None =>
+        val k = id.distinct()
+        (df, c) => df.join(k.withColumnRenamed("id", c), Seq(c), "left_semi")
+    }
     Kb(
-      nodes = nodes.join(k, Seq("id"), "left_semi"),
-      edges = edges
-        .join(k.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .join(k.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("pred"), col("dst")),
-      attrs = attrs.join(k.withColumnRenamed("id", "node"), Seq("node"), "left_semi"),
-      types = types.join(k.withColumnRenamed("id", "node"), Seq("node"), "left_semi"),
+      nodes = kept(nodes, "id"),
+      edges = kept(kept(edges, "src"), "dst").select(col("src"), col("pred"), col("dst")),
+      attrs = kept(attrs, "node"),
+      types = kept(types, "node"),
       tbox = tbox)
   }
 
   /** Drop data-property declarations with no remaining assertion
-    * (reference _base.py:278-291). Needs an action (small collect of the
-    * distinct surviving props — bounded by |dataProps|, driver-scale). */
+    * (reference _base.py:278-291). One job: each partition emits its set
+    * of props and the driver unions them — bounded by partitions ×
+    * |dataProps|, driver-scale. */
   def pruneUnusedDataProps(): Kb = {
-    val used = attrs.select("prop").distinct().collect().map(_.getString(0)).toSet
+    val used = attrs.select(col("prop"))
+      .mapPartitions((it: Iterator[Row]) => it.map(_.getString(0)).toSet.iterator)(Encoders.STRING)
+      .collect().toSet
     copy(tbox = tbox.copy(props = tbox.props.filter(p => p.kind != "data" || used(p.prop))))
   }
 

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.graftshim.GraftPin
 
@@ -35,5 +35,16 @@ object Pin {
   def apply(df: DataFrame): Pinned = {
     val (pinned, rows, bytes, threshold) = GraftPin.pin(df)
     Pinned(pinned, rows, bytes, bytes <= threshold)
+  }
+
+  /** `df`'s rows on the driver when the optimizer's size estimate of its
+    * plan is within the envelope — the test Spark applies before it
+    * broadcasts a join side, and broadcasting collects that side to the
+    * driver too. None, without running a job, above it. No checkpoint: for
+    * frames whose estimate is already tight (a local relation is exact), a
+    * pin would only add a job. */
+  def collectIfFits(df: DataFrame): Option[Array[Row]] = {
+    val (estimate, threshold) = GraftPin.estimate(df)
+    if (estimate <= threshold) Some(df.collect()) else None
   }
 }

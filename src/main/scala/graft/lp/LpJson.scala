@@ -41,23 +41,19 @@ object LpJson {
     * fall back to half of the sampled individuals as positives with an
     * empty negative set (:139-142 `random.sample(inds, len(inds)/2)` —
     * here the deterministic seeded order, same cardinality). Pos/neg are
-    * LP-scale; membership runs as two semi joins against the sampled
-    * node set, collected back at LP scale. */
+    * LP-scale (driver-sized): membership is ONE IN-set filter of the
+    * sampled node set, collected back at LP scale. */
   def restrictToSample(lp: Lp, sampled: Kb, seed: Long = 42L): Lp = {
-    val spark = sampled.spark
-    import org.apache.spark.sql.Encoders
-    def surviving(xs: Seq[String]): Seq[String] =
-      if (xs.isEmpty) Nil
-      else spark.createDataset(xs)(Encoders.STRING).toDF("id")
-        .join(sampled.nodes, Seq("id"), "left_semi")
-        .collect().map(_.getString(0)).toSeq
-    val pos = surviving(lp.pos)
+    val examples = lp.pos ++ lp.neg
+    val surviving: Set[String] =
+      if (examples.isEmpty) Set.empty
+      else sampled.nodes.filter(col("id").isInCollection(examples))
+        .select(col("id")).collect().map(_.getString(0)).toSet
     // preserve the input's relative order (reference keeps set semantics;
     // deterministic order is strictly stronger)
-    val posOrdered = lp.pos.filter(pos.toSet)
+    val posOrdered = lp.pos.filter(surviving)
     if (posOrdered.nonEmpty) {
-      val negSet = surviving(lp.neg).toSet
-      Lp(posOrdered, lp.neg.filter(negSet))
+      Lp(posOrdered, lp.neg.filter(surviving))
     } else {
       val n = sampled.nodes.count()
       val half = sampled.nodes

@@ -1,6 +1,6 @@
 package graft.sample
 
-import graft.core.{Determinism, Kb}
+import graft.core.{Determinism, Kb, Pin}
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,16 +35,22 @@ object Samplers {
     */
   def finalizeSample(kb: Kb, drawn: Drawn, dpp: Double = 1.0, seed: Long = 42L): Kb = {
     require(dpp >= 0 && dpp <= 1, "data properties percentage must be within [0,1]")
-    val sample = drawn.sampledNodes.select(col("id")).distinct()
     // edge retention (J3/J4): either induced subgraph or sampler-selected
     // edges; both endpoint-filtered (removing a node removes its incident
     // assertions, _base.py:178-180)
-    val base = kb.restrictedTo(sample)
+    val base = kb.restrictedTo(drawn.sampledNodes)
     val edges = drawn.selectedEdges match {
       case None => base.edges // include_all_edges=True: induced
       case Some(sel) =>
-        base.edges.join(sel.select("src", "pred", "dst").distinct(),
-          Seq("src", "pred", "dst"), "left_semi")
+        // under the envelope the selected edges are de-duplicated on the
+        // driver and probed as a local relation, otherwise distinct'ed
+        val triples = sel.select("src", "pred", "dst")
+        val selected = Pin.collectIfFits(triples) match {
+          case Some(rows) =>
+            kb.spark.createDataFrame(java.util.Arrays.asList(rows.distinct: _*), triples.schema)
+          case None => triples.distinct()
+        }
+        base.edges.join(selected, Seq("src", "pred", "dst"), "left_semi")
     }
     val attrs =
       if (dpp >= 1.0) base.attrs // reference no-op quirk at dpp=1.0
@@ -60,7 +66,7 @@ object Samplers {
           .filter(col("rn") <= col("cnt") - (col("cnt") * lit(dpp)).cast("long"))
           .drop("cnt", "rn")
       }
-    Kb(base.nodes, edges, attrs, base.types, kb.tbox).copy(attrs = attrs)
+    Kb(base.nodes, edges, attrs, base.types, kb.tbox)
       .pruneUnusedDataProps() // runs regardless of dpp (_base.py:189)
   }
 

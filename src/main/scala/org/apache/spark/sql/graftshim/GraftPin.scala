@@ -41,7 +41,16 @@ object GraftPin {
     val stats = Statistics(sizeInBytes = BigInt(math.max(bytes, 1L)),
       rowCount = Some(BigInt(rows)))
     val pinned = leaf.copy()(session, Some(stats), Some(leaf.constraints))
-    (classic.Dataset.ofRows(session, pinned), rows, bytes,
-      session.sessionState.conf.autoBroadcastJoinThreshold)
+    (classic.Dataset.ofRows(session, pinned), rows, bytes, threshold(session))
   }
+
+  /** (the optimizer's size estimate of `df`'s plan, the session's
+    * autoBroadcastJoinThreshold); plans `df`, runs no job. */
+  def estimate(df: DataFrame): (BigInt, Long) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    (ds.queryExecution.optimizedPlan.stats.sizeInBytes, threshold(ds.sparkSession))
+  }
+
+  private def threshold(session: classic.SparkSession): Long =
+    session.sessionState.conf.autoBroadcastJoinThreshold
 }

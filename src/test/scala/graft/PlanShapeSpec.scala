@@ -479,4 +479,25 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"),
       s"a connected ordered pattern must stay equi-joins:\n$plan")
   }
+
+  test("finalized fire sample: IN-set filters under the envelope, no exchange; semi-joins above") {
+    // materialized tables, as a sampling user caches them (TpchKg's edge
+    // table is itself a distinct over lineitem)
+    val kb = {
+      val k = graft.sources.TpchKg.load(spark, sf)
+      def pin(df: org.apache.spark.sql.DataFrame) = graft.core.Pin(df).df
+      k.copy(nodes = pin(k.nodes), edges = pin(k.edges), attrs = pin(k.attrs), types = pin(k.types))
+    }
+    val drawn = new graft.sample.ForestFireSampler(kb, seed = 3).draw(100)
+    def plans(s: graft.core.Kb) = Seq("nodes" -> s.nodes, "edges" -> s.edges,
+      "attrs" -> s.attrs, "types" -> s.types).map { case (t, df) => t -> df.queryExecution.executedPlan.toString }
+    for ((t, plan) <- plans(graft.sample.Samplers.finalizeSample(kb, drawn))) {
+      assert(!plan.contains("Exchange"), s"$t: a fitting sample needs no exchange:\n$plan")
+      assert(plan.contains("INSET") && !plan.contains("Join"), s"$t: IN-set filter form:\n$plan")
+    }
+    noBroadcast {
+      for ((t, plan) <- plans(graft.sample.Samplers.finalizeSample(kb, drawn)))
+        assert(plan.contains("LeftSemi") && !plan.contains("INSET"), s"$t: semi-join form:\n$plan")
+    }
+  }
 }

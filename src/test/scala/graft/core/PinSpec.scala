@@ -30,6 +30,15 @@ class PinSpec extends SparkSpec {
     assert(p.df.collect().map(_.getLong(0)).sorted.toSeq === (0L until 2000L))
   }
 
+  test("collectIfFits: the rows under the envelope, None without a job above it") {
+    val df = spark.range(0, 300, 1, 3).select(col("id"), concat(lit("n"), col("id")).as("name"))
+    val got = Pin.collectIfFits(df)
+    assert(got.map(_.toSeq) === Some(df.collect().toSeq))
+    val (above, jobs) = org.apache.spark.graftshim.JobCount(spark.sparkContext)(
+      noBroadcast(Pin.collectIfFits(df)))
+    assert(above.isEmpty && jobs === 0)
+  }
+
   test("a pinned 50k-row aggregate plans BroadcastHashJoin unhinted; a bare checkpoint SMJ") {
     val agg = spark.range(0, 3000000, 1, 4).select((col("id") % 50000).as("k"), col("id").as("v"))
       .groupBy("k").agg(sum(col("v")).as("s"))
