@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
 /** Per-stage checkpoint + lineage metrics (north_rule resumability):
@@ -9,7 +11,10 @@ import java.nio.file.{Files, Paths}
   * appends lineage rows — per-file row counts plus a stage-total row
   * carrying an order-independent content checksum. A completed stage
   * (marker + checkpoint present) is never recomputed on resume —
-  * `stage()` short-circuits to a scan.
+  * `stage()` short-circuits to a scan. The `_GRAFT_DONE` marker carries
+  * the stage's read schema as JSON, so that scan (and the read-back after
+  * the write) is planned without a schema-inference job; an empty marker,
+  * written by an older build, falls back to the inferring read.
   *
   * The checksum is Σ xxhash64(row) over all columns — independent of
   * partitioning and row order, so it is stable across parallelism levels
@@ -42,9 +47,7 @@ object Lineage {
   def stage(spark: SparkSession, baseDir: String, name: String)
            (build: => DataFrame): DataFrame = {
     val path = stagePath(baseDir, name)
-    if (isDone(baseDir, name)) {
-      spark.read.parquet(path)
-    } else {
+    if (!isDone(baseDir, name)) {
       val src = build
       val cols = src.columns.map(col)
       val obs = Observation(s"lineage_${name}_${System.nanoTime()}")
@@ -59,10 +62,21 @@ object Lineage {
       record(spark, baseDir, name,
         m("rows").asInstanceOf[Long], m("checksum").asInstanceOf[Long])
       Files.createDirectories(Paths.get(path))
-      Files.write(marker(baseDir, name), Array.emptyByteArray)
-      spark.read.parquet(path)
+      val readSchema = org.apache.spark.sql.graftshim.GraftTypes.asNullable(src.schema)
+      Files.write(marker(baseDir, name), readSchema.json.getBytes(UTF_8))
     }
+    val json = new String(Files.readAllBytes(marker(baseDir, name)), UTF_8)
+    if (json.isEmpty) spark.read.parquet(path)
+    else spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(path)
   }
+
+  /** The lineage table's layout (see the object doc). */
+  val LineageSchema: StructType = StructType(Seq(
+    StructField("stage", StringType, nullable = false),
+    StructField("file", StringType, nullable = false),
+    StructField("rows", LongType, nullable = false),
+    StructField("checksum", LongType, nullable = true),
+    StructField("recorded_at", StringType, nullable = false)))
 
   /** Append the stage's lineage rows: per-file row counts + the `_total_`
     * row carrying the write-pass checksum. Per-file rows come straight
@@ -99,28 +113,17 @@ object Lineage {
     if (footerRows != totalRows)
       throw new IllegalStateException(s"stage $name: parquet footers under $dir " +
         s"hold $footerRows rows but the write pass counted $totalRows")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("stage",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("file",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("rows",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("checksum",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("recorded_at",
-        org.apache.spark.sql.types.StringType, nullable = false)))
     val all = perFileRows :+
       org.apache.spark.sql.Row(name, TotalFile, totalRows, checksum, ts)
     spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(all).asJava), schema)
+          scala.jdk.CollectionConverters.SeqHasAsJava(all).asJava), LineageSchema)
       .coalesce(1)
       .write.mode("append").parquet(lineagePath(baseDir))
   }
 
   def read(spark: SparkSession, baseDir: String): DataFrame =
-    spark.read.parquet(lineagePath(baseDir))
+    spark.read.schema(LineageSchema).parquet(lineagePath(baseDir))
 
   /** Per-stage totals from the `_total_` rows (rows + content checksum). */
   def totals(spark: SparkSession, baseDir: String): DataFrame =

@@ -71,40 +71,34 @@ object TextOps {
   def fingerprintMd5(text: Column): Column = md5(lower(text).cast("binary"))
 
   /** all character 3-gram shingle hash occurrences (with duplicates),
-    * h = a₁·31² + a₂·31 + a₃ over ASCII codes of lower(text). Pure
-    * explode + arithmetic — whole-stage codegen, no shuffle. Idempotent
-    * aggregates (MIN — i.e. MinHash) can consume this directly and skip
-    * deduplication entirely. */
+    * h = cp₁·31² + cp₂·31 + cp₃ over the code points of lower(text), in
+    * position order. One linear codegen scan per document
+    * ([[graft.expr.ShingleCodes]]) + a map-side explode — no shuffle.
+    * Idempotent aggregates (MIN — i.e. MinHash) can consume this directly
+    * and skip deduplication entirely. */
   def shinglesAll(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol), lower(col(textCol)).as("t"))
-      .filter(length(col("t")) >= 3)
-      .select(col(idCol), col("t"),
-        explode(sequence(lit(1), length(col("t")) - 2)).as("i"))
-      .select(col(idCol), expr("substring(t, i, 3)").as("sh"))
-      .select(col(idCol),
-        (ascii(substring(col("sh"), 1, 1)) * 961 +
-          ascii(substring(col("sh"), 2, 1)) * 31 +
-          ascii(substring(col("sh"), 3, 1))).cast("long").as("h"))
+    docs.select(col(idCol), explode(graft.expr.Shingle.codes(lower(col(textCol)))).as("h"))
+      .select(col(idCol), col("h").cast("long").as("h"))
 
   /** distinct (doc_id, h) shingle set — for set-semantics consumers
     * (Jaccard sizes, SimHash majorities, shingle counts). */
   def shingles(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     shinglesAll(docs, textCol, idCol).distinct()
 
-  /** per-doc SORTED distinct-shingle array (one row per doc) — map-only via
-    * higher-order functions. HOFs run interpreted, so this is for
-    * |docs|-sized passes (the array side of pair-level Jaccard), not for
-    * the hot shingle stream. Arrays are int (3-gram hash < 2¹⁸) and sorted
-    * so the pair-level intersection is a zero-allocation codegen merge
+  /** per-doc SORTED distinct-shingle array (one row per doc with ≥ 3
+    * characters), the same codes as [[shinglesAll]]. Each document is ONE
+    * linear codegen scan plus a primitive sort ([[graft.expr.ShingleSet]]):
+    * O(len log len) per document. The higher-order-function form,
+    * `transform(sequence…, i -> ascii(substring(t, i, 1))…)`, is O(len²):
+    * its lambda runs interpreted and every substring walks the string from
+    * its first byte. Arrays are int (codes < 2³¹) and sorted so the pair-level
+    * intersection is a zero-allocation codegen merge
     * ([[graft.expr.SigOps.sortedOverlap]]) instead of array_intersect's
     * per-row hash-set build. */
   def shingleArrays(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     docs.select(col(idCol), lower(col(textCol)).as("t"))
       .filter(length(col("t")) >= 3)
-      .select(col(idCol), expr(
-        """array_sort(array_distinct(transform(sequence(1, length(t) - 2),
-          |  i -> ascii(substring(t, i, 1)) * 961 + ascii(substring(t, i + 1, 1)) * 31
-          |       + ascii(substring(t, i + 2, 1)))))""".stripMargin).as("hs"))
+      .select(col(idCol), graft.expr.Shingle.set(col("t")).as("hs"))
 
   /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken — MOSS
     * local fingerprinting): from the k-gram hash sequence of lower(text),

@@ -36,3 +36,11 @@ object GraftSessions {
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
         .queryExecution.logical)
 }
+
+/** The schema a file-source read of data written with `st` reports: every
+  * field, array element and map value nullable (Spark's sql-private
+  * `asNullable`, which the file-source relation applies on read). */
+object GraftTypes {
+  def asNullable(st: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    st.asNullable
+}

@@ -61,6 +61,26 @@ class ExprFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("ShingleSetFn == code-point mirror on 500 random strings") {
+    // the kernel takes already-lowered text, so the mirror does not lower;
+    // upper case, combining and supplementary characters are all drawn, and
+    // the first 30 strings cover every length 0-2 (in code points); even
+    // draws are pure ASCII (the byte path), odd ones mixed (the code points)
+    val r = new scala.util.Random(43)
+    val ascii = (1 to 127).map(_.toChar.toString).toVector
+    val mixed = exotic ++ Seq("İ", "ẞ", "𝔘", "𝔫", "\u0307", "a", "B", " ", ".")
+    (1 to 500).foreach { n =>
+      val alphabet = if (n % 2 == 0) ascii else mixed
+      val len = if (n <= 30) n % 3 else r.nextInt(60)
+      val s = Seq.fill(len)(alphabet(r.nextInt(alphabet.size))).mkString
+      val c = s.codePoints().toArray
+      val codes = (0 to c.length - 3).map(i => c(i) * 961 + c(i + 1) * 31 + c(i + 2))
+      val u = UTF8String.fromString(s)
+      assert(ShingleSetFn.codes(u).toIntArray().toSeq === codes, s"text=$s")
+      assert(ShingleSetFn.set(u).toIntArray().toSeq === codes.distinct.sorted, s"text=$s")
+    }
+  }
+
   test("ArrayAgreeFn: positional agreement and sorted-overlap mirrors") {
     (1 to 300).foreach { _ =>
       val a = Array.fill(16)(rnd.nextInt(5).toLong)

@@ -103,11 +103,20 @@ class WinnowSpec extends SparkSpec {
     val viaExpr = docs.select(col("doc_id"),
         graft.expr.MinHash.minhashSig(col("text"), 16).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
-    // composable mirror: lower() + ascii(substring) code-point shingles
+    // composable mirror: lower() + ascii(substring) code-point shingles,
+    // built here from built-in functions so it shares no kernel with the
+    // expression under test
     val aggs = (0 until 16).map(j =>
       min(pmod(col("h") * graft.dedup.Dedup.hashA(j) + graft.dedup.Dedup.hashB(j),
         lit(graft.dedup.Dedup.P))).as(s"m$j"))
-    val viaPlan = TextOps.shinglesAll(docs)
+    val viaPlan = docs.select(col("doc_id"), lower(col("text")).as("t"))
+      .filter(length(col("t")) >= 3)
+      .select(col("doc_id"), col("t"), explode(sequence(lit(1), length(col("t")) - 2)).as("i"))
+      .select(col("doc_id"), expr("substring(t, i, 3)").as("sh"))
+      .select(col("doc_id"),
+        (ascii(substring(col("sh"), 1, 1)) * 961 +
+          ascii(substring(col("sh"), 2, 1)) * 31 +
+          ascii(substring(col("sh"), 3, 1))).cast("long").as("h"))
       .groupBy("doc_id")
       .agg(aggs.head, aggs.tail: _*)
       .collect().map(r => r.getLong(0) -> (1 to 16).map(r.getLong).toSeq).toMap
