@@ -33,8 +33,20 @@ object Pin {
     * job that materializes it — one job, as `localCheckpoint(true)` runs.
     * The leaf keeps its output partitioning. */
   def apply(df: DataFrame): Pinned = {
-    val (pinned, rows, bytes, threshold) = GraftPin.pin(df)
+    val (pinned, rows, bytes, threshold, _) = GraftPin.pin(df)
     Pinned(pinned, rows, bytes, bytes <= threshold)
+  }
+
+  /** [[apply]], plus `df`'s rows on the driver when the pin fits the
+    * envelope: the materializing job returns them too, so a driver-side
+    * form costs no collect job of its own. Only when the rows sit unevenly
+    * (a partition above envelope / partitions bytes) does a fitting pin
+    * run a second job to collect them. None, with no further job, above
+    * the envelope. */
+  def withRows(df: DataFrame): (Pinned, Option[Array[Row]]) = {
+    val (pinned, rows, bytes, threshold, kept) = GraftPin.pin(df, keepRows = true)
+    val p = Pinned(pinned, rows, bytes, bytes <= threshold)
+    (p, if (p.fits) kept.orElse(Some(p.df.collect())) else None)
   }
 
   /** `df`'s rows on the driver when the optimizer's size estimate of its

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.{Pin, Pinned}
+import graft.core.{Determinism, Pin, Pinned}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -238,24 +238,19 @@ object Canonicalize {
   */
 object ConnectedComponents {
 
-  /** Edge count at or below which [[run]] solves on the driver instead of
-    * iterating distributed rounds. A dictionary-scale component graph (the
-    * alias catalog's few hundred edges) costs ~20 tiny barrier jobs through
-    * the star rounds — pure fixed overhead per pipeline run — while a
-    * union-find over a collected 64k-edge list is milliseconds. Same gate
-    * philosophy as the broadcast-vs-salted joins: size decides the
-    * strategy, results are identical by construction (parity-tested). */
-  val DriverMaxEdges: Long = 65536L
-
   /** edges(src, dst) undirected → (id, component = min id in component).
     * Only ids incident to an edge appear (callers union isolated nodes).
-    * Dictionary-scale inputs (≤ `driverMaxEdges` distinct edges) solve via
-    * driver union-find; above that, alternating star rounds. Every round is
+    * The canonical edge set is pinned; when it fits the broadcast envelope
+    * (the alias catalog's few hundred edges, or any graph up to
+    * `spark.sql.autoBroadcastJoinThreshold` bytes) it solves via driver
+    * union-find over the rows the pin job returns ([[Pin.withRows]]) — one
+    * job instead of ~20 tiny barrier jobs through the star rounds. Above it, alternating star rounds. Both pick each
+    * component's minimum in Spark's order (strings as UTF-8 bytes), so the
+    * representative does not depend on the input's size. Every round is
     * localCheckpointed: the convergence check (count + exceptAll) and the
     * next round each re-read the round's edge set, so an unmaterialized
     * round would evaluate its star chain three times. */
-  def run(edges: DataFrame, maxIter: Int = 40, checkpointEvery: Int = 1,
-          driverMaxEdges: Long = DriverMaxEdges): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 40, checkpointEvery: Int = 1): DataFrame = {
     def canon(e: DataFrame) = e
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
@@ -275,10 +270,11 @@ object ConnectedComponents {
         .unionAll(m.select(col("u"), col("m").as("v"))))
     }
 
-    var e = canon(edges.select(col("src").as("u"), col("dst").as("v")))
-      .localCheckpoint(true)
-    if (e.count() <= driverMaxEdges && driverOrdering(e).isDefined)
-      return driverRun(e)
+    val e0 = canon(edges.select(col("src").as("u"), col("dst").as("v")))
+    val ord = driverOrdering(e0)
+    val (pinned, rows) = if (ord.isDefined) Pin.withRows(e0) else (Pin(e0), None)
+    if (rows.isDefined) return driverRun(pinned.df, rows.get, ord.get)
+    var e = pinned.df
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -339,21 +335,21 @@ object ConnectedComponents {
   private def driverOrdering(e: DataFrame): Option[Ordering[Any]] = {
     import org.apache.spark.sql.types._
     e.schema.fields(0).dataType match {
-      case StringType => Some(Ordering.String.on[Any](_.asInstanceOf[String]))
+      case StringType => Some(Determinism.utf8Order.on[Any](_.asInstanceOf[String]))
       case LongType => Some(Ordering.Long.on[Any](_.asInstanceOf[Long]))
       case IntegerType => Some(Ordering.Int.on[Any](_.asInstanceOf[Int]))
       case _ => None
     }
   }
 
-  /** Driver union-find over a collected dictionary-scale edge list —
+  /** Driver union-find over the pinned edge list's rows —
     * identical output contract to the star rounds ((id, min id in
     * component), edge-incident ids only, same id type). */
-  private def driverRun(e: DataFrame): DataFrame = {
+  private def driverRun(e: DataFrame, edgeRows: Array[org.apache.spark.sql.Row],
+                        ord: Ordering[Any]): DataFrame = {
     val spark = e.sparkSession
-    val ord = driverOrdering(e).get
     val idType = e.schema.fields(0).dataType
-    val pairs = e.collect().map(r => (r.get(0), r.get(1)))
+    val pairs = edgeRows.map(r => (r.get(0), r.get(1)))
     val parent = scala.collection.mutable.Map.empty[Any, Any]
     def find(x: Any): Any = {
       var r = x

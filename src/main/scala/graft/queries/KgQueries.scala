@@ -208,11 +208,11 @@ object KgQueries {
     "kg_ktruss" -> ((s, d) => graft.sample.GraphMetrics.kTruss(
       graft.sample.GraphMetrics.cooccurrence(TpchKg.load(s, d).edges, "contains"),
       k = 6)),
-    // connected components of the projection — at sf0.01 the edge set is
-    // above the driver gate, so this row oracles the DISTRIBUTED
-    // alternating-star path directly (the oracle replays the star rounds;
-    // they are idempotent at fixpoint, so a fixed 8-round unroll equals
-    // the converged engine output)
+    // connected components of the projection — the oracle replays the
+    // alternating-star rounds (idempotent at fixpoint, so a fixed 8-round
+    // unroll equals the converged output); the engine solves on the driver
+    // when the pinned edge set fits the broadcast envelope and by those
+    // star rounds above it, both picking the same minimum id (CcSpec)
     "kg_components" -> ((s, d) => graft.pipeline.ConnectedComponents.run(
       graft.sample.GraphMetrics.cooccurrence(TpchKg.load(s, d).edges, "contains")
         .withColumnRenamed("u", "src").withColumnRenamed("v", "dst"))),

@@ -1,8 +1,9 @@
 package graft.sample
 
-import graft.core.Pin
-import org.apache.spark.sql.DataFrame
+import graft.core.{LocalGraph, Pin}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** k-source betweenness centrality (Brandes, "A faster algorithm for
   * betweenness centrality", J. Math. Sociology 2001, in the sampled
@@ -22,10 +23,17 @@ import org.apache.spark.sql.functions._
   * against hand-computed Brandes values (same split as PageRank's
   * naive-reference spec vs the integer gates).
   *
-  * Scale shape: the forward pass is one frontier⋈edges join + one
-  * (src, node)-keyed sum per level — the [[Walks]] frontier-expansion
-  * shape, k sources riding ONE plan as extra rows, not k jobs. The
-  * backward pass is the same join against the settled table filtered to
+  * Scale shape: the forward pass takes one of two forms over the pinned
+  * edge set. When the pin fits the broadcast envelope, its rows come
+  * back with the pin job as a [[graft.core.LocalGraph]] CSR that is
+  * broadcast, and ONE `mapPartitions` over the sources (grouped by id with their
+  * multiplicity) runs each source's BFS task-side; the k·|V| output rows
+  * are pinned on the executors and never reach the driver. Above it, the
+  * pass is one frontier⋈edges join + one (src, node)-keyed sum per level
+  * — the [[Walks]] frontier-expansion shape, k sources riding ONE plan as
+  * extra rows, not k jobs. Both forms count paths with ANSI long sums
+  * (an overflow throws on both) and give the same rows. The backward
+  * pass is the same join against the settled table filtered to
   * one level, σ already materialized. σ magnitudes: ≤ (max deg)^maxR
   * per pair — int64 to deg ~10⁴ at maxR 4; move σ to decimal(38,0)
   * beyond (the [[Louvain]] note).
@@ -40,7 +48,60 @@ object Betweenness {
     * count — no fixpoint argument needed). */
   def spCounts(und0: DataFrame, sources: DataFrame, maxR: Int): DataFrame = {
     require(maxR >= 0, s"maxR=$maxR")
-    val und = und0.select(col("u"), col("v")).localCheckpoint(true)
+    val edges = und0.select(col("u"), col("v"))
+    val (und, local) =
+      if (sources.schema("id").dataType == StringType) LocalGraph.pin(edges) else (Pin(edges), None)
+    local match {
+      case Some(g) => localCounts(g, sources, maxR)
+      case None => sparkCounts(und.df, sources, maxR)
+    }
+  }
+
+  private val SpSchema = StructType(Seq(StructField("src", StringType),
+    StructField("node", StringType), StructField("dist", IntegerType), StructField("sigma", LongType)))
+
+  /** Every source's BFS over the broadcast CSR, task-side. A source listed
+    * m times seeds m level-0 rows and m paths into level 1, as m frontier
+    * rows do in the Spark form; a source that is no endpoint keeps its
+    * level-0 rows only. */
+  private def localCounts(g: LocalGraph, sources: DataFrame, maxR: Int): DataFrame = {
+    val spark = sources.sparkSession
+    val bySource = sources.select(col("id")).rdd.map(r => (r.getString(0), 1L))
+      .reduceByKey(_ + _, spark.sparkContext.defaultParallelism)
+    g.pinTaskSide(spark, SpSchema) { bc =>
+      bySource.mapPartitions { it =>
+        val g = bc.value
+        val dist = Array.fill(g.n)(-1)
+        val sigma = new Array[Long](g.n)
+        it.flatMap { case (src, m) =>
+          val out = Seq.fill(m.toInt)(Row(src, src, 0, 1L)).toBuffer
+          val s = if (src == null) -1 else g.index(src)
+          if (s >= 0) {
+            dist(s) = 0
+            sigma(s) = m
+            val reached = scala.collection.mutable.ArrayBuffer(s)
+            var frontier = Seq(s)
+            for (r <- 1 to maxR if frontier.nonEmpty) {
+              val next = scala.collection.mutable.ArrayBuffer.empty[Int]
+              for (u <- frontier; e <- g.off(u) until g.off(u + 1)) {
+                val v = g.nbr(e)
+                if (dist(v) < 0) { dist(v) = r; sigma(v) = 0L; next += v }
+                if (dist(v) == r) sigma(v) = Math.addExact(sigma(v), sigma(u))
+              }
+              next.foreach(v => out += Row(src, g.ids(v), r, sigma(v)))
+              reached ++= next
+              frontier = next.toSeq
+            }
+            reached.foreach(v => dist(v) = -1)
+          }
+          out
+        }
+      }
+    }
+  }
+
+  /** The forward pass as one Spark plan per level. */
+  private def sparkCounts(und: DataFrame, sources: DataFrame, maxR: Int): DataFrame = {
     // sym stays a LAZY union over the materialized und: re-deriving the
     // swapped half is a map over checkpointed rows, cheaper than a second
     // materialization job (the round loop is job-launch-bound at small

@@ -1,8 +1,9 @@
 package graft.sample
 
-import graft.core.Pin
-import org.apache.spark.sql.DataFrame
+import graft.core.{LocalGraph, Pin}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Exact distributed triangle counting + clustering metrics — the standard
   * structure-preservation measures of the sampling literature (Leskovec &
@@ -575,14 +576,80 @@ object GraphMetrics {
     * standard mitigation; capped-out hubs contribute no evidence, which
     * RA already discounts by 1/deg). `minSupport` prunes the quadratic
     * one-shared-neighbor tail before it is ever materialized as output.
-    * Joins are key-equi on z; the edge anti-join removes existing edges. */
+    * When the pinned edge set fits the broadcast envelope, its
+    * [[graft.core.LocalGraph]] CSR is broadcast and ONE `mapPartitions`
+    * over ranges of the smaller endpoint u counts each u's wedges
+    * task-side (the Σdeg² output is pinned on the executors, never
+    * collected). Above it, joins are key-equi on z and the edge anti-join
+    * removes existing edges. Both forms exclude exactly the pairs stored
+    * as `(u, w)` rows and give the same rows. */
   def linkPredFeatures(und0: DataFrame, maxZDeg: Int = 32,
                        minSupport: Int = 2): DataFrame = {
     require(maxZDeg >= 1 && minSupport >= 1, s"maxZDeg=$maxZDeg minSupport=$minSupport")
-    // und and zok are pinned: deg (an aggregate of und), both zok sides of
-    // the wedge self-join and the edge anti-join side broadcast on their
-    // counted sizes while they fit the threshold
-    val und = Pin(und0).df
+    // und is pinned: its counted size picks the form, and on the Spark form
+    // deg (an aggregate of und), both zok sides of the wedge self-join and
+    // the edge anti-join side broadcast on counted sizes while they fit
+    val (und, local) = LocalGraph.pin(und0)
+    local match {
+      case Some(g) => localLinkPred(g, und0.sparkSession, maxZDeg, minSupport)
+      case None => sparkLinkPred(und.df, maxZDeg, minSupport)
+    }
+  }
+
+  private val LpSchema = StructType(Seq(StructField("u", StringType), StructField("w", StringType),
+    StructField("cn", LongType), StructField("ra_micros", LongType)))
+
+  /** Each u's wedges over the broadcast CSR, task-side, over contiguous u
+    * ranges of about equal wedge work. Entry multiplicities multiply as
+    * the Spark form's join rows do: a pair gains mult(u, z)·mult(z, w)
+    * counts through z. */
+  private def localLinkPred(g: LocalGraph, spark: SparkSession, maxZDeg: Int,
+                            minSupport: Int): DataFrame = {
+    val sc = spark.sparkContext
+    val parts = sc.defaultParallelism
+    val work = Array.tabulate(g.n) { u =>
+      (g.off(u) until g.off(u + 1)).iterator.map(e => g.degree(g.nbr(e)).toLong)
+        .filter(_ <= maxZDeg).sum
+    }
+    val cum = work.scanLeft(0L)(_ + _)
+    val cuts = (0 until parts).map(p => cum.indexWhere(_ >= cum.last * p / parts)) :+ g.n
+    val ranges = cuts.zip(cuts.tail).filter { case (lo, hi) => lo < hi }
+    g.pinTaskSide(spark, LpSchema) { bc =>
+      sc.parallelize(ranges, math.max(1, ranges.size)).mapPartitions { it =>
+        val g = bc.value
+        val cn = new Array[Long](g.n)
+        val ra = new Array[Long](g.n)
+        val edge = new Array[Boolean](g.n)
+        val touched = new Array[Int](g.n)
+        it.flatMap { case (lo, hi) => (lo until hi).iterator.flatMap { u =>
+          var t = 0
+          for (e <- g.off(u) until g.off(u + 1)) {
+            val z = g.nbr(e)
+            if (g.degree(z) <= maxZDeg) {
+              val r = 1000000L / g.degree(z)
+              for (f <- g.off(z) until g.off(z + 1)) {
+                val w = g.nbr(f)
+                if (w > u) {
+                  if (cn(w) == 0) { touched(t) = w; t += 1 }
+                  cn(w) += 1
+                  ra(w) = Math.addExact(ra(w), r)
+                }
+              }
+            }
+          }
+          for (e <- g.off(u) until g.off(u + 1) if g.stored(e)) edge(g.nbr(e)) = true
+          val out = (0 until t).iterator.map(touched).filter(w => cn(w) >= minSupport && !edge(w))
+            .map(w => Row(g.ids(u), g.ids(w), cn(w), ra(w))).toArray
+          for (j <- 0 until t) { cn(touched(j)) = 0; ra(touched(j)) = 0 }
+          for (e <- g.off(u) until g.off(u + 1)) edge(g.nbr(e)) = false
+          out
+        } }
+      }
+    }
+  }
+
+  /** The wedge self-join and edge anti-join as one Spark plan. */
+  private def sparkLinkPred(und: DataFrame, maxZDeg: Int, minSupport: Int): DataFrame = {
     val deg = degrees(und)
     val sym = und.select(col("u"), col("v"))
       .unionAll(und.select(col("v").as("u"), col("u").as("v")))

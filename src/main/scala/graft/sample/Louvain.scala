@@ -1,8 +1,9 @@
 package graft.sample
 
-import graft.core.Pin
-import org.apache.spark.sql.DataFrame
+import graft.core.{LocalGraph, Pin}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Synchronous modularity-gain community moves — the local-move phase of
   * Louvain (Blondel et al., "Fast unfolding of communities in large
@@ -29,12 +30,17 @@ import org.apache.spark.sql.functions._
   * factors to decimal(38,0) beyond ~10⁹ edges, same note as
   * [[DeepWalk]]'s PPMI comparison).
   *
-  * Per round: one assignment⋈edges join, one (i, community) count, one
-  * Σtot aggregate joined back, and one min-of-struct pick — every stage
-  * keyed on a node or community id, map-side combinable, no window sort,
-  * so a hub never sorts its neighbor list. Ties prefer STAYING, then the
-  * smallest community id (total order → byte-identical at any
-  * parallelism).
+  * Per round, in one of two step forms over the pinned loop-free edge
+  * set. When the pin fits the broadcast envelope, the rounds run on the
+  * driver over the pin's [[graft.core.LocalGraph]] CSR — int arrays
+  * indexed by dense id, the whole call the one pin job and a |V|-row
+  * local frame back. Above it, each round is Spark plans: one
+  * assignment⋈edges join, one (i, community) count, one Σtot aggregate
+  * joined back, and one min-of-struct pick — every stage keyed on a node
+  * or community id, map-side combinable, no window sort, so a hub never
+  * sorts its neighbor list. Ties prefer STAYING, then the smallest
+  * community id in Spark's string order (total order → byte-identical at
+  * any parallelism and on both forms).
   */
 object Louvain {
 
@@ -60,21 +66,38 @@ object Louvain {
     // self-loops would silently corrupt deg, twoM and kin(own community);
     // callers pass loop-free projections — drop any defensively (same
     // guard as Boruvka.minimumSpanningForest)
-    val und = wund.filter(col("u") =!= col("v")).localCheckpoint(true)
+    val (und, local) = LocalGraph.pin(wund.filter(col("u") =!= col("v")), weight = Some("w"))
+    val moves: Moves = local
+      .map(g => new LocalMoves(und.df.sparkSession, g): Moves)
+      .getOrElse(new SparkMoves(und.df))
+    for (_ <- 1 to rounds) moves.round()
+    moves.result
+  }
+
+  /** One step form of the round loop: a synchronous sweep that replaces
+    * the assignment, and the `(id, community)` frame of the current one. */
+  private trait Moves {
+    def round(): Unit
+    def result: DataFrame
+  }
+
+  /** The rounds as Spark plans over the pinned, loop-free edge frame. */
+  private final class SparkMoves(und: DataFrame) extends Moves {
     // lazy union over the materialized und — the swapped half is a map
     // over checkpointed rows, cheaper than a second materialization job
-    val sym = und.unionAll(
+    private val sym = und.unionAll(
         und.select(col("v").as("u"), col("u").as("v"), col("w")))
-    val deg = Pin(sym.groupBy(col("u").as("id")).agg(sum(col("w")).as("k")))
+    private val deg = Pin(sym.groupBy(col("u").as("id")).agg(sum(col("w")).as("k")))
     // 2m = Σ_id k(id): every edge weight appears once per endpoint in sym,
     // so the degree table already carries the edge-mass total — reading it
     // from the 20k-row deg frame replaces a second full scan of und
-    val twoM = deg.df.agg(coalesce(sum(col("k")), lit(0L))).head().getLong(0)
+    private val twoM = deg.df.agg(coalesce(sum(col("k")), lit(0L))).head().getLong(0)
     // deg and comm are pinned, so joins against them (or projections of
     // them) broadcast on their counted size; the Σtot/size/k2 sides come
     // out of joins and take deg's fit as the |V|-bounded envelope
-    var comm = Pin(deg.df.select(col("id"), col("id").as("c"))).df
-    for (_ <- 1 to rounds) {
+    private var comm = Pin(deg.df.select(col("id"), col("id").as("c"))).df
+
+    def round(): Unit = {
       // ONE community aggregate carries both Σtot (scored join) and the
       // member count (singleton-swap guard) — was two separate
       // shuffles + an extra join per round
@@ -130,6 +153,66 @@ object Louvain {
         .agg(min(struct((-col("score")).as("ns"), col("flag"), col("c"))).as("m"))
         .select(col("id"), col("m.c").as("c"))).df
     }
-    comm.select(col("id"), col("c").as("community"))
+
+    def result: DataFrame = comm.select(col("id"), col("c").as("community"))
+  }
+
+  /** The same rounds over the collected CSR, on the driver: int arrays
+    * indexed by dense id, so a community id is its node's dense id and the
+    * smallest-id tie break is an int compare. Replays the Spark form
+    * exactly: every sum, product and negation is the ANSI long operation
+    * Spark runs (an overflow throws on both paths), and the pick is the
+    * minimum of (−score, flag, c). */
+  private final class LocalMoves(spark: SparkSession, g: LocalGraph) extends Moves {
+    private val n = g.n
+    private val k: Array[Long] = Array.tabulate(n) { i =>
+      var s = 0L
+      for (e <- g.off(i) until g.off(i + 1)) s = Math.addExact(s, g.wt(e))
+      s
+    }
+    private val twoM = k.foldLeft(0L)(Math.addExact)
+    private var comm: Array[Int] = Array.range(0, n)
+
+    def round(): Unit = {
+      val stot = new Array[Long](n)
+      val size = new Array[Int](n)
+      for (i <- 0 until n) {
+        stot(comm(i)) = Math.addExact(stot(comm(i)), k(i))
+        size(comm(i)) += 1
+      }
+      def score(kin: Long, ki: Long, st: Long): Long =
+        Math.subtractExact(Math.multiplyExact(twoM, kin), Math.multiplyExact(ki, st))
+      val kin = new Array[Long](n)
+      val seen = new Array[Boolean](n)
+      val touched = new Array[Int](n)
+      val next = new Array[Int](n)
+      for (i <- 0 until n) {
+        var t = 0
+        for (e <- g.off(i) until g.off(i + 1)) {
+          val c = comm(g.nbr(e))
+          if (!seen(c)) { seen(c) = true; touched(t) = c; t += 1 }
+          kin(c) = Math.addExact(kin(c), g.wt(e))
+        }
+        val oc = comm(i)
+        // the stay candidate (flag 0) wins every exact tie; a move must
+        // beat it, and among equal moves the smallest community wins
+        var best = Math.negateExact(score(kin(oc), k(i), Math.subtractExact(stot(oc), k(i))))
+        var bestC = oc
+        for (j <- 0 until t) {
+          val c = touched(j)
+          if (c != oc && !(size(oc) == 1 && size(c) == 1 && c > oc)) {
+            val ns = Math.negateExact(score(kin(c), k(i), stot(c)))
+            if (ns < best || (ns == best && bestC != oc && c < bestC)) { best = ns; bestC = c }
+          }
+        }
+        next(i) = bestC
+        for (j <- 0 until t) { kin(touched(j)) = 0L; seen(touched(j)) = false }
+      }
+      comm = next
+    }
+
+    def result: DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(Array.tabulate(n)(i => Row(g.ids(i), g.ids(comm(i)))): _*),
+      StructType(Seq(StructField("id", StringType), StructField("community", StringType))))
   }
 }

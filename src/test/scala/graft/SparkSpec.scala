@@ -38,4 +38,12 @@ trait SparkSpec extends AnyFunSuite {
     * over the envelope. */
   def noBroadcast[T](body: => T): T =
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
+  /** Run `body` at the default threshold and again with nothing broadcast:
+    * an operator with a driver form under the envelope and a Spark form
+    * above it passes the same case on both. */
+  def bothForms(body: => Unit): Unit = {
+    body
+    noBroadcast(body)
+  }
 }

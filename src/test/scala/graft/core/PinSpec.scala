@@ -39,6 +39,26 @@ class PinSpec extends SparkSpec {
     assert(above.isEmpty && jobs === 0)
   }
 
+  test("withRows: the pin's own job returns the rows under the envelope, none above it") {
+    val df = spark.range(0, 300, 1, 3).select(col("id"), concat(lit("n"), col("id")).as("name"))
+    val sc = spark.sparkContext
+    val ((p, got), jobs) = org.apache.spark.graftshim.JobCount(sc)(Pin.withRows(df))
+    assert(jobs === 1 && p.fits && p.rows === 300)
+    assert(got.map(_.map(r => (r.getLong(0), r.getString(1))).sorted.toSeq) ===
+      Some((0L until 300L).map(i => (i, s"n$i"))))
+    assert(got.get.head.schema === df.schema)
+    assert(p.df.collect().length === 300)
+    // one partition holding nearly every row is above envelope / partitions:
+    // a second job collects them
+    def named(ids: DataFrame) = ids.select(col("id"), concat(lit("n"), col("id")).as("name"))
+    val skewed = named(spark.range(0, 300, 1, 1).toDF()).unionAll(named(spark.range(300, 303, 1, 3).toDF()))
+    val ((ps, gotS), jobsS) = withConf("spark.sql.autoBroadcastJoinThreshold" -> "12000")(
+      org.apache.spark.graftshim.JobCount(sc)(Pin.withRows(skewed)))
+    assert(ps.fits && gotS.map(_.length) === Some(303) && jobsS === 2, s"$jobsS jobs, ${ps.bytes} B")
+    val ((pa, above), jobsA) = org.apache.spark.graftshim.JobCount(sc)(noBroadcast(Pin.withRows(df)))
+    assert(!pa.fits && above.isEmpty && jobsA === 1)
+  }
+
   test("a pinned 50k-row aggregate plans BroadcastHashJoin unhinted; a bare checkpoint SMJ") {
     val agg = spark.range(0, 3000000, 1, 4).select((col("id") % 50000).as("k"), col("id").as("v"))
       .groupBy("k").agg(sum(col("v")).as("s"))

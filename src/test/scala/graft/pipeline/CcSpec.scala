@@ -23,14 +23,14 @@ class CcSpec extends SparkSpec {
     roots.map { case (k, r) => k -> minOf(r) }
   }
 
-  /** both strategies: the size-gated driver union-find (default gate) and
-    * the distributed star rounds (gate forced off) */
+  /** both strategies: the driver union-find (the pinned edge set fits the
+    * broadcast envelope) and the distributed star rounds (threshold -1) */
   private def ccBoth(edges: Seq[(String, String)]): (Map[String, String], Map[String, String]) = {
     import spark.implicits._
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     (toMap(ConnectedComponents.run(edges.toDF("src", "dst"))),
-      toMap(ConnectedComponents.run(edges.toDF("src", "dst"), driverMaxEdges = 0L)))
+      noBroadcast(toMap(ConnectedComponents.run(edges.toDF("src", "dst")))))
   }
 
   test("2000-deep chain with shuffled labels (diameter >> any iteration cap)") {
@@ -48,13 +48,25 @@ class CcSpec extends SparkSpec {
     import spark.implicits._
     val edges = Seq((5L, 2L), (2L, 9L), (100L, 101L), (9L, 5L))
     val driver = ConnectedComponents.run(edges.toDF("src", "dst"))
-    val star = ConnectedComponents.run(edges.toDF("src", "dst"), driverMaxEdges = 0L)
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val star = noBroadcast(m(ConnectedComponents.run(edges.toDF("src", "dst"))))
     val expect = Map(2L -> 2L, 5L -> 2L, 9L -> 2L, 100L -> 100L, 101L -> 100L)
     assert(m(driver) === expect)
-    assert(m(star) === expect)
+    assert(star === expect)
     assert(driver.schema("id").dataType === org.apache.spark.sql.types.LongType)
+  }
+
+  test("non-BMP ids: both paths pick the minimum in Spark's UTF-8 byte order") {
+    // U+1F600 (a surrogate pair) sorts BELOW U+E000 and U+FFFD in UTF-16
+    // units but ABOVE them in UTF-8 bytes, which is how the star rounds'
+    // least/min compare strings
+    val (fffd, smile, e000) = ("\uFFFD", "\uD83D\uDE00", "\uE000")
+    val edges = Seq((fffd, smile), (smile, e000))
+    val (gotDriver, gotStar) = ccBoth(edges)
+    val expect = Map(fffd -> e000, smile -> e000, e000 -> e000)
+    assert(gotDriver === expect)
+    assert(gotStar === expect)
   }
 
   test("random graph + isolated pairs + bipartite blocks == union-find, both paths") {
@@ -102,9 +114,8 @@ class CcSpec extends SparkSpec {
       ConnectedComponents.run(old.toDF("src", "dst")), fresh.toDF("src", "dst")))
     assert(got === unionFind(all))
     // and through the distributed star path on both solves
-    val gotStar = m(ConnectedComponents.increment(
-      ConnectedComponents.run(old.toDF("src", "dst"), driverMaxEdges = 0L),
-      fresh.toDF("src", "dst")))
+    val gotStar = noBroadcast(m(ConnectedComponents.increment(
+      ConnectedComponents.run(old.toDF("src", "dst")), fresh.toDF("src", "dst"))))
     assert(gotStar === unionFind(all))
   }
 }

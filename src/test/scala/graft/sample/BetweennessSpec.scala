@@ -14,7 +14,7 @@ class BetweennessSpec extends SparkSpec {
     Betweenness.spCounts(g, s, r).collect()
       .map(x => (x.getString(0), x.getString(1), x.getInt(2), x.getLong(3))).toSet
 
-  test("spCounts: diamond + tail hand trace — paths multiply") {
+  test("spCounts: diamond + tail hand trace — paths multiply") (bothForms {
     val g = und(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("d", "e"))
     assert(sp(g, ids("a"), 3) === Set(
       ("a", "a", 0, 1L), ("a", "b", 1, 1L), ("a", "c", 1, 1L),
@@ -22,16 +22,16 @@ class BetweennessSpec extends SparkSpec {
     // truncation: maxR=1 stops at the first ring
     assert(sp(g, ids("a"), 1) === Set(
       ("a", "a", 0, 1L), ("a", "b", 1, 1L), ("a", "c", 1, 1L)))
-  }
+  })
 
-  test("spCounts: two sources ride one plan, disconnected node unreached") {
+  test("spCounts: two sources ride one plan, disconnected node unreached") (bothForms {
     val g = und(("a", "b"), ("b", "c"), ("x", "y"))
     assert(sp(g, ids("a", "x"), 2) === Set(
       ("a", "a", 0, 1L), ("a", "b", 1, 1L), ("a", "c", 2, 1L),
       ("x", "x", 0, 1L), ("x", "y", 1, 1L)))
-  }
+  })
 
-  test("betweenness: path graph a-b-c-d-e, all sources = exact ordered-pair BC") {
+  test("betweenness: path graph a-b-c-d-e, all sources = exact ordered-pair BC") (bothForms {
     val g = und(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"))
     val bc = Betweenness.accumulate(g,
         Betweenness.spCounts(g, ids("a", "b", "c", "d", "e"), 4))
@@ -39,15 +39,15 @@ class BetweennessSpec extends SparkSpec {
     // ordered (s,t) pairs through each: b {a}×{c,d,e}×2 = 6; c 8; d 6
     assert(bc === Map("a" -> 0.0, "b" -> 6.0, "c" -> 8.0,
       "d" -> 6.0, "e" -> 0.0))
-  }
+  })
 
-  test("betweenness: 4-cycle — split σ gives every vertex exactly 1.0") {
+  test("betweenness: 4-cycle — split σ gives every vertex exactly 1.0") (bothForms {
     val g = und(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"))
     val bc = Betweenness.accumulate(g,
         Betweenness.spCounts(g, ids("a", "b", "c", "d"), 2))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(bc === Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.0, "d" -> 1.0))
-  }
+  })
 
   test("katzScaled: chain walk counts by hand at K=4, β=1/2 weights") {
     val e = Seq(("a", "b"), ("b", "c")).toDF("src", "dst")
@@ -71,7 +71,7 @@ class BetweennessSpec extends SparkSpec {
     assert(p1 === p7)
   }
 
-  test("estimate: scaling by n/k, determinism across partitioning") {
+  test("estimate: scaling by n/k, determinism across partitioning") (bothForms {
     val g = und(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"))
     // single source a, n=5, k=1: δ_a(b)=3, δ_a(c)=2, δ_a(d)=1 → ×5
     val est = Betweenness.estimate(g, ids("a"), 4)
@@ -80,5 +80,5 @@ class BetweennessSpec extends SparkSpec {
     val a1 = Betweenness.spCounts(g.repartition(1), ids("a", "c"), 4).collect().toSet
     val a7 = Betweenness.spCounts(g.repartition(7), ids("a", "c"), 4).collect().toSet
     assert(a1 === a7)
-  }
+  })
 }

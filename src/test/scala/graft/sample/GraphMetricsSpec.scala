@@ -297,15 +297,15 @@ class GraphMetricsSpec extends SparkSpec {
     assert(d >= 1 && d <= 3)
   }
 
-  test("linkPredFeatures: square graph — the two diagonals, hand-traced") {
+  test("linkPredFeatures: square graph — the two diagonals, hand-traced") (bothForms {
     val g = und(("a","b"),("b","c"),("c","d"),("d","a"))
     val lp = GraphMetrics.linkPredFeatures(g, maxZDeg = 32, minSupport = 2)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
     // (a,c) via b and d, (b,d) via a and c; every z has degree 2
     assert(lp.toSet == Set(("a","c",2L,1000000L), ("b","d",2L,1000000L)))
-  }
+  })
 
-  test("linkPredFeatures: existing edges excluded, hub cap silences capped wedges") {
+  test("linkPredFeatures: existing edges excluded, hub cap silences capped wedges") (bothForms {
     // star h-x1..x5 plus edge x1-x2: with minSupport=1 the (x_i, x_j)
     // pairs via h remain except the (x1, x2) edge; ra = floor(1e6/5)
     val star = und(("h","x1"),("h","x2"),("h","x3"),("h","x4"),("h","x5"),("x1","x2"))
@@ -317,7 +317,7 @@ class GraphMetricsSpec extends SparkSpec {
     // capping the hub out (deg 5 > 2) removes all its wedge evidence
     assert(GraphMetrics.linkPredFeatures(star, maxZDeg = 2, minSupport = 1)
       .collect().isEmpty)
-  }
+  })
 
   test("greedyColoring: proper, complete, contiguous colors, deterministic") {
     val rnd = new scala.util.Random(7)
