@@ -17,8 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `(u, v, w)` adds the entry u → v AND the entry v → u, so the CSR holds
   * exactly the rows of the `sym` union the Spark forms join against:
   * duplicate rows, both orientations of a pair and self-loops (two a → a
-  * entries) keep their multiplicity. `fwd` marks the entry that is the
-  * row's stored orientation, for anti-joins against the frame as given.
+  * entries) keep their multiplicity.
   *
   * Flat primitive arrays rather than a map of neighbor lists: the
   * operators that replay on it (Louvain rounds, σ-BFS, wedge counts) scan
@@ -29,15 +28,11 @@ final class LocalGraph private (
     val ids: Array[String],
     val off: Array[Int],
     val nbr: Array[Int],
-    val wt: Array[Long],
-    fwd: java.util.BitSet) extends Serializable {
+    val wt: Array[Long]) extends Serializable {
 
   def n: Int = ids.length
 
   def degree(i: Int): Int = off(i + 1) - off(i)
-
-  /** entry `e` is its row's stored orientation (row (u, v) → entry u → v) */
-  def stored(e: Int): Boolean = fwd.get(e)
 
   /** the dense id of `id`, or -1 when it is no endpoint */
   def index(id: String): Int = {
@@ -98,12 +93,11 @@ object LocalGraph {
     val pos = off.clone()
     val nbr = new Array[Int](off(ids.length))
     val wt = new Array[Long](nbr.length)
-    val fwd = new java.util.BitSet(nbr.length)
     for (i <- u.indices) {
       val (a, b) = (u(i), v(i))
-      nbr(pos(a)) = b; wt(pos(a)) = ws(i); fwd.set(pos(a)); pos(a) += 1
+      nbr(pos(a)) = b; wt(pos(a)) = ws(i); pos(a) += 1
       nbr(pos(b)) = a; wt(pos(b)) = ws(i); pos(b) += 1
     }
-    new LocalGraph(ids, off, nbr, wt, fwd)
+    new LocalGraph(ids, off, nbr, wt)
   }
 }

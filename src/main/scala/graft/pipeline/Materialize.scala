@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.{Kb, PropMeta, Tbox}
+import graft.core.{Kb, Pin, Pinned, PropMeta, Tbox}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -132,17 +132,15 @@ object Materialize {
     val prunedStore =
       if (preds.length <= MaxPredPushdown) stored.filter(col("pred").isin(preds: _*))
       else stored
-    val appendE = newE.join(prunedStore, Seq("src", "pred", "dst"), "anti")
-      .localCheckpoint() // pin the delta: the append below mutates its own input scan
-    val nE = appendE.count()
+    // pin the delta: the append below mutates its own input scan
+    val Pinned(appendE, nE, _, _) = Pin(newE.join(prunedStore, Seq("src", "pred", "dst"), "anti"))
     if (nE > 0)
       appendE // same salt formula as the initial writeSalted layout (dst = the skew key)
         .withColumn("salt", pmod(xxhash64(col("dst")), lit(Salts)).cast("int"))
         .write.mode("append").partitionBy("pred").parquet(io.pathOf(s"$prefix/edges"))
-    val appendN = nodesOf(appendE.select(col("src").as("subj"), col("pred"), col("dst").as("obj")))
-      .join(io.read(s"$prefix/nodes"), Seq("id"), "anti")
-      .localCheckpoint()
-    val nN = appendN.count()
+    val Pinned(appendN, nN, _, _) = Pin(
+      nodesOf(appendE.select(col("src").as("subj"), col("pred"), col("dst").as("obj")))
+        .join(io.read(s"$prefix/nodes"), Seq("id"), "anti"))
     if (nN > 0) {
       appendN.write.mode("append").parquet(io.pathOf(s"$prefix/nodes"))
       appendN.select(col("id").as("node"), clsOf(col("id")).as("cls"))

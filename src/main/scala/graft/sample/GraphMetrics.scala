@@ -581,8 +581,8 @@ object GraphMetrics {
     * over ranges of the smaller endpoint u counts each u's wedges
     * task-side (the Σdeg² output is pinned on the executors, never
     * collected). Above it, joins are key-equi on z and the edge anti-join
-    * removes existing edges. Both forms exclude exactly the pairs stored
-    * as `(u, w)` rows and give the same rows. */
+    * removes existing edges. Both forms exclude every pair an edge joins,
+    * in either stored orientation, and give the same rows. */
   def linkPredFeatures(und0: DataFrame, maxZDeg: Int = 32,
                        minSupport: Int = 2): DataFrame = {
     require(maxZDeg >= 1 && minSupport >= 1, s"maxZDeg=$maxZDeg minSupport=$minSupport")
@@ -637,7 +637,7 @@ object GraphMetrics {
               }
             }
           }
-          for (e <- g.off(u) until g.off(u + 1) if g.stored(e)) edge(g.nbr(e)) = true
+          for (e <- g.off(u) until g.off(u + 1)) edge(g.nbr(e)) = true
           val out = (0 until t).iterator.map(touched).filter(w => cn(w) >= minSupport && !edge(w))
             .map(w => Row(g.ids(u), g.ids(w), cn(w), ra(w))).toArray
           for (j <- 0 until t) { cn(touched(j)) = 0; ra(touched(j)) = 0 }
@@ -666,7 +666,7 @@ object GraphMetrics {
       .agg(count(lit(1)).as("cn"),
         sum(expr("1000000 div zdeg")).as("ra_micros"))
       .filter(col("cn") >= minSupport)
-    pairs.join(und.withColumnRenamed("v", "w"), Seq("u", "w"), "left_anti")
+    pairs.join(sym.withColumnRenamed("v", "w"), Seq("u", "w"), "left_anti")
       .select(col("u"), col("w"), col("cn"), col("ra_micros"))
   }
 

@@ -1,8 +1,9 @@
 package graft.sample
 
 import graft.core.{Kb, Pin}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSessions
 
 /** PageRank as the reference computes it (ontosample/_base.py:41-51 +
   * classic_samplers.py:239-259): ranks start at 1.0, and each sweep sets
@@ -16,45 +17,42 @@ import org.apache.spark.sql.functions._
   * is a *weighted random* choice, so trajectory differences are immaterial
   * (SURVEY §7.3 #2).
   *
-  * Scale shape: after the first sweep, every node with no in-links holds
-  * the constant rank d/n forever, so its outgoing contribution is a
-  * CONSTANT vector — computed once and added each round. Iterations then
-  * run only over the in-linked subgraph (on web-shaped graphs the
-  * source-only fraction is large: in the TPC-H KG it is ~80% of nodes and
-  * ~97% of edges). Each iteration is one shuffle on `dst`; lineage is
-  * truncated with localCheckpoint every `checkpointEvery` iterations.
-  */
+  * One sweep loop serves every entry point. Each sweep sets
+  *   pr'(v) = tele(v) + (1−d) · Σ_{u→v} pr(u) · w/outdeg(u)
+  * and the entry points differ only in the teleport vector `tele`, the
+  * start vector and the stop rule:
+  *   - [[compute]], [[computeWeighted]]: tele = d/n, start 1.0, a fixed
+  *     sweep count;
+  *   - [[personalized]]: tele = d·s(v), start s, a fixed sweep count;
+  *   - [[computeFrom]]: tele = d/n, start from a given vector, stopped at
+  *     an L1 residual.
+  * The uniform teleport and start are literal columns, so their lookups
+  * constant-fold out of the plan.
+  *
+  * Scale shape: from the first sweep on, every node with no in-links holds
+  * exactly tele(v), so its outgoing contribution is a CONSTANT vector —
+  * computed once and added each round. Iterations then run only over the
+  * in-linked subgraph (on web-shaped graphs the source-only fraction is
+  * large: in the TPC-H KG it is ~80% of nodes and ~97% of edges). Each
+  * sweep is one shuffle on `dst`; lineage is truncated with localCheckpoint
+  * every 10 sweeps, and every sweep under a residual stop (the residual job
+  * reads the sweep anyway).
+  *
+  * The loop runs with AQE off, in a CLONED session (shared SparkContext and
+  * cache, isolated SQLConf), so queries running concurrently on the
+  * caller's session keep their own settings. The sweeps are
+  * co-partitioned — the iterating adjacency is cached hash-partitioned on
+  * `src` and each sweep's output keeps hash(id) partitioning, so the rank
+  * join and the base join run exchange-free and only the mass aggregation
+  * shuffles (one exchange per sweep instead of three). AQE's post-shuffle
+  * coalescing re-writes partitioning between stages, which breaks that
+  * reuse and re-plans every one of the ~2·sweeps stages for no information
+  * gain (the shape is identical each sweep). */
 object PageRank {
 
-  /** `adaptive = false` disables AQE for the duration of the loop (the
-    * caller's setting is restored): the sweeps are co-partitioned — the
-    * iterating adjacency is cached hash-partitioned on `src` and each
-    * sweep's output keeps hash(id) partitioning, so the rank join and the
-    * base join run exchange-free and only the mass aggregation shuffles
-    * (one exchange per sweep instead of three). AQE's post-shuffle
-    * coalescing re-writes partitioning between stages, which silently
-    * breaks that reuse AND re-plans every one of the ~2·iterations stages
-    * for no information gain (the shape is identical each sweep). On a
-    * heavily skewed web graph where one node's in-degree dominates the
-    * mass agg, pass `adaptive = true` to trade the extra exchanges for
-    * AQE skew-splitting. */
-  def compute(kb: Kb, d: Double = 0.15, iterations: Int = 100,
-              checkpointEvery: Int = 10, adaptive: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSessions
-    // The AQE choice is scoped to a CLONED session (shared SparkContext and
-    // cache, isolated SQLConf) instead of toggling the caller's session
-    // conf: queries running concurrently on the caller's session (e.g.
-    // ForestFire's warmup Future) keep their own AQE setting, and two
-    // concurrent compute() calls cannot restore each other's stale values.
-    val caller = kb.spark
-    val scoped = GraftSessions.cloneWithConf(caller,
-      "spark.sql.adaptive.enabled" -> adaptive.toString)
-    GraftSessions.bind(computeInner(
-      GraftSessions.bind(kb.nodes, scoped),
-      GraftSessions.bind(kb.edges.select(col("src"), col("dst"))
-        .withColumn("w", lit(1.0)), scoped),
-      d, iterations, checkpointEvery), caller)
-  }
+  /** Reference PageRank: `iterations` sweeps from 1.0, teleport d/n. */
+  def compute(kb: Kb, d: Double = 0.15, iterations: Int = 100): DataFrame =
+    sweepLoop(kb.nodes, unitWeights(kb), d, Nil, None, iterations, None)._1
 
   /** WEIGHTED PageRank — the host-quotient / multigraph form: each edge
     * carries a multiplicity/weight `w` and a node's rank flows out in
@@ -64,17 +62,49 @@ object PageRank {
     * at |distinct pairs|. Unweighted [[compute]] is exactly this with
     * w = 1 (bit-identical arithmetic: pr·1.0/outdeg ≡ pr/outdeg). */
   def computeWeighted(nodes: DataFrame, weightedEdges: DataFrame,
-                      d: Double = 0.15, iterations: Int = 100,
-                      checkpointEvery: Int = 10, adaptive: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftSessions
-    val caller = nodes.sparkSession
-    val scoped = GraftSessions.cloneWithConf(caller,
-      "spark.sql.adaptive.enabled" -> adaptive.toString)
-    GraftSessions.bind(computeInner(
-      GraftSessions.bind(nodes, scoped),
-      GraftSessions.bind(weightedEdges
-        .select(col("src"), col("dst"), col("w").cast("double").as("w")), scoped),
-      d, iterations, checkpointEvery), caller)
+                      d: Double = 0.15, iterations: Int = 100): DataFrame =
+    sweepLoop(nodes, weightedEdges.select(col("src"), col("dst"),
+      col("w").cast("double").as("w")), d, Nil, None, iterations, None)._1
+
+  /** Residual-stopped PageRank from an ARBITRARY init vector — the
+    * incremental-maintenance primitive: after a recrawl changeset lands
+    * ([[graft.pipeline.Materialize.changeset]] shape), re-rank the updated
+    * graph WARM-STARTED from the previous fixed point instead of from 1.0.
+    * The fixed point of the Jacobi iteration is unique (the iteration
+    * matrix has spectral radius ≤ 1−d < 1), so the warm start changes only
+    * HOW MANY sweeps are needed, never what they converge to — for a small
+    * edge delta the old ranks are already near the new fixed point and the
+    * sweep count drops by the contraction-rate log of the initial error
+    * (the fe_pr_incremental query gates it on the cyclic web link graph
+    * with a 5% hash-planted edge delta: strictly fewer and ≥ 25% fewer warm
+    * sweeps, same fixed point. A depth-bounded DAG like the TPC-H KG
+    * converges exactly in depth+2 sweeps either way — warm starts pay on
+    * graphs with cycles, i.e. the web).
+    *
+    * Stops when the L1 residual Σ|pr_{t+1} − pr_t| ≤ tol (residual, not
+    * true-error — the standard practical criterion; tol/(d) bounds the
+    * true L1 error by the same contraction argument) or after `maxSweeps`.
+    *
+    * Returns (ranks, sweeps run). `init` rows are (id, pr); nodes missing
+    * from it start at 1.0 (so an empty init IS the cold start — new nodes
+    * from the changeset need no special casing). */
+  def computeFrom(kb: Kb, init: DataFrame, d: Double = 0.15,
+                  tol: Double = 1e-9, maxSweeps: Int = 200): (DataFrame, Int) =
+    sweepLoop(kb.nodes, unitWeights(kb), d, Nil, Some(init), maxSweeps, Some(tol))
+
+  /** Personalized PageRank (Jeh & Widom, "Scaling personalized web
+    * search", WWW'03 — the random surfer teleports to the SEED set, not
+    * uniformly): pr(v) = d·s(v) + (1−d)·Σ_{u→v} pr(u)/outdeg(u) with
+    * s(v) = 1/|seeds| on seeds, 0 elsewhere; init = s. Mass leaks through
+    * dangling nodes exactly like [[compute]] (Σ pr ≤ 1), and nodes the
+    * seeds cannot reach stay at 0 — the locality that makes PPR the
+    * standard seed-biased sampling/expansion score over a KG. The
+    * teleport vector is an IN-list (seed sets are user-scale, not
+    * graph-scale). */
+  def personalized(kb: Kb, seeds: Seq[String], d: Double = 0.15,
+                   iterations: Int = 30): DataFrame = {
+    require(seeds.nonEmpty, "personalized PageRank needs at least one seed")
+    sweepLoop(kb.nodes, unitWeights(kb), d, seeds, None, iterations, None)._1
   }
 
   /** target rows per sweep-loop shuffle partition (~64 MB of (id, pr)
@@ -86,20 +116,46 @@ object PageRank {
     * private cloned session, so the caller's conf is untouched. */
   val RowsPerSweepPartition: Long = 2L * 1024 * 1024
 
-  private def computeInner(nodesIn: DataFrame, edgesW0: DataFrame,
-                           d: Double, iterations: Int,
-                           checkpointEvery: Int): DataFrame = {
-    val n = nodesIn.count().toDouble
+  /** sweeps between materializations under a fixed sweep count */
+  private val MaterializeEvery = 10
+
+  private def unitWeights(kb: Kb): DataFrame =
+    kb.edges.select(col("src"), col("dst")).withColumn("w", lit(1.0))
+
+  /** The sweep loop. `seeds` empty is the uniform teleport d/n, else
+    * d·s(v); the start is `init` (1.0 where missing) when given, else 1.0
+    * or s. It runs `sweeps` sweeps, or fewer when the L1 residual reaches
+    * `tol`. Returns (ranks, sweeps run). */
+  private def sweepLoop(nodes0: DataFrame, edges0: DataFrame, d: Double,
+                        seeds: Seq[String], init: Option[DataFrame],
+                        sweeps: Int, tol: Option[Double]): (DataFrame, Int) = {
+    val caller = nodes0.sparkSession
+    val scoped = GraftSessions.cloneWithConf(caller, "spark.sql.adaptive.enabled" -> "false")
+    val nodes = GraftSessions.bind(nodes0.select("id"), scoped)
+    val s: Column => Column = id =>
+      when(id.isin(seeds: _*), lit(1.0 / seeds.size)).otherwise(lit(0.0))
+    val tele: Column => Column =
+      if (seeds.isEmpty) { val t = d / nodes.count().toDouble; _ => lit(t) }
+      else id => lit(d) * s(id)
+
     // materialize the caller's edge derivation ONCE: it feeds the outdeg
     // aggregate, the adj join and the const/iter split — un-materialized
     // it was re-evaluated 2-3× (for the TPC-H KG: a 6-way union with two
     // lineitem-scale distincts per evaluation; r6 stage evidence)
-    val edgesW = Pin(edgesW0)
-    val np = math.max(1L,
-      math.min(65536L, edgesW.rows / RowsPerSweepPartition)).toInt
-    // the session here is the compute()/computeWeighted() PRIVATE clone —
-    // setting its shuffle width cannot leak to the caller
-    nodesIn.sparkSession.conf.set("spark.sql.shuffle.partitions", np)
+    val edgesW = Pin(GraftSessions.bind(edges0, scoped))
+    scoped.conf.set("spark.sql.shuffle.partitions",
+      math.max(1L, math.min(65536L, edgesW.rows / RowsPerSweepPartition)))
+
+    // a per-node vector: a column over the node id, or (id, pr) rows
+    val start: Either[Column => Column, DataFrame] = init match {
+      case Some(rows) => Right(nodes
+        .join(GraftSessions.bind(rows.select(col("id"), col("pr")), scoped), Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("pr"), lit(1.0)).as("pr")).localCheckpoint(true))
+      case None => Left(if (seeds.isEmpty) _ => lit(1.0) else s)
+    }
+    val startRows = start.fold(f => nodes.select(col("id"), f(col("id")).as("pr")), identity)
+    if (sweeps == 0) return (GraftSessions.bind(startRows, caller), 0)
+
     // setup joins: outdeg is an aggregate of the pinned edges, so it
     // broadcasts on its counted size; dstNodes comes out of the adj join
     // and is hinted while the edge table fits. Sweep-loop joins untouched
@@ -108,8 +164,8 @@ object PageRank {
     val adj = edgesW.df.select("src", "dst", "w").join(outdeg, Seq("src")).cache()
     val dstNodes = adj.select(col("dst").as("id")).distinct().cache()
 
-    // edges from source-only nodes (pr = d/n from sweep 2 on) vs edges from
-    // in-linked nodes (pr evolves). The iterating slice is cached
+    // edges from source-only nodes (pr = tele from sweep 1 on) vs edges
+    // from in-linked nodes (pr evolves). The iterating slice is cached
     // hash-partitioned on src so every sweep's rank join co-partitions.
     val adjIter = adj.join(edgesW.broadcastIfFits(dstNodes.withColumnRenamed("id", "src")),
         Seq("src"), "left_semi")
@@ -117,156 +173,54 @@ object PageRank {
     val adjConst = adj.join(edgesW.broadcastIfFits(dstNodes.withColumnRenamed("id", "src")),
       Seq("src"), "left_anti")
 
-    def massOf(a: DataFrame, ranks: DataFrame): DataFrame = a
-      .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
+    // Σ_{u→v} pr(u)·w/outdeg(u) over the edges `a`; a column pr joins
+    // nothing (a literal constant-folds into the per-row arithmetic)
+    def massOf(a: DataFrame, pr: Either[Column => Column, DataFrame]): DataFrame = pr
+      .fold(f => a.withColumn("pr", f(col("src"))),
+        ranks => a.join(ranks.withColumnRenamed("id", "src"), Seq("src")))
       .select(col("dst"), (col("pr") * col("w") / col("outdeg")).as("c"))
       .groupBy("dst").agg(sum(col("c")).as("mass"))
 
-    if (iterations == 0) return nodesIn.select(col("id"), lit(1.0).as("pr"))
-
-    // the constant source-only contribution, folded into a per-node base
-    // vector so a sweep stays at two shuffles (mass agg + join). The
-    // source-only rank is a SCALAR (1.0 at sweep 1, d/n after), so the
-    // rank join of the general massOf constant-folds away — one less join
-    // inside each base build, same per-row arithmetic (lit(r)/outdeg sums
-    // over the identical groups).
-    def baseWith(r: Double): DataFrame = dstNodes
-      .join(adjConst.select(col("dst"), (lit(r) * col("w") / col("outdeg")).as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("mass"))
-          .withColumnRenamed("dst", "id"),
-        Seq("id"), "left_outer")
+    // the source-only contribution, folded into a per-node base vector so
+    // a sweep stays at two shuffles (mass agg + join)
+    def baseOf(pr: Either[Column => Column, DataFrame]): DataFrame = dstNodes
+      .join(massOf(adjConst, pr).withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("mass"), lit(0.0)).as("cmass"))
 
-    def sweep(ranksAll: DataFrame, base: DataFrame): DataFrame = {
-      val m0 = massOf(adjIter, ranksAll)
-      base.join(m0.withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
-        .select(col("id"), (lit(d / n) + lit(1 - d) *
-          (col("cmass") + coalesce(col("mass"), lit(0.0)))).as("pr"))
-    }
+    def sweep(ranks: DataFrame, base: DataFrame): DataFrame = base
+      .join(massOf(adjIter, Right(ranks)).withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
+      .select(col("id"), (tele(col("id")) + lit(1 - d) *
+        (col("cmass") + coalesce(col("mass"), lit(0.0)))).as("pr"))
 
-    // sweep 1: source-only nodes contribute at the init value 1.0; its
-    // base is consumed exactly ONCE, so it is left lazy — a checkpoint
-    // here was a pure scheduling barrier (the fixed setup phase is
-    // job-count bound at small scale, like the walk step floor)
-    val init = nodesIn.select(col("id"), lit(1.0).as("pr"))
-    var ranks = sweep(init, baseWith(1.0)).localCheckpoint(true)
+    // Σ|next − prev| over every node; a node missing from `next` is
+    // source-only and holds tele
+    def residual(prev: DataFrame, next: DataFrame): Double = prev
+      .withColumnRenamed("pr", "pr0").join(next, Seq("id"), "left_outer")
+      .agg(sum(abs(coalesce(col("pr"), tele(col("id"))) - col("pr0"))))
+      .first().getDouble(0)
 
-    // from sweep 2 on they sit at d/n forever; reused every sweep →
-    // checkpoint-materialized once
-    val base = baseWith(d / n).localCheckpoint(true)
-
-    var i = 1
-    while (i < iterations) {
-      val next = sweep(ranks, base)
-      ranks = if ((i + 1) % checkpointEvery == 0 || i + 1 == iterations)
+    // sweep 1 reads the start vector through a base of its own, consumed
+    // once, so it stays lazy and the sweep is materialized on its own; from
+    // sweep 2 on the source-only nodes sit at tele, and that base is reused
+    // every sweep → checkpoint-materialized once
+    lazy val base = baseOf(Left(tele)).localCheckpoint(true)
+    var ranks = startRows
+    var t = 0
+    var resid = Double.MaxValue
+    while (t < sweeps && tol.forall(resid > _)) {
+      val next = sweep(ranks, if (t == 0) baseOf(start) else base)
+      t += 1
+      val pinned = if (tol.isDefined || t == 1 || t % MaterializeEvery == 0 || t == sweeps)
         next.localCheckpoint(true) else next
-      i += 1
+      if (tol.isDefined) resid = residual(ranks, pinned)
+      ranks = pinned
     }
 
-    // final ranks: evolving dst-set ranks ∪ constant d/n source-only nodes
-    val sourceOnly = nodesIn.join(dstNodes, Seq("id"), "left_anti")
-      .select(col("id"), lit(d / n).as("pr"))
+    // final ranks: evolving dst-set ranks ∪ source-only nodes at tele
+    val sourceOnly = nodes.join(dstNodes, Seq("id"), "left_anti")
+      .select(col("id"), tele(col("id")).as("pr"))
     val out = ranks.unionAll(sourceOnly).localCheckpoint(true)
     adj.unpersist(); adjIter.unpersist(); dstNodes.unpersist()
-    out
-  }
-
-  /** Residual-stopped PageRank from an ARBITRARY init vector — the
-    * incremental-maintenance primitive: after a recrawl changeset lands
-    * ([[graft.pipeline.Materialize.changeset]] shape), re-rank the updated
-    * graph WARM-STARTED from the previous fixed point instead of from 1.0.
-    * The fixed point of the Jacobi iteration is unique (the iteration
-    * matrix has spectral radius ≤ 1−d < 1), so the warm start changes only
-    * HOW MANY sweeps are needed, never what they converge to — for a small
-    * edge delta the old ranks are already near the new fixed point and the
-    * sweep count drops by the contraction-rate log of the initial error
-    * (PrIncrementalProbe on the cyclic web link graph, 5% hash-planted
-    * edge delta, tol 1e-9: cold 52 → warm 27 sweeps at sf0.1, 48 → 28 at
-    * sf0.01, fixed points L1-equal to ~1e-9. A depth-bounded DAG like the
-    * TPC-H KG converges exactly in depth+2 sweeps either way — warm
-    * starts pay on graphs with cycles, i.e. the web).
-    *
-    * Stops when the L1 residual Σ|pr_{t+1} − pr_t| ≤ tol (residual, not
-    * true-error — the standard practical criterion; tol/(d) bounds the
-    * true L1 error by the same contraction argument). Each sweep is the
-    * same two-shuffle shape as [[compute]] plus one co-partitioned
-    * residual aggregate; the loop localCheckpoints every sweep because the
-    * residual job materializes the ranks anyway.
-    *
-    * Returns (ranks, sweeps run). `init` rows are (id, pr); nodes missing
-    * from it start at 1.0 (so an empty init IS the cold start — new nodes
-    * from the changeset need no special casing). */
-  def computeFrom(kb: Kb, init: DataFrame, d: Double = 0.15,
-                  tol: Double = 1e-9, maxSweeps: Int = 200,
-                  adaptive: Boolean = false): (DataFrame, Int) = {
-    import org.apache.spark.sql.graftshim.GraftSessions
-    val caller = kb.spark
-    val scoped = GraftSessions.cloneWithConf(caller,
-      "spark.sql.adaptive.enabled" -> adaptive.toString)
-    val nodes = GraftSessions.bind(kb.nodes.select("id"), scoped)
-    val edgesW = GraftSessions.bind(
-      kb.edges.select(col("src"), col("dst")).withColumn("w", lit(1.0)), scoped)
-    val initB = GraftSessions.bind(init.select(col("id"), col("pr")), scoped)
-    val n = nodes.count().toDouble
-    val outdeg = edgesW.groupBy("src").agg(sum(col("w")).as("outdeg"))
-    val adj = edgesW.join(outdeg, Seq("src")).repartition(col("src")).cache()
-    var ranks = nodes.join(initB, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("pr"), lit(1.0)).as("pr"))
-      .localCheckpoint(true)
-    var sweeps = 0
-    var resid = Double.MaxValue
-    while (resid > tol && sweeps < maxSweeps) {
-      val mass = adj.join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst"), (col("pr") * col("w") / col("outdeg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("mass"))
-      val next = ranks.select(col("id"))
-        .join(mass.withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
-        .select(col("id"), (lit(d / n) + lit(1 - d) *
-          coalesce(col("mass"), lit(0.0))).as("pr"))
-        .localCheckpoint(true)
-      resid = ranks.withColumnRenamed("pr", "pr0").join(next, Seq("id"))
-        .agg(sum(abs(col("pr") - col("pr0")))).first().getDouble(0)
-      ranks = next
-      sweeps += 1
-    }
-    adj.unpersist()
-    (GraftSessions.bind(ranks, caller), sweeps)
-  }
-
-  /** Personalized PageRank (Jeh & Widom, "Scaling personalized web
-    * search", WWW'03 — the random surfer teleports to the SEED set, not
-    * uniformly): pr(v) = d·s(v) + (1−d)·Σ_{u→v} pr(u)/outdeg(u) with
-    * s(v) = 1/|seeds| on seeds, 0 elsewhere; init = s. Mass leaks through
-    * dangling nodes exactly like [[compute]] (Σ pr ≤ 1), and nodes the
-    * seeds cannot reach stay at 0 — the locality that makes PPR the
-    * standard seed-biased sampling/expansion score over a KG.
-    *
-    * Scale shape: same per-sweep cost as [[compute]] — the adjacency is
-    * cached hash-partitioned on `src` and co-partitions with each sweep's
-    * output, so only the mass aggregation shuffles; the teleport vector
-    * is a broadcast IN-list (seed sets are user-scale, not graph-scale). */
-  def personalized(kb: Kb, seeds: Seq[String], d: Double = 0.15,
-                   iterations: Int = 30, checkpointEvery: Int = 10): DataFrame = {
-    require(seeds.nonEmpty, "personalized PageRank needs at least one seed")
-    val tele = when(col("id").isin(seeds: _*), lit(1.0 / seeds.size)).otherwise(lit(0.0))
-    val outdeg = kb.edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val adj = kb.edges.select("src", "dst").join(outdeg, Seq("src"))
-      .repartition(col("src")).cache()
-    val base = kb.nodes.select(col("id"), tele.as("s")).localCheckpoint(true)
-    var ranks = base.select(col("id"), col("s").as("pr"))
-    var i = 0
-    while (i < iterations) {
-      val mass = adj.join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst"), (col("pr") / col("outdeg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("mass"))
-      val next = base.join(mass.withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
-        .select(col("id"), (lit(d) * col("s") +
-          lit(1 - d) * coalesce(col("mass"), lit(0.0))).as("pr"))
-      i += 1
-      ranks = if (i % checkpointEvery == 0 || i == iterations)
-        next.localCheckpoint(true) else next
-    }
-    adj.unpersist()
-    ranks
+    (GraftSessions.bind(out, caller), t)
   }
 }

@@ -1,7 +1,7 @@
 package graft.sample
 
 import graft.SparkSpec
-import graft.fixtures.HepatitisLikeKb
+import graft.fixtures.{FamilyKb, HepatitisLikeKb}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,11 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("source-only shortcut matches the generic Jacobi iteration") {
-    val kb = HepatitisLikeKb.kb(spark).cache()
-    for (iters <- Seq(1, 2, 7)) {
+    // every in-linked node of the Hepatitis fixture lies on a cycle; the
+    // family tree's roots are source-only. 12 crosses the materialization
+    // at sweep 10.
+    for (kb <- Seq(HepatitisLikeKb.kb(spark), FamilyKb.kb(spark)).map(_.cache());
+         iters <- Seq(1, 2, 7, 12)) {
       val fast = PageRank.compute(kb, iterations = iters)
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       val slow = naive(kb, 0.15, iters)
@@ -58,6 +61,54 @@ class PageRankSpec extends SparkSpec {
       assert(math.abs(r.getDouble(1) - fixed(r.getString(0))) < 1e-9))
     // nodes missing from init start at 1.0 — empty init IS the cold start
     assert(sCold > 5)
+  }
+
+  /** naive residual-stopped Jacobi on the driver: start from `init` (1.0
+    * where missing), stop when Σ|pr_{t+1} − pr_t| ≤ tol or after maxSweeps */
+  private def naiveFrom(kb: graft.core.Kb, init: Map[String, Double], d: Double,
+                        tol: Double, maxSweeps: Int): (Map[String, Double], Int) = {
+    val nodes = kb.nodes.collect().map(_.getString(0))
+    val edges = kb.edges.select("src", "dst").collect().map(r => (r.getString(0), r.getString(1)))
+    val outdeg = edges.groupMapReduce(_._1)(_ => 1.0)(_ + _)
+    var pr = nodes.map(v => v -> init.getOrElse(v, 1.0)).toMap
+    var (t, resid) = (0, Double.MaxValue)
+    while (resid > tol && t < maxSweeps) {
+      val mass = edges.groupMapReduce(_._2) { case (u, _) => pr(u) / outdeg(u) }(_ + _)
+      val next = nodes.map(v => v -> (d / nodes.length + (1 - d) * mass.getOrElse(v, 0.0))).toMap
+      resid = nodes.map(v => math.abs(next(v) - pr(v))).sum
+      pr = next
+      t += 1
+    }
+    (pr, t)
+  }
+
+  test("computeFrom: a partial, off-fixed-point init matches the naive residual-stopped Jacobi") {
+    // a 6-cycle with a chord and a dangler, fed by two source-only nodes,
+    // plus an isolated node: the source-only split, cyclic contraction and
+    // the 1.0 default for nodes missing from init all take part
+    import spark.implicits._
+    val edges = ((0 until 6).map(i => (s"v$i", "l", s"v${(i + 1) % 6}")) ++
+      Seq(("v0", "l", "v3"), ("v2", "l", "d0"), ("s0", "l", "v1"), ("s0", "l", "d0"),
+        ("s1", "l", "v4"))).toDF("src", "pred", "dst")
+    val nodes = ((0 until 6).map(i => s"v$i") ++ Seq("d0", "s0", "s1", "x0")).toDF("id")
+    val kb = HepatitisLikeKb.kb(spark).copy(nodes = nodes, edges = edges)
+    def check(init: Map[String, Double]): (Map[String, Double], Int) = {
+      val (fast, sFast) = PageRank.computeFrom(kb, init.toSeq.toDF("id", "pr"),
+        tol = 1e-10, maxSweeps = 500)
+      val (slow, sSlow) = naiveFrom(kb, init, 0.15, 1e-10, 500)
+      assert(sFast === sSlow, s"sweeps: $sFast vs naive $sSlow from $init")
+      val got = fast.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(got.keySet === slow.keySet)
+      got.foreach { case (id, v) =>
+        assert(math.abs(v - slow(id)) < 1e-12, s"$id: $v vs ${slow(id)}") }
+      (got, sFast)
+    }
+    val (fixed, sweeps) =
+      check(Map("v0" -> 0.5, "v3" -> 2.0, "d0" -> 0.25, "s0" -> 3.0, "x0" -> 0.0))
+    assert(sweeps > 5)
+    // off the fixed point only at the isolated node: sweep 1's residual is
+    // that source-only move alone, so the stop comes one sweep later
+    assert(check(fixed + ("x0" -> 0.0))._2 === 2)
   }
 
   test("weighted pagerank equals edge-replicated multigraph ranks") {
@@ -92,17 +143,23 @@ class PageRankSpec extends SparkSpec {
     spark.conf.set(key, "true")
     try {
       // the loop runs with AQE off in a CLONED session; the caller's value
-      // must hold even DURING compute — probe it from a concurrent thread
+      // must hold even DURING every entry point — probe it from a
+      // concurrent thread until they are all done
       @volatile var seen = List.empty[String]
+      @volatile var done = false
       val probe = new Thread(() => {
-        (1 to 20).foreach { _ =>
-          seen ::= spark.conf.get(key); Thread.sleep(5)
-        }
+        while (!done) { seen ::= spark.conf.get(key); Thread.sleep(5) }
       })
       probe.start()
-      val out = PageRank.compute(kb, iterations = 3, adaptive = false)
-      assert(out.count() === kb.nodes.count())
-      probe.join()
+      val outs = try Seq(
+        PageRank.compute(kb, iterations = 3),
+        PageRank.computeWeighted(kb.nodes,
+          kb.edges.select(col("src"), col("dst"), lit(1.0).as("w")), iterations = 3),
+        PageRank.computeFrom(kb, kb.nodes.select(col("id"), lit(0.5).as("pr")),
+          maxSweeps = 3)._1,
+        PageRank.personalized(kb, Seq("p1"), iterations = 3))
+      finally { done = true; probe.join() }
+      outs.foreach(out => assert(out.count() === kb.nodes.count()))
       assert(seen.nonEmpty && seen.forall(_ == "true"),
         s"caller conf flickered during compute: ${seen.distinct}")
       assert(spark.conf.get(key) === "true")
@@ -128,9 +185,10 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("personalized PageRank matches the naive Jacobi reference") {
-    val kb = HepatitisLikeKb.kb(spark).cache()
-    val seeds = Seq("p1", "p2")
-    for (iters <- Seq(1, 3)) {
+    // m1 is a source-only seed: its teleport d·s differs from its start s
+    for ((kb, seeds) <- Seq(HepatitisLikeKb.kb(spark).cache() -> Seq("p1", "p2"),
+           FamilyKb.kb(spark).cache() -> Seq("m1", "m2"));
+         iters <- Seq(1, 3, 12)) {
       val fast = PageRank.personalized(kb, seeds, iterations = iters)
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       val slow = naivePpr(kb, seeds, 0.15, iters)
