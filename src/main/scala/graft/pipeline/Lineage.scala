@@ -1,20 +1,23 @@
 package graft.pipeline
 
+import graft.core.ParquetTableIO
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
 
 /** Per-stage checkpoint + lineage metrics (north_rule resumability):
   * every pipeline stage persists its output as a parquet checkpoint and
   * appends lineage rows — per-file row counts plus a stage-total row
   * carrying an order-independent content checksum. A completed stage
   * (marker + checkpoint present) is never recomputed on resume —
-  * `stage()` short-circuits to a scan. The `_GRAFT_DONE` marker carries
-  * the stage's read schema as JSON, so that scan (and the read-back after
-  * the write) is planned without a schema-inference job; an empty marker,
-  * written by an older build, falls back to the inferring read.
+  * `stage()` short-circuits to a scan. The stage is committed the way
+  * every `ParquetTableIO` table is: data, then lineage rows, then the
+  * `ParquetTableIO.Marker` holding the stage's read schema, so that scan
+  * (and the read-back after the write) is planned without a
+  * schema-inference job; an empty marker, written by an older build,
+  * falls back to the inferring read. The lineage table itself is a
+  * `ParquetTableIO` table under `baseDir`, appended through
+  * `TableIO.append`.
   *
   * The checksum is Σ xxhash64(row) over all columns — independent of
   * partitioning and row order, so it is stable across parallelism levels
@@ -37,11 +40,11 @@ object Lineage {
   val TotalFile = "_total_"
 
   def stagePath(baseDir: String, name: String) = s"$baseDir/stage=$name"
-  def lineagePath(baseDir: String) = s"$baseDir/lineage"
-  private def marker(baseDir: String, name: String) =
-    Paths.get(s"${stagePath(baseDir, name)}/_GRAFT_DONE")
+  private val LineageTable = "lineage"
+  def lineagePath(baseDir: String) = s"$baseDir/$LineageTable"
 
-  def isDone(baseDir: String, name: String): Boolean = Files.exists(marker(baseDir, name))
+  def isDone(baseDir: String, name: String): Boolean =
+    ParquetTableIO.isCommitted(stagePath(baseDir, name))
 
   /** Run (or resume) a checkpointed stage. */
   def stage(spark: SparkSession, baseDir: String, name: String)
@@ -61,13 +64,9 @@ object Lineage {
       val m = obs.get
       record(spark, baseDir, name,
         m("rows").asInstanceOf[Long], m("checksum").asInstanceOf[Long])
-      Files.createDirectories(Paths.get(path))
-      val readSchema = org.apache.spark.sql.graftshim.GraftTypes.asNullable(src.schema)
-      Files.write(marker(baseDir, name), readSchema.json.getBytes(UTF_8))
+      ParquetTableIO.commit(path, src)
     }
-    val json = new String(Files.readAllBytes(marker(baseDir, name)), UTF_8)
-    if (json.isEmpty) spark.read.parquet(path)
-    else spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(path)
+    ParquetTableIO.scan(spark, path)
   }
 
   /** The lineage table's layout (see the object doc). */
@@ -115,15 +114,14 @@ object Lineage {
         s"hold $footerRows rows but the write pass counted $totalRows")
     val all = perFileRows :+
       org.apache.spark.sql.Row(name, TotalFile, totalRows, checksum, ts)
-    spark.createDataFrame(
+    new ParquetTableIO(spark, baseDir).append(spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(all).asJava), LineageSchema)
-      .coalesce(1)
-      .write.mode("append").parquet(lineagePath(baseDir))
+      .coalesce(1), LineageTable)
   }
 
   def read(spark: SparkSession, baseDir: String): DataFrame =
-    spark.read.schema(LineageSchema).parquet(lineagePath(baseDir))
+    new ParquetTableIO(spark, baseDir).read(LineageTable)
 
   /** Per-stage totals from the `_total_` rows (rows + content checksum). */
   def totals(spark: SparkSession, baseDir: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.{Kb, Pin, Pinned, PropMeta, Tbox}
+import graft.core.{Kb, ParquetTableIO, Pin, Pinned, PropMeta, Tbox}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,13 +9,12 @@ import org.apache.spark.sql.functions._
   *
   * Canonical triples → the engine's KG fact tables. Head entities (high
   * in-degree objects) make `dst`-keyed aggregations/self-joins skew; a
-  * persisted `salt` column (xxhash64 % S over the full row) gives
-  * downstream jobs a ready two-phase key. Writes partition by `pred` (low
-  * cardinality, prunes predicate-filtered scans).
+  * persisted `salt` column (`ParquetTableIO.salted`: xxhash64(dst) %
+  * `ParquetTableIO.Salts`) gives downstream jobs a ready two-phase key.
+  * Writes partition by `pred` (low cardinality, prunes predicate-filtered
+  * scans).
   */
 object Materialize {
-
-  val Salts = 16
 
   def nodesOf(triples: DataFrame): DataFrame =
     triples.select(col("subj").as("id"))
@@ -83,12 +82,6 @@ object Materialize {
       when(col("op") === "add", lit("del")).otherwise(lit("add")).as("op"),
       col("subj"), col("pred"), col("obj"))
 
-  /** Write edges salted + partitioned; returns the written path. */
-  def writeEdges(triples: DataFrame, path: String): Unit =
-    triples.select(col("subj").as("src"), col("pred"), col("obj").as("dst"))
-      .withColumn("salt", pmod(xxhash64(col("src"), col("pred"), col("dst")), lit(Salts)).cast("int"))
-      .write.mode("overwrite").partitionBy("pred").parquet(path)
-
   /** Rows appended by one [[merge]] call (0/0 on a pure replay). */
   final case class MergeStats(newEdges: Long, newNodes: Long)
 
@@ -108,14 +101,16 @@ object Materialize {
     * predicate vocabulary — collected driver-side because predicates are a
     * bounded rule-defined set (guarded: above `MaxPredPushdown` distinct
     * preds the filter is skipped rather than building a giant IN list);
-    * (2) store the edges bucketed by `src` (`ParquetTableIO.writeBucketed`)
-    * and the store side of the anti-join needs no exchange; (3) the Iceberg
+    * (2) every store table is read against its committed schema and
+    * appended through `TableIO.append` in the layout its first write fixed
+    * (edges salted on `dst`, partitioned by `pred`), so a merge plans no
+    * schema-inference job and cannot fork the layout; (3) the Iceberg
     * binding replaces the whole read-filter-anti chain with `MERGE INTO` +
     * min/max file skipping. Append cost is ∝ increment size, never store
     * size. */
   val MaxPredPushdown = 1000
 
-  def merge(io: graft.core.ParquetTableIO, prefix: String, triples: DataFrame): MergeStats = {
+  def merge(io: ParquetTableIO, prefix: String, triples: DataFrame): MergeStats = {
     val newE = triples.select(col("subj").as("src"), col("pred"), col("obj").as("dst"))
       .distinct()
     if (!io.exists(s"$prefix/edges")) {
@@ -135,16 +130,14 @@ object Materialize {
     // pin the delta: the append below mutates its own input scan
     val Pinned(appendE, nE, _, _) = Pin(newE.join(prunedStore, Seq("src", "pred", "dst"), "anti"))
     if (nE > 0)
-      appendE // same salt formula as the initial writeSalted layout (dst = the skew key)
-        .withColumn("salt", pmod(xxhash64(col("dst")), lit(Salts)).cast("int"))
-        .write.mode("append").partitionBy("pred").parquet(io.pathOf(s"$prefix/edges"))
+      io.append(ParquetTableIO.salted(appendE, "dst"), s"$prefix/edges", Seq("pred"))
     val Pinned(appendN, nN, _, _) = Pin(
       nodesOf(appendE.select(col("src").as("subj"), col("pred"), col("dst").as("obj")))
         .join(io.read(s"$prefix/nodes"), Seq("id"), "anti"))
     if (nN > 0) {
-      appendN.write.mode("append").parquet(io.pathOf(s"$prefix/nodes"))
-      appendN.select(col("id").as("node"), clsOf(col("id")).as("cls"))
-        .write.mode("append").partitionBy("cls").parquet(io.pathOf(s"$prefix/types"))
+      io.append(appendN, s"$prefix/nodes")
+      io.append(appendN.select(col("id").as("node"), clsOf(col("id")).as("cls")),
+        s"$prefix/types", Seq("cls"))
     }
     MergeStats(nE, nN)
   }

@@ -145,11 +145,9 @@ object StreamingKg {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val stats = Materialize.merge(io, prefix, batch)
         import spark.implicits._
-        Seq((batchId, stats.newEdges, stats.newNodes,
-          java.time.Instant.now().toString))
+        val row = Seq((batchId, stats.newEdges, stats.newNodes, java.time.Instant.now().toString))
           .toDF("batch_id", "new_edges", "new_nodes", "recorded_at")
-          .coalesce(1)
-          .write.mode("append").parquet(io.pathOf(s"$prefix/merge_lineage"))
+        io.append(row.coalesce(1), s"$prefix/merge_lineage")
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -200,10 +198,8 @@ object StreamingKg {
           (io.exists(s"$prefix/compacted_ids") &&
             !io.read(s"$prefix/compacted_ids").filter(col("batch_id") === batchId).isEmpty)
         if (!seen)
-          LinkGraph.hostGraph(batch)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").partitionBy("batch_id")
-            .parquet(io.pathOf(table))
+          io.append(LinkGraph.hostGraph(batch).withColumn("batch_id", lit(batchId)),
+            table, Seq("batch_id"))
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -233,10 +229,8 @@ object StreamingKg {
         val seen = io.exists(table) &&
           !io.read(table).filter(col("batch_id") === batchId).isEmpty
         if (!seen)
-          KgPipeline.claimsOf(batch, aliases)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").partitionBy("batch_id")
-            .parquet(io.pathOf(table))
+          io.append(KgPipeline.claimsOf(batch, aliases).withColumn("batch_id", lit(batchId)),
+            table, Seq("batch_id"))
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -281,7 +275,7 @@ object StreamingKg {
       .localCheckpoint(true) // pin: the overwrite below replaces its own input scan
     val keep = prevIds.localCheckpoint(true)
     io.write(keep, s"$prefix/compacted_ids")
-    folded.write.mode("overwrite").partitionBy("batch_id").parquet(io.pathOf(table))
+    io.write(folded, table, Seq("batch_id"))
     folded.count()
   }
 }

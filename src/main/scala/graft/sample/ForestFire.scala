@@ -1,7 +1,7 @@
 package graft.sample
 
 import graft.core.{Determinism, Kb, Pin}
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,12 +18,12 @@ import org.apache.spark.sql.functions._
   * driver, in one loop — the sample is being collected anyway. Only the
   * step that spreads a frontier to the neighbors it burns next, and the
   * ignition pool it reads, have two forms: when the graph fits the
-  * broadcast envelope the draw collects it once and runs every round on
-  * the driver ([[LocalBurns]]); above it, each round is one Spark job over
-  * literal frontier data ([[SparkBurns]]). Both forms give the same
-  * sample. The reference's backlog deque (maxlen 100, hop 10) is a
-  * sequential artifact replaced by re-ignition; the tested invariants
-  * (exact n, LP retention) are preserved by the deterministic
+  * broadcast envelope the draw takes its rows from the pins' own jobs and
+  * runs every round on the driver ([[LocalBurns]]); above it, each round
+  * is one Spark job over literal frontier data ([[SparkBurns]]). Both
+  * forms give the same sample. The reference's backlog deque (maxlen 100,
+  * hop 10) is a sequential artifact replaced by re-ignition; the tested
+  * invariants (exact n, LP retention) are preserved by the deterministic
   * (round, hash) trim.
   *
   * LPCentralized (lpc_samplers.py:270-316): the first fire's queue is the
@@ -40,11 +40,12 @@ final class ForestFireSampler(
 
   def draw(n: Int): Drawn = {
     val spark = kb.spark
-    val nodes = Pin(kb.nodes)
-    val edges = Pin(kb.edges)
-    val burns: Burns =
-      if (nodes.fits && edges.fits) new LocalBurns(nodes.df, edges.df, n)
-      else new SparkBurns(nodes.df, edges.df, n)
+    val (nodes, nodeRows) = Pin.withRows(kb.nodes)
+    val (edges, edgeRows) = Pin.withRows(kb.edges)
+    val burns: Burns = (nodeRows, edgeRows) match {
+      case (Some(nr), Some(er)) => new LocalBurns(nr, er, n)
+      case _ => new SparkBurns(nodes.df, edges.df, n)
+    }
 
     // driver-side burn state: insertion order = (round, in-round hash) order
     val burned = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -181,20 +182,20 @@ final class ForestFireSampler(
     }
   }
 
-  /** The same ignition pool and burn picks over the two pinned tables
-    * collected to the driver — at most one broadcast envelope of rows,
-    * held for this draw only. Replays the Spark form byte for byte: a
-    * source burns its first geometric(p) unburned neighbors in
-    * (xxhash64(seed', src, dst), dst) order, with strings compared as
-    * Spark compares them. */
-  private final class LocalBurns(nodes: DataFrame, edges: DataFrame, n: Int) extends Burns {
+  /** The same ignition pool and burn picks over the rows of the two
+    * pinned tables — at most one broadcast envelope of rows each, returned
+    * by the pins' own jobs and held for this draw only. Replays the Spark
+    * form byte for byte: a source burns its first geometric(p) unburned
+    * neighbors in (xxhash64(seed', src, dst), dst) order, with strings
+    * compared as Spark compares them. */
+  private final class LocalBurns(nodeRows: Array[Row], edgeRows: Array[Row], n: Int)
+      extends Burns {
     private val nbrs: Map[String, Array[String]] =
-      edges.select("src", "dst").collect()
-        .groupBy(_.getString(0))
-        .map { case (src, rs) => src -> rs.map(_.getString(1)).distinct }
+      edgeRows.groupBy(_.getAs[String]("src"))
+        .map { case (src, rs) => src -> rs.map(_.getAs[String]("dst")).distinct }
 
     lazy val ignitionPool: Array[String] =
-      nodes.select("id").collect().map(_.getString(0))
+      nodeRows.map(_.getAs[String]("id"))
         .map(id => (Determinism.detHashJvm(seed ^ 0x55, id), id))
         .sorted(Ordering.Tuple2(Ordering.Long, Determinism.utf8Order))
         .take(poolSize(n)).map(_._2)

@@ -1,7 +1,7 @@
 package graft.sample
 
 import graft.core.{Determinism, Kb, Pin, Pinned}
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,10 +24,10 @@ import org.apache.spark.sql.functions._
   * driver, in one loop. Only the step that expands walker positions into
   * picks and teleport landings has two forms (a step is a pick from the
   * frontier ⋈ edges join, which never has to be materialized): when the
-  * graph fits the broadcast envelope the draw collects it once and
-  * replays every step on the driver ([[LocalSteps]]); above it, each step
-  * is one Spark job over literal frontier data ([[SparkSteps]]). Both
-  * forms give the same sample.
+  * graph fits the broadcast envelope the draw takes its rows from the
+  * pins' own jobs and replays every step on the driver ([[LocalSteps]]);
+  * above it, each step is one Spark job over literal frontier data
+  * ([[SparkSteps]]). Both forms give the same sample.
   *
   * The reference's single walker is sequential by nature; the parity
   * contract is its tests' invariants — exact node counts, LP retention —
@@ -42,9 +42,7 @@ final class WalkSampler(
     kb: Kb, seed: Long = 42L, jumpProb: Option[Double] = None,
     prioritized: Boolean = false, lpSeeds: Seq[String] = Nil, lpc: Boolean = false,
     walkers: Int = 16, maxSteps: Int = 2000, prIterations: Int = 100,
-    prRanks: Option[org.apache.spark.sql.DataFrame] = None,
-    bucketMinNodes: Long = WalkSampler.DefaultBucketMinNodes,
-    walkBuckets: Int = WalkSampler.DefaultWalkBuckets)
+    prRanks: Option[org.apache.spark.sql.DataFrame] = None)
   extends GraphSampler {
 
   import WalkSampler.{StepOut, WalkSteps}
@@ -59,10 +57,14 @@ final class WalkSampler(
     * table, and the finalize semi-joins (for the TPC-H KG each evaluation
     * re-runs a 6-way union with two lineitem-scale distincts; r6 stage
     * evidence) — and the per-step cached scans sit on the same
-    * materialized rows. The counted bytes of the two pins pick the step
-    * form. Lazy: built on first draw()/sample() use. */
-  private lazy val nodesPin: Pinned = Pin(kb.nodes)
-  private lazy val edgesPin: Pinned = Pin(kb.edges)
+    * materialized rows. An unweighted sampler's pins also return their
+    * rows when they fit the envelope ([[Pin.withRows]]): both present
+    * picks the driver step form, at no collect job of its own. Lazy: built
+    * on first draw()/sample() use. */
+  private def pin(df: DataFrame): (Pinned, Option[Array[Row]]) =
+    if (prioritized) (Pin(df), None) else Pin.withRows(df)
+  private lazy val (nodesPin, nodeRows) = pin(kb.nodes)
+  private lazy val (edgesPin, edgeRows) = pin(kb.edges)
   private lazy val kbW: Kb = kb.copy(nodes = nodesPin.df, edges = edgesPin.df)
 
   def draw(n: Int): Drawn = {
@@ -72,13 +74,15 @@ final class WalkSampler(
 
     // The step that turns walker positions into picks and teleport
     // landings has two forms. When both pinned tables fit the broadcast
-    // envelope, the draw collects them once and replays every step's
-    // picks on the driver; otherwise each step is one Spark job. A
+    // envelope, the draw replays every step's picks on the driver over
+    // the rows the pins returned; otherwise each step is one Spark job. A
     // prioritized pick is a floating-point window sum whose addition
-    // order Spark does not fix, so it always takes the Spark form.
-    val steps: WalkSteps =
-      if (!prioritized && nodesPin.fits && edgesPin.fits) new LocalSteps(kb)
-      else new SparkSteps(kb, nTotal)
+    // order Spark does not fix, so it always takes the Spark form (its
+    // pins return no rows).
+    val steps: WalkSteps = (nodeRows, edgeRows) match {
+      case (Some(nr), Some(er)) => new LocalSteps(nr, er)
+      case _ => new SparkSteps(kb, nTotal)
+    }
     val tierCum = steps.tierCum
 
     // walkers: all LP nodes when given; else the first min(walkers, n)
@@ -221,32 +225,14 @@ final class WalkSampler(
     // frontier hits nearly every bucket every step, so the filter prunes
     // ~nothing while the bucketed repartition costs cache balance and
     // parallelism — smp_rwj_200 6.3→7.5 s, smp_rwp_200 16.8→21.5 s in
-    // same-box A/B at sf0.1. Bucket pruning only pays when the per-bucket
-    // byte volume dwarfs the per-task scheduling floor — i.e. at the
-    // 100-TB shape, never at sf0.1 — so it is SIZE-GATED: below
-    // `bucketMinNodes` the cache keeps natural partitioning (the
-    // measured-faster local shape, and the cache entry stays plan-shared
-    // with other edge-table consumers); at or above it the cache is
-    // bucketed by hash(src) and every step's scan carries a driver-
-    // computed `bkt IN (frontier buckets)` pruning filter (the frontier is
-    // driver state; Determinism.xxhashJvm mirrors the bucket column
-    // byte-exactly), reading ~walkers/walkBuckets of the cache per step
-    // instead of all of it. The filter is a superset of the join —
-    // results are identical on both paths (SamplerSpec asserts equality).
+    // same-box A/B at sf0.1. The cache keeps natural partitioning, and the
+    // entry stays plan-shared with other edge-table consumers.)
     private val ranks =
       if (prioritized)
         prRanks.getOrElse(PageRank.compute(kb, iterations = prIterations))
           .select(col("id").as("dst"), col("pr").as("w"))
       else null
-    // gate proxy: nTotal (already counted above) instead of a dedicated
-    // |E| count job per draw; at web-graph densities |V| tracks |E| within
-    // the order of magnitude the gate cares about
-    private val bucketed = bucketMinNodes != Long.MaxValue && nTotal >= bucketMinNodes
-    private val nbrs0 = WalkSampler.neighborTable(kb, Option(ranks))
-    private val nbrs = (if (bucketed)
-        nbrs0.withColumn("bkt", pmod(xxhash64(col("src")), lit(walkBuckets)).cast("int"))
-          .repartition(walkBuckets, col("bkt"))
-      else nbrs0).cache()
+    private val nbrs = WalkSampler.neighborTable(kb, Option(ranks)).cache()
     // per-step SCAN width, derived from graph size (nTotal, the counted
     // proxy): the cache keeps its natural partitioning — for the TPC-H KG
     // a 68-partition union whose per-step scans cost ~68 near-empty task
@@ -257,7 +243,7 @@ final class WalkSampler(
     // join/pick results are byte-identical.
     private val scanParts = math.max(1, math.min(1024,
       (nTotal / WalkSampler.ScanRowsPerPartition).toInt))
-    private val nbrsScan = if (bucketed) nbrs else nbrs.coalesce(scanParts)
+    private val nbrsScan = nbrs.coalesce(scanParts)
     private val idxScan = nodesIdx.coalesce(scanParts)
 
     def firstInOrder(k: Int): Seq[String] =
@@ -292,16 +278,7 @@ final class WalkSampler(
       val stepping = spark.createDataset(
           stepFront.map { case (w, c) => (w, c, psV, usV) })(stepEnc)
         .toDF("walker", "cur", "ps", "us")
-
-      // bucketed cache: prune the scan to the frontier's buckets (driver-
-      // computed, superset of the join — identical results)
-      val scanNbrs =
-        if (bucketed && stepFront.nonEmpty) {
-          val bkts = stepFront.map { case (_, cur) =>
-            Determinism.pmodJvm(Determinism.xxhashJvm(cur), walkBuckets).toInt }.distinct
-          nbrs.filter(col("bkt").isin(bkts: _*))
-        } else nbrsScan
-      val cand = broadcast(stepping).join(scanNbrs, stepping("cur") === scanNbrs("src"))
+      val cand = broadcast(stepping).join(nbrsScan, stepping("cur") === nbrsScan("src"))
         .select(Seq(col("walker"), col("ps"), col("us"), col("src"), col("pred"), col("dst")) ++
           (if (prioritized) Seq(col("w")) else Nil): _*)
       val pickHash = Determinism.detHashC(col("ps"), col("walker"), col("pred"), col("dst"))
@@ -326,33 +303,19 @@ final class WalkSampler(
             .select(col("walker"), col("src"), col("pred"), col("dst"))
         }
 
-      // teleports: the driver-computed landing ranks are pushed into the
-      // cached node-index scan as a `trn IN (ranks)` pruning filter.
-      // nodesIdx is cached in bucket order (= trn order), so its batch
-      // min/max stats skip everything but the ≤|walkers| landing batches.
-      // The pruning filter shares the `bucketed` size gate: per-step isin
-      // LITERALS change every step, so below the gate the plan stays
-      // literal-free and byte-stable across steps (codegen-cache friendly
-      // — the full scan of a small cached index is cheaper than per-step
-      // plan churn). The IN-list is bounded like the FF burned set; above
-      // the bound (only possible with huge lpSeeds walker counts) the
-      // filter is dropped, never the join.
+      // teleports: the driver-computed landing ranks join the cached node
+      // index. The plan carries no per-step literals, so it stays
+      // byte-stable across steps (codegen-cache friendly).
       val picksOut = picks
         .select(col("walker"), col("dst").as("next"), col("src"), col("pred"),
           col("dst"), lit(true).as("viaEdge"))
       val withTele =
         if (tele.isEmpty) picksOut
-        else {
-          val idx =
-            if (bucketed && tele.size <= WalkSampler.MaxTeleInList)
-              nodesIdx.filter(col("trn").isin(tele.map(_._2).distinct: _*))
-            else idxScan
-          picksOut.unionAll(
-            broadcast(spark.createDataset(tele)(longPairEnc).toDF("walker", "trn"))
-              .join(idx.select("id", "trn"), Seq("trn"))
-              .select(col("walker"), col("id").as("next"), lit("").as("src"),
-                lit("").as("pred"), lit("").as("dst"), lit(false).as("viaEdge")))
-        }
+        else picksOut.unionAll(
+          broadcast(spark.createDataset(tele)(longPairEnc).toDF("walker", "trn"))
+            .join(idxScan.select("id", "trn"), Seq("trn"))
+            .select(col("walker"), col("id").as("next"), lit("").as("src"),
+              lit("").as("pred"), lit("").as("dst"), lit(false).as("viaEdge")))
       withTele.as[StepOut](outEnc).collect().toSeq
     }
 
@@ -363,19 +326,17 @@ final class WalkSampler(
     }
   }
 
-  /** The same teleport index and picks over the two pinned tables
-    * collected to the driver — at most one broadcast envelope of rows,
-    * held for this draw only. Replays the Spark form byte for byte: the
-    * index order is (tier, teleHash, id) because the rank bucket is
-    * monotone in the hash, and a pick is the minimum of (xxhash64(ps,
-    * walker, pred, dst), pred, dst) with strings compared as Spark
-    * compares them. */
-  private final class LocalSteps(kb: Kb) extends WalkSteps {
+  /** The same teleport index and picks over the rows of the two pinned
+    * tables — at most one broadcast envelope of rows each, returned by the
+    * pins' own jobs. Replays the Spark form byte for byte: the index order
+    * is (tier, teleHash, id) because the rank bucket is monotone in the
+    * hash, and a pick is the minimum of (xxhash64(ps, walker, pred, dst),
+    * pred, dst) with strings compared as Spark compares them. */
+  private final class LocalSteps(nodeRows: Array[Row], edgeRows: Array[Row]) extends WalkSteps {
     private val adj: Map[String, Array[(String, String)]] =
-      kb.edges.select("src", "pred", "dst").collect()
-        .groupBy(_.getString(0))
-        .map { case (src, rs) => src -> rs.map(r => (r.getString(1), r.getString(2))) }
-    private val nodes: Array[String] = kb.nodes.select("id").collect().map(_.getString(0))
+      edgeRows.groupBy(_.getAs[String]("src"))
+        .map { case (src, rs) => src -> rs.map(r => (r.getAs[String]("pred"), r.getAs[String]("dst"))) }
+    private val nodes: Array[String] = nodeRows.map(_.getAs[String]("id"))
 
     // LPC tiers (Samplers.lpcTiers): 0 = LP, 1 / 2 = out-neighbors of the
     // previous tier, 3 = everything else
@@ -424,26 +385,10 @@ object WalkSampler {
   final case class StepOut(walker: Long, next: String,
                            src: String, pred: String, dst: String, viaEdge: Boolean)
 
-  /** |V| (the cheap proxy for graph size — counted anyway at draw start)
-    * at which the loop switches to its big-graph shapes: the neighbor
-    * cache goes from natural partitioning (measured faster under the
-    * local per-task scheduling floor) to hash(src) buckets with per-step
-    * frontier pruning, and the teleport lookups gain their per-step
-    * `trn IN (landing ranks)` batch-pruning filter (below the gate the
-    * teleport plan stays literal-free and byte-stable across steps —
-    * codegen-cache friendly). sf0.1 is ~3 orders of magnitude below the
-    * default. */
-  val DefaultBucketMinNodes: Long = 100L * 1000 * 1000
-  /** Bucket fan-out for the gated cache: walkers ≪ buckets is what makes
-    * the pruning pay; 256 keeps per-step task count bounded. */
-  val DefaultWalkBuckets: Int = 256
-  /** Teleport-rank IN-list bound (mirrors the FF burned-set bound): above
-    * it the pruning filter is dropped, never the join. */
-  val MaxTeleInList: Int = 4096
-  /** Target rows per task for the per-step cached-table scans (below the
-    * bucket gate): the coalesce width is |V|/this — ~1 task at fixture
-    * scale (68 near-empty task dispatches per step otherwise), hundreds of
-    * ~10⁵-row tasks approaching the gate. */
+  /** Target rows per task for the per-step cached-table scans: the
+    * coalesce width is |V|/this (capped at 1024) — ~1 task at fixture
+    * scale (68 near-empty task dispatches per step otherwise), ~10⁵-row
+    * tasks on large graphs. */
   val ScanRowsPerPartition: Long = 131072L
 
   /** One step form of the walk loop: the teleport index and the
@@ -461,7 +406,7 @@ object WalkSampler {
     * prioritized (one O(|E|) join per draw; every step then reads ONLY
     * this table — no per-step rank probe), plain edges otherwise. Natural
     * partitioning is kept deliberately: a bucketed repartition was
-    * measured strictly slower (see the draw() comment). Exposed so plan
+    * measured strictly slower (see the SparkSteps comment). Exposed so plan
     * audits (ExplainAudit, PlanShapeSpec) exercise the exact shape the
     * engine caches. Callers cache the result. */
   private[graft] def neighborTable(

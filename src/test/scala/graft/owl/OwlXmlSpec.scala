@@ -99,23 +99,6 @@ class OwlXmlSpec extends SparkSpec {
     assert(io.read("family/edges").columns.contains("salt"))
   }
 
-  test("TableIO: co-bucketed tables equi-join without a shuffle") {
-    import org.apache.spark.sql.functions.col
-    val kb = FamilyKb.kb(spark)
-    val io = new ParquetTableIO(spark, java.nio.file.Files.createTempDirectory("tio_bk_").toString)
-    io.writeBucketed(kb.edges, "bk_edges_a", "src", buckets = 4)
-    io.writeBucketed(kb.edges, "bk_edges_b", "src", buckets = 4)
-    val a = io.readBucketed("bk_edges_a").select(col("src"), col("dst").as("d1"))
-    val b = io.readBucketed("bk_edges_b").select(col("src"), col("dst").as("d2"))
-    val joined = a.join(b.hint("merge"), Seq("src")) // force SMJ (no broadcast)
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"), plan) // co-located: no shuffle
-    // and the join is still correct
-    val expect = kb.edges.select(col("src"), col("dst").as("d1"))
-      .join(kb.edges.select(col("src"), col("dst").as("d2")), Seq("src")).count()
-    assert(joined.count() === expect)
-  }
-
   test("save_owl_class_expressions: indexed equivalentClass axioms, .owl appended") {
     import graft.expr._
     val dir = java.nio.file.Files.createTempDirectory("predictions_").toString

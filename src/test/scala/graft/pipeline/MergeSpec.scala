@@ -82,8 +82,20 @@ class MergeSpec extends SparkSpec {
     Materialize.merge(io, "kg", triplesDf(b1))
     Materialize.merge(io, "kg", triplesDf(b2))
     val bad = io.read("kg/edges")
-      .filter(col("salt") =!= pmod(xxhash64(col("dst")), lit(Materialize.Salts)).cast("int"))
+      .filter(col("salt") =!= pmod(xxhash64(col("dst")), lit(ParquetTableIO.Salts)).cast("int"))
       .count()
     assert(bad === 0L)
+  }
+
+  // the store tables are read against their committed schemas, so a
+  // replay merge runs no schema-inference job: 9 jobs with inferring
+  // reads of edges and nodes, at most 7 without them
+  test("a replay merge runs no schema-inference job") {
+    val io = freshIo()
+    Materialize.merge(io, "kg", triplesDf(b1))
+    val (stats, jobs) = org.apache.spark.graftshim.JobCount(spark.sparkContext)(
+      Materialize.merge(io, "kg", triplesDf(b1)))
+    assert(stats === Materialize.MergeStats(0L, 0L))
+    assert(jobs <= 7, s"replay merge ran $jobs jobs")
   }
 }

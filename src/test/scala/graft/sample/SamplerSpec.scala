@@ -69,28 +69,6 @@ class SamplerSpec extends SparkSpec {
     assert(nodeCount(s) === 50); edgesValid(s)
   }
 
-  // threshold -1 keeps this draw on the per-step path the gate is part of
-  test("rwj: bucketed neighbor cache (100-TB gate forced on) is byte-identical") { noBroadcast {
-    def run(minEdges: Long) = {
-      val s = new WalkSampler(kb, seed = 4, jumpProb = Some(0.1),
-        bucketMinNodes = minEdges, walkBuckets = 8).sample(50)
-      (nodeSet(s),
-        s.edges.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet)
-    }
-    val natural = run(Long.MaxValue) // gate can never fire
-    val bucketed = run(0L)           // gate always fires
-    assert(natural === bucketed)
-  }}
-
-  test("rwp: bucketed neighbor cache carries the rank weights identically") {
-    def run(minEdges: Long) = {
-      val s = new WalkSampler(kb, seed = 6, prioritized = true, prIterations = 20,
-        jumpProb = Some(0.1), bucketMinNodes = minEdges, walkBuckets = 8).sample(50)
-      nodeSet(s)
-    }
-    assert(run(Long.MaxValue) === run(0L))
-  }
-
   // ---- LPC (test_sampling.py:53-113): 50 nodes, ALL LP retained ----
 
   test("rn-lpc: 50 nodes, all LP retained") {
