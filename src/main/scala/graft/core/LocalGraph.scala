@@ -82,10 +82,17 @@ object LocalGraph {
     (p, graph)
   }
 
-  private def build(us: Array[String], vs: Array[String], ws: Array[Long]): LocalGraph = {
-    val ids = (us ++ vs).distinct.map(s => (UTF8String.fromString(s), s))
+  /** The one id dictionary of the driver forms: every distinct string of
+    * `ids` once, in [[Determinism.utf8Order]], and each one's dense id.
+    * Comparing two dense ids is then comparing the strings as Spark does. */
+  def dictionary(ids: Array[String]): (Array[String], Map[String, Int]) = {
+    val sorted = ids.distinct.map(s => (UTF8String.fromString(s), s))
       .sortWith((a, b) => a._1.binaryCompare(b._1) < 0).map(_._2)
-    val dense = ids.iterator.zipWithIndex.toMap
+    (sorted, sorted.iterator.zipWithIndex.toMap)
+  }
+
+  private def build(us: Array[String], vs: Array[String], ws: Array[Long]): LocalGraph = {
+    val (ids, dense) = dictionary(us ++ vs)
     val (u, v) = (us.map(dense), vs.map(dense))
     val off = new Array[Int](ids.length + 1)
     for (i <- u.indices) { off(u(i) + 1) += 1; off(v(i) + 1) += 1 }

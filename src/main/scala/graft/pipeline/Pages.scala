@@ -67,8 +67,12 @@ object Pages {
       col("lang"))
   }
 
+  /** `documents.parquet` is written outside the table layer and carries no
+    * committed read schema, so it is read with the columns
+    * [[fromDocuments]] consumes declared — no schema-inference job. */
   def fromDir(spark: SparkSession, dir: String): DataFrame =
-    fromDocuments(spark.read.parquet(s"$dir/documents.parquet"))
+    fromDocuments(spark.read.schema("doc_id bigint, text string, lang string")
+      .parquet(s"$dir/documents.parquet"))
 
   /** Dictionary/alias candidate table: surface → candidate entity + score
     * (north_star: "dictionary/alias entity-link scoring as a broadcast-join

@@ -229,7 +229,7 @@ object SamplerQueries {
     val kb = TpchKg.load(s, d).cache()
     val lp = lpOf(s, d)
     val n = 25
-    val pr10 = PageRank.compute(kb, iterations = 10).localCheckpoint(true)
+    val pr10 = PageRank.compute(kb, iterations = 10)
     val lpDf = s.createDataset(lp)(org.apache.spark.sql.Encoders.STRING).toDF("id")
     // the 20 samplers are independent (per-sampler data-keyed seeds, shared
     // read-only kb cache + rank table), and the iterative ones are

@@ -1,9 +1,10 @@
 package graft.sample
 
-import graft.core.{Kb, Pin}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.{Kb, LocalGraph, Pin, Pinned}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSessions
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** PageRank as the reference computes it (ontosample/_base.py:41-51 +
   * classic_samplers.py:239-259): ranks start at 1.0, and each sweep sets
@@ -26,20 +27,32 @@ import org.apache.spark.sql.graftshim.GraftSessions
   *   - [[personalized]]: tele = d·s(v), start s, a fixed sweep count;
   *   - [[computeFrom]]: tele = d/n, start from a given vector, stopped at
   *     an L1 residual.
-  * The uniform teleport and start are literal columns, so their lookups
-  * constant-fold out of the plan.
   *
-  * Scale shape: from the first sweep on, every node with no in-links holds
-  * exactly tele(v), so its outgoing contribution is a CONSTANT vector —
-  * computed once and added each round. Iterations then run only over the
-  * in-linked subgraph (on web-shaped graphs the source-only fraction is
-  * large: in the TPC-H KG it is ~80% of nodes and ~97% of edges). Each
-  * sweep is one shuffle on `dst`; lineage is truncated with localCheckpoint
-  * every 10 sweeps, and every sweep under a residual stop (the residual job
-  * reads the sweep anyway).
+  * The loop has two step forms, chosen by the one broadcast envelope
+  * ([[graft.core.Pinned.fits]]). When the pinned edges, the node ids and
+  * any init rows all fit, the sweeps run on the driver as plain array
+  * sweeps over an in-link CSR of dense ids (the flat layout
+  * [[graft.core.LocalGraph]] uses): the whole call is those pin jobs and a
+  * local relation back in the caller's session — no session clone, cache
+  * or checkpoint. Its sums
+  * run in an order fixed by the edge multiset, so its ranks are
+  * bit-identical at any parallelism; the Spark form's Jacobi sums run in
+  * shuffle order, so the two forms agree to rounding (PageRankSpec holds
+  * them within 1e-12·(1+pr) and to the same residual-stop sweep count).
   *
-  * The loop runs with AQE off, in a CLONED session (shared SparkContext and
-  * cache, isolated SQLConf), so queries running concurrently on the
+  * Above the envelope each sweep is Spark plans. The uniform teleport and
+  * start are literal columns, so their lookups constant-fold out of the
+  * plan. Scale shape: from the first sweep on, every node with no
+  * in-links holds exactly tele(v), so its outgoing contribution is a
+  * CONSTANT vector — computed once and added each round. Iterations then
+  * run only over the in-linked subgraph (on web-shaped graphs the
+  * source-only fraction is large: in the TPC-H KG it is ~80% of nodes and
+  * ~97% of edges). Each sweep is one shuffle on `dst`; lineage is
+  * truncated with localCheckpoint every 10 sweeps, and every sweep under a
+  * residual stop (the residual job reads the sweep anyway).
+  *
+  * That form runs with AQE off, in a CLONED session (shared SparkContext
+  * and cache, isolated SQLConf), so queries running concurrently on the
   * caller's session keep their own settings. The sweeps are
   * co-partitioned — the iterating adjacency is cached hash-partitioned on
   * `src` and each sweep's output keeps hash(id) partitioning, so the rank
@@ -122,27 +135,154 @@ object PageRank {
   private def unitWeights(kb: Kb): DataFrame =
     kb.edges.select(col("src"), col("dst")).withColumn("w", lit(1.0))
 
-  /** The sweep loop. `seeds` empty is the uniform teleport d/n, else
-    * d·s(v); the start is `init` (1.0 where missing) when given, else 1.0
-    * or s. It runs `sweeps` sweeps, or fewer when the L1 residual reaches
-    * `tol`. Returns (ranks, sweeps run). */
+  /** The sweep loop over `edges0`, a `(src, dst, w)` frame. `seeds` empty
+    * is the uniform teleport d/n, else d·s(v); the start is `init` (1.0
+    * where missing) when given, else 1.0 or s. It runs `sweeps` sweeps, or
+    * fewer when the L1 residual reaches `tol`. Returns (ranks, sweeps run).
+    *
+    * The edges are pinned with their rows; while each pin fits the
+    * envelope and holds no null, the node ids and then the init rows are
+    * pinned the same way, and the sweeps run on the driver
+    * ([[localLoop]]). Otherwise the Spark form ([[sparkLoop]]) runs over
+    * the pins taken so far. */
   private def sweepLoop(nodes0: DataFrame, edges0: DataFrame, d: Double,
+                        seeds: Seq[String], init: Option[DataFrame],
+                        sweeps: Int, tol: Option[Double]): (DataFrame, Int) = {
+    require(sweeps >= 0, s"sweeps=$sweeps")
+    val nodeIds = nodes0.select("id")
+    val typed = Seq(edges0.schema("src"), edges0.schema("dst"), nodeIds.schema("id"))
+        .forall(_.dataType == StringType) && edges0.schema("w").dataType == DoubleType &&
+      init.forall(_.schema("id").dataType == StringType)
+    val (edges, edgeRows) = if (typed) pinRows(edges0) else (Pin(edges0), None)
+    val nodes = edgeRows.map(_ => pinRows(nodeIds))
+    val starts = for (rows <- init; _ <- nodes.flatMap(_._2))
+      yield pinRows(rows.select(col("id"), coalesce(col("pr"), lit(1.0)).as("pr")))
+    val local = for {
+      es <- edgeRows
+      ns <- nodes.flatMap(_._2)
+      // Some(None) without an init; None when its rows are not held
+      is <- if (init.isEmpty) Some(None) else starts.flatMap(_._2).map(Some(_))
+      out <- localLoop(nodes0.sparkSession, ns.map(_.getString(0)), es, is, d, seeds, sweeps, tol)
+    } yield out
+    local.getOrElse(sparkLoop(nodes.fold(nodeIds)(_._1.df), nodes.map(_._1.rows), edges, d,
+      seeds, starts.map(_._1.df).orElse(init), sweeps, tol))
+  }
+
+  /** [[Pin.withRows]], keeping the rows only when none holds a null: a null
+    * id or weight has join semantics the Spark form owns. */
+  private def pinRows(df: DataFrame): (Pinned, Option[Array[Row]]) = {
+    val (p, rows) = Pin.withRows(df)
+    (p, rows.filterNot(_.exists(_.anyNull)))
+  }
+
+  /** The sweeps on the driver over the collected rows: `nodeIds` one per
+    * node row, `edges` as `(src, dst, w)`, `init` as `(id, pr)` with pr
+    * already defaulted to 1.0. Every id is a dense int of
+    * [[LocalGraph.dictionary]]; the edges form an in-link CSR sorted by
+    * (dst, src, w), so each node's in-contributions, and each outdeg = Σw,
+    * are summed in one order fixed by the edge multiset alone — the ranks
+    * are bit-identical however the rows were partitioned.
+    *
+    * It mirrors the Spark form row for row: n is the node-row count;
+    * duplicate edges and duplicate start rows contribute multiply;
+    * dangling mass leaks; a source-only endpoint contributes its start
+    * value at sweep 1 under a column start (1.0 or s, node row or not),
+    * its start rows' sum under an init, and tele after; the residual
+    * sweeps over the previous rows (the start rows at sweep 1, the dst rows
+    * after); the output is every dst plus the node rows that are no dst,
+    * those at tele — or the start rows when `sweeps` is 0. None, for the
+    * Spark form, when a source's Σw is 0 (its w/outdeg divides by zero). */
+  private def localLoop(spark: SparkSession, nodeIds: Array[String], edges: Array[Row],
+                        init: Option[Array[Row]], d: Double, seeds: Seq[String],
+                        sweeps: Int, tol: Option[Double]): Option[(DataFrame, Int)] = {
+    val (ids, dense) = LocalGraph.dictionary(
+      nodeIds ++ edges.map(_.getString(0)) ++ edges.map(_.getString(1)))
+    val n = ids.length
+    val (src, dst, w) = (edges.map(r => dense(r.getString(0))),
+      edges.map(r => dense(r.getString(1))), edges.map(_.getDouble(2)))
+    val order = Array.range(0, edges.length).sortWith { (a, b) =>
+      if (dst(a) != dst(b)) dst(a) < dst(b)
+      else if (src(a) != src(b)) src(a) < src(b)
+      else java.lang.Double.compare(w(a), w(b)) < 0
+    }
+    val inOff = new Array[Int](n + 1)
+    dst.foreach(v => inOff(v + 1) += 1)
+    for (v <- 1 to n) inOff(v) += inOff(v - 1)
+    val (inSrc, inW) = (order.map(src), order.map(w))
+    val outdeg = new Array[Double](n)
+    for (e <- inSrc.indices) outdeg(inSrc(e)) += inW(e)
+    if (inSrc.exists(outdeg(_) == 0.0)) return None
+    val dsts = (0 until n).filter(v => inOff(v + 1) > inOff(v)).toArray
+    val isDst = new Array[Boolean](n)
+    dsts.foreach(isDst(_) = true)
+
+    val seedSet = seeds.toSet
+    val s = ids.map(id => if (seedSet(id)) 1.0 / seeds.size else 0.0)
+    val tele = if (seeds.isEmpty) Array.fill(n)(d / nodeIds.length.toDouble) else s.map(d * _)
+    // the column start (1.0 or s) and the start rows, (dense id, pr): one
+    // per node row, or one per node row and matching init row (1.0 when
+    // none matches)
+    val start = if (seeds.isEmpty) Array.fill(n)(1.0) else s
+    val startRows: Array[(Int, Double)] = init match {
+      case None => nodeIds.map(dense).map(i => (i, start(i)))
+      case Some(rows) =>
+        val byId = rows.groupMap(_.getString(0))(_.getDouble(1))
+        nodeIds.flatMap(id => byId.getOrElse(id, Array(1.0)).map(dense(id) -> _))
+    }
+    // x(u): what source u spreads over its out-edges in the next sweep
+    val x = new Array[Double](n)
+    if (init.isEmpty) for (u <- 0 until n if !isDst(u)) x(u) = start(u)
+    for ((u, pr) <- startRows if isDst(u) || init.isDefined) x(u) += pr
+
+    val next = new Array[Double](n)
+    var t = 0
+    var resid = Double.MaxValue
+    while (t < sweeps && tol.forall(resid > _)) {
+      for (v <- dsts) {
+        var mass = 0.0
+        for (e <- inOff(v) until inOff(v + 1)) mass += x(inSrc(e)) * inW(e) / outdeg(inSrc(e))
+        next(v) = tele(v) + (1 - d) * mass
+      }
+      if (tol.isDefined) resid =
+        if (t == 0) startRows.map { case (u, pr) =>
+          math.abs((if (isDst(u)) next(u) else tele(u)) - pr) }.sum
+        else dsts.map(v => math.abs(next(v) - x(v))).sum
+      for (u <- 0 until n) x(u) = if (isDst(u)) next(u) else tele(u)
+      t += 1
+    }
+
+    val ranks =
+      if (t == 0) startRows.map { case (u, pr) => Row(ids(u), pr) }
+      else dsts.map(v => Row(ids(v), next(v)))
+    val rows = if (sweeps == 0) ranks
+      else ranks ++ nodeIds.map(dense).filterNot(isDst).map(u => Row(ids(u), tele(u)))
+    Some((spark.createDataFrame(java.util.Arrays.asList(rows: _*), RankSchema), t))
+  }
+
+  private val RankSchema = StructType(Seq(StructField("id", StringType),
+    StructField("pr", DoubleType, nullable = false)))
+
+  /** The sweeps as Spark plans over the pinned edges, in a session clone
+    * with AQE off. `nodes0` holds the node ids, `n` their row count when
+    * already counted. */
+  private def sparkLoop(nodes0: DataFrame, n: Option[Long], edges: Pinned, d: Double,
                         seeds: Seq[String], init: Option[DataFrame],
                         sweeps: Int, tol: Option[Double]): (DataFrame, Int) = {
     val caller = nodes0.sparkSession
     val scoped = GraftSessions.cloneWithConf(caller, "spark.sql.adaptive.enabled" -> "false")
-    val nodes = GraftSessions.bind(nodes0.select("id"), scoped)
+    val nodes = GraftSessions.bind(nodes0, scoped)
     val s: Column => Column = id =>
       when(id.isin(seeds: _*), lit(1.0 / seeds.size)).otherwise(lit(0.0))
     val tele: Column => Column =
-      if (seeds.isEmpty) { val t = d / nodes.count().toDouble; _ => lit(t) }
+      if (seeds.isEmpty) { val t = d / n.getOrElse(nodes.count()).toDouble; _ => lit(t) }
       else id => lit(d) * s(id)
 
-    // materialize the caller's edge derivation ONCE: it feeds the outdeg
-    // aggregate, the adj join and the const/iter split — un-materialized
-    // it was re-evaluated 2-3× (for the TPC-H KG: a 6-way union with two
-    // lineitem-scale distincts per evaluation; r6 stage evidence)
-    val edgesW = Pin(GraftSessions.bind(edges0, scoped))
+    // the caller's edge derivation is materialized ONCE by the pin: it
+    // feeds the outdeg aggregate, the adj join and the const/iter split —
+    // un-materialized it was re-evaluated 2-3× (for the TPC-H KG: a 6-way
+    // union with two lineitem-scale distincts per evaluation; r6 stage
+    // evidence)
+    val edgesW = edges.copy(df = GraftSessions.bind(edges.df, scoped))
     scoped.conf.set("spark.sql.shuffle.partitions",
       math.max(1L, math.min(65536L, edgesW.rows / RowsPerSweepPartition)))
 
@@ -196,7 +336,7 @@ object PageRank {
     // source-only and holds tele
     def residual(prev: DataFrame, next: DataFrame): Double = prev
       .withColumnRenamed("pr", "pr0").join(next, Seq("id"), "left_outer")
-      .agg(sum(abs(coalesce(col("pr"), tele(col("id"))) - col("pr0"))))
+      .agg(coalesce(sum(abs(coalesce(col("pr"), tele(col("id"))) - col("pr0"))), lit(0.0)))
       .first().getDouble(0)
 
     // sweep 1 reads the start vector through a base of its own, consumed

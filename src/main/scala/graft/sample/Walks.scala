@@ -207,9 +207,11 @@ final class WalkSampler(
 
     // prRanks lets a caller running SEVERAL prioritized samplers over the
     // same graph compute the (identical) rank table once and share it.
-    // PageRank.compute returns its sweep loop's final localCheckpoint (the
-    // in-linked ranks ∪ the source-only nodes at d/n), bound back to the
-    // caller's session, so this projection is a cheap scan.
+    // PageRank.compute returns materialized ranks (the in-linked ranks ∪
+    // the source-only nodes at d/n) in the caller's session — a local
+    // relation when its graph fits the broadcast envelope, the sweep
+    // loop's final localCheckpoint above it — so this projection is a
+    // cheap scan.
     //
     // The rank table is joined INTO the neighbor table ONCE per draw (one
     // O(|E|) dst-keyed join, amortized over up to maxSteps steps) rather

@@ -100,8 +100,6 @@ class PinSpec extends SparkSpec {
       und, Seq("o0", "o7", "p3").toDF("id"), 3))
     sameUnderNoBroadcast("linkPredFeatures")(graft.sample.GraphMetrics.linkPredFeatures(und))
     sameUnderNoBroadcast("entitySummaries")(KgStats.entitySummaries(edges, 2))
-    sameUnderNoBroadcast("pagerank")(graft.sample.PageRank.compute(
-      graft.fixtures.HepatitisLikeKb.kb(spark), iterations = 10))
     // 12 sources asserting conflicting objects for 40 (subj, pred) items
     val claims = spark.range(0, 480, 1, 3).select(
       concat(lit("s"), col("id") % 12).as("src"), concat(lit("e"), col("id") % 40).as("subj"),
