@@ -182,9 +182,9 @@ object Entailment {
     * partOf — chain hundreds deep, so at cluster scale (where every round
     * is a full shuffle BARRIER) doubling's O(log diameter) rounds win even
     * though each round's join is denser. Each round is ONE self-equi-join
-    * on the mid column + a distinct, localCheckpointed so the convergence
-    * count and the next round's two scans re-read materialized rows
-    * instead of re-running the whole chain. Cycles saturate instead of
+    * on the mid column + a distinct, pinned so the convergence test reads
+    * the pin's counted rows and the next round's two scans re-read
+    * materialized rows instead of re-running the whole chain. Cycles saturate instead of
     * looping: closure of a cycle contains (x, x) — e+ semantics, no
     * reflexive padding for nodes not on a cycle.
     *
@@ -197,8 +197,7 @@ object Entailment {
     * `maxRounds` raises — a silent cap would return a WRONG (partial)
     * closure. */
   def transitiveClosure(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
-    var cur = edges.select(col("src"), col("dst")).distinct().localCheckpoint(true)
-    var n = cur.count()
+    var cur = Pin(edges.select(col("src"), col("dst")).distinct())
     var round = 0
     while (true) {
       round += 1
@@ -206,19 +205,15 @@ object Entailment {
         throw new IllegalStateException(
           s"transitive closure not converged after $maxRounds doubling rounds " +
             s"(diameter > ${BigInt(2).pow(maxRounds)})")
-      val next = cur.unionAll(
-          cur.select(col("src"), col("dst").as("mid"))
-            .join(cur.select(col("src").as("mid"), col("dst")), Seq("mid"))
+      val next = Pin(cur.df.unionAll(
+          cur.df.select(col("src"), col("dst").as("mid"))
+            .join(cur.df.select(col("src").as("mid"), col("dst")), Seq("mid"))
             .select(col("src"), col("dst")))
-        .distinct().localCheckpoint(true)
-      val m = next.count()
-      val prev = cur
+        .distinct())
+      if (next.rows == cur.rows) return next.df
       cur = next
-      if (m == n) { prev.unpersist(); return cur }
-      prev.unpersist()
-      n = m
     }
-    cur // unreachable
+    cur.df // unreachable
   }
 
   /** TRANSITIVE REDUCTION of a DAG relation — the inverse hygiene pass of
@@ -239,9 +234,9 @@ object Entailment {
     * as its unique minimal generator (ReductionSpec: closure ∘ reduction
     * = identity on closed DAGs, reduction ∘ closure = reduction). */
   def transitiveReduction(edges0: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val e = edges0.select(col("src"), col("dst")).distinct()
-      .filter(col("src") =!= col("dst")).localCheckpoint(true)
-    val tc = transitiveClosure(e, maxRounds).localCheckpoint(true)
+    val e = Pin(edges0.select(col("src"), col("dst")).distinct()
+      .filter(col("src") =!= col("dst"))).df
+    val tc = Pin(transitiveClosure(e, maxRounds)).df
     if (!tc.filter(col("src") === col("dst")).isEmpty)
       throw new IllegalStateException(
         "transitive reduction needs a DAG — condense cycles (Scc) first")

@@ -159,7 +159,7 @@ object KgStats {
     var colors = nodes.join(classSets, Seq("node"), "left")
       .select(col("node"), md5(coalesce(col("cs"), lit("")).cast("binary")).as("color"))
     for (_ <- 1 to rounds) {
-      val c = colors.localCheckpoint(true)
+      val c = Pin(colors).df
       val e = edges
         .join(c.withColumnRenamed("node", "src").withColumnRenamed("color", "src_color"), Seq("src"))
         .join(c.withColumnRenamed("node", "dst").withColumnRenamed("color", "dst_color"), Seq("dst"))
@@ -193,7 +193,7 @@ object KgStats {
     * summary-sized, so the member-count joins at the end are broadcast
     * territory at any scale. */
   def wlQuotient(edges: DataFrame, types: DataFrame, rounds: Int): DataFrame = {
-    val colors = wlColors(edges, types, rounds).localCheckpoint(true)
+    val colors = Pin(wlColors(edges, types, rounds)).df
     val members = colors.groupBy(col("color")).agg(count(lit(1)).as("n_members"))
     edges
       .join(colors.withColumnRenamed("node", "src")

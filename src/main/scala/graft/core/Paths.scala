@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * joined on the chain variable — exactly the BGP shape, so AQE picks the
   * physical join per size. `closureFrom` is semi-naive BFS (the Datalog
   * evaluation strategy): the step relation is materialized ONCE
-  * (localCheckpoint), each round is one keyed equi-join (frontier ⋈ step)
+  * (`Pin`), each round is one keyed equi-join (frontier ⋈ step)
   * + one anti-join against the reach set, both map-side prunable; rounds
   * = graph eccentricity from the seeds, the same bound as the CC/k-core
   * loops. Lineage is truncated per round so paper-length closures keep a
@@ -105,35 +105,34 @@ object Paths {
     require(depthLimit.forall(_ >= 1), "depthLimit must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    val step = pairs(edges, e).distinct().localCheckpoint(true)
+    val step = Pin(pairs(edges, e).distinct()).df
     try {
       val seed = sources.toDF("node")
       // includeZero = SPARQL `e*`: the seeds themselves are reachable by
       // the zero-length path at dist 0 — a seed re-reached through a cycle
       // keeps MIN dist 0 because the anti-join below already knows it
       val zero = seed.withColumn("dist", lit(0))
-      var frontier = step.join(broadcast(seed), step("s") === seed("node"))
+      val hop1 = step.join(broadcast(seed), step("s") === seed("node"))
         .select(step("o").as("node")).distinct()
         .withColumn("dist", lit(1))
-      if (includeZero)
-        frontier = frontier.join(zero.select("node"), Seq("node"), "left_anti")
-      frontier = frontier.localCheckpoint(true)
-      var reach = if (includeZero) zero.unionAll(frontier) else frontier
+      var frontier = Pin(
+        if (includeZero) hop1.join(zero.select("node"), Seq("node"), "left_anti") else hop1)
+      var reach = if (includeZero) zero.unionAll(frontier.df) else frontier.df
       var round = 1
-      var done = frontier.isEmpty
+      var done = frontier.rows == 0
       // depthLimit = bounded BFS (crawl-to-depth-D semantics): stop
       // expanding once dist == D instead of raising on non-convergence —
       // an unconverged CRAWL is the normal case, unlike a closure
       while (!done && depthLimit.forall(round < _)) {
         round += 1
         require(round <= maxRounds, s"closure did not converge in $maxRounds rounds")
-        val next = step.join(frontier, step("s") === frontier("node"))
+        val next = step.join(frontier.df, step("s") === frontier.df("node"))
           .select(step("o").as("node")).distinct()
-        val fresh = next.join(reach, Seq("node"), "left_anti")
-          .withColumn("dist", lit(round)).localCheckpoint(true)
-        if (fresh.isEmpty) done = true
+        val fresh = Pin(next.join(reach, Seq("node"), "left_anti")
+          .withColumn("dist", lit(round)))
+        if (fresh.rows == 0) done = true
         else {
-          reach = reach.unionAll(fresh).localCheckpoint(true)
+          reach = Pin(reach.unionAll(fresh.df)).df
           frontier = fresh
         }
       }
@@ -155,11 +154,11 @@ object Paths {
     * current dist table keeping STRICT improvements only — the semi-naive
     * delta, so a converged region stops generating work even while a far
     * region still relaxes. Rounds ≤ longest shortest path in HOPS (not
-    * weight), the same eccentricity bound as BFS; each round
-    * localCheckpoints so lineage stays flat. Non-convergence inside
-    * `maxRounds` raises rather than returning partial distances (with
-    * non-negative weights a round count above |V| means the input violated
-    * the contract). */
+    * weight), the same eccentricity bound as BFS; each round is pinned
+    * so lineage stays flat and the loop reads the pin's counted rows.
+    * Non-convergence inside `maxRounds` raises rather than returning
+    * partial distances (with non-negative weights a round count above |V|
+    * means the input violated the contract). */
   def weightedSssp(
       edges: DataFrame,
       sources: Seq[String],
@@ -167,31 +166,29 @@ object Paths {
     require(sources.nonEmpty, "weightedSssp needs at least one seed")
     val spark = edges.sparkSession
     import spark.implicits._
-    val step = edges.select(col("src"), col("dst"),
-        col("weight").cast("long").as("weight"))
-      .localCheckpoint(true)
+    val step = Pin(edges.select(col("src"), col("dst"),
+        col("weight").cast("long").as("weight"))).df
     try {
-      var dist = sources.distinct.toDF("node").withColumn("dist", lit(0L))
-        .localCheckpoint(true)
-      var frontier = dist
+      val seeded = Pin(sources.distinct.toDF("node").withColumn("dist", lit(0L)))
+      var dist = seeded.df
+      var frontier = seeded
       var round = 0
-      while (!frontier.isEmpty) {
+      while (frontier.rows > 0) {
         round += 1
         require(round <= maxRounds,
           s"SSSP did not converge in $maxRounds rounds — negative weights " +
             "or a hop-diameter above the bound")
-        val relaxed = step.join(frontier, step("src") === frontier("node"))
+        val relaxed = step.join(frontier.df, step("src") === frontier.df("node"))
           .select(col("dst").as("node"),
             (col("dist") + col("weight")).as("cand"))
           .groupBy(col("node")).agg(min(col("cand")).as("cand"))
         // strict improvements only: the semi-naive frontier
-        val improved = relaxed.join(dist, Seq("node"), "left")
+        val improved = Pin(relaxed.join(dist, Seq("node"), "left")
           .filter(col("dist").isNull || col("cand") < col("dist"))
-          .select(col("node"), col("cand").as("dist"))
-          .localCheckpoint(true)
-        if (!improved.isEmpty) {
-          dist = dist.join(improved.select(col("node")), Seq("node"), "left_anti")
-            .unionAll(improved).localCheckpoint(true)
+          .select(col("node"), col("cand").as("dist")))
+        if (improved.rows > 0) {
+          dist = Pin(dist.join(improved.df.select(col("node")), Seq("node"), "left_anti")
+            .unionAll(improved.df)).df
         }
         frontier = improved
       }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Plan shape: ONE aggregate over one scan. Multiple exact
   * count_distincts compile to Spark's Expand strategy — the input is
   * still read once and the expanded stream partially aggregates map-side.
-  * The single result row is materialized once (localCheckpoint) before
+  * The single result row is materialized once (`Pin`) before
   * being unpivoted into the per-column report, so the scan never re-runs
   * per column. At extreme cardinalities swap count_distinct for
   * approx_count_distinct; the exact form is the verified surface. */
@@ -27,7 +27,7 @@ object Profile {
         min(col(c)).cast("string").as(s"${c}__min"),
         max(col(c)).cast("string").as(s"${c}__max"))
     } :+ count(lit(1)).as("__n")
-    val row = df.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+    val row = Pin(df.agg(aggs.head, aggs.tail: _*)).df
     cols.map { c =>
       row.select(
         lit(c).as("col_name"),

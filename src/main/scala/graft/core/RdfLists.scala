@@ -37,11 +37,10 @@ object RdfLists {
               firstPred: String = "rdf:first",
               restPred: String = "rdf:rest",
               nil: String = "rdf:nil"): DataFrame = {
-    val first = triples.filter(col("pred") === firstPred)
-      .select(col("subj").as("cell"), col("obj").as("member"))
-      .localCheckpoint(true)
-    val rest = triples.filter(col("pred") === restPred)
-      .select(col("subj"), col("obj")).localCheckpoint(true)
+    val first = Pin(triples.filter(col("pred") === firstPred)
+      .select(col("subj").as("cell"), col("obj").as("member"))).df
+    val rest = Pin(triples.filter(col("pred") === restPred)
+      .select(col("subj"), col("obj"))).df
 
     val multiFirst = first.groupBy("cell").count()
       .filter(col("count") > 1).limit(1).collect()

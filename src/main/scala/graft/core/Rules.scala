@@ -38,16 +38,15 @@ object Rules {
   def mineChains(edges: DataFrame, maxWedge: Long = 1L << 20,
                  minSupport: Long = 2L): DataFrame = {
     require(maxWedge >= 1 && minSupport >= 1, s"maxWedge=$maxWedge minSupport=$minSupport")
-    val e = edges.select(col("src"), col("pred"), col("dst")).localCheckpoint(true)
+    val e = Pin(edges.select(col("src"), col("pred"), col("dst"))).df
     val din = e.groupBy(col("dst").as("z")).agg(count(lit(1)).as("din"))
     val dout = e.groupBy(col("src").as("z")).agg(count(lit(1)).as("dout"))
     val zok = din.join(dout, Seq("z"))
       .filter(col("din") * col("dout") <= maxWedge).select("z")
-    val bodies = e.select(col("src").as("x"), col("pred").as("p1"), col("dst").as("z"))
+    val bodies = Pin(e.select(col("src").as("x"), col("pred").as("p1"), col("dst").as("z"))
       .join(zok, Seq("z"))
       .join(e.select(col("src").as("z"), col("pred").as("p2"), col("dst").as("y")), Seq("z"))
-      .select("p1", "p2", "x", "y").distinct()
-      .localCheckpoint(true)
+      .select("p1", "p2", "x", "y").distinct()).df
     val px = e.select(col("src").as("x"), col("pred").as("p3")).distinct()
     val heads = e.select(col("src").as("x"), col("pred").as("p3"),
       col("dst").as("y"), lit(1L).as("hit"))
@@ -129,7 +128,7 @@ object Rules {
     * contribute nothing. */
   def alignRelations(edges: DataFrame, minSupport: Long = 1L): DataFrame = {
     require(minSupport >= 1, s"minSupport=$minSupport")
-    val e = edges.select(col("src"), col("pred"), col("dst")).localCheckpoint(true)
+    val e = Pin(edges.select(col("src"), col("pred"), col("dst"))).df
     val pn = e.groupBy(col("pred").as("p")).agg(count(lit(1)).as("p_n"))
 
     def direction(right: DataFrame, dir: String, emitters: DataFrame) = {

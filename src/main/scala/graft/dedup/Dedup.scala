@@ -116,7 +116,7 @@ object Dedup {
     // pair (the r6 before-plan shows the shingle→minhash ObjectHashAggregate
     // subtree twice), so an un-materialized index re-shingles and re-hashes
     // the whole corpus a second time
-    val sigs = lshIndex(corpus).localCheckpoint(true)
+    val sigs = Pin(lshIndex(corpus)).df
     // codegen agreement count — NOT aggregate(zip_with(...)): HOFs run
     // interpreted and this predicate sits on the (possibly quadratic)
     // band-collision stream
@@ -158,13 +158,16 @@ object Dedup {
                        threshold: Double = 0.8): DataFrame = {
     // the increment index probes both sides (directly and inside `all`) —
     // shingle/minhash the increment ONCE
-    val incIdx = lshIndex(inc).localCheckpoint(true)
+    val incIdx = Pin(lshIndex(inc)).df
     val all = storeIndex.unionByName(incIdx)
     val agreeExpr = graft.expr.SigOps.agree(col("siga"), col("sigb"))
     // inc side probes (store ∪ inc): inc–store pairs once, inc–inc pairs in
     // both orders — normalized + distinct below; store–store pairs never
     // materialize
-    val cand = incIdx.select(col("doc_id").as("a"), col("sig").as("siga"), col("band"), col("key"))
+    // cand feeds candIds (both endpoints) AND the verify join — three
+    // consumers; materialize the banding join once
+    val cand = Pin(incIdx
+      .select(col("doc_id").as("a"), col("sig").as("siga"), col("band"), col("key"))
       .join(all.select(col("doc_id").as("b"), col("sig").as("sigb"), col("band"), col("key")),
         Seq("band", "key"))
       .filter(col("a") =!= col("b"))
@@ -172,10 +175,7 @@ object Dedup {
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
       // hash exchange before the dedup (see minhashLsh's skew note)
       .repartition(col("a"), col("b"))
-      .distinct()
-      // cand feeds candIds (both endpoints) AND the verify join — three
-      // consumers; materialize the banding join once
-      .localCheckpoint(true)
+      .distinct()).df
     val candIds = cand.select(col("a").as("doc_id"))
       .unionAll(cand.select(col("b").as("doc_id"))).distinct()
     val verifyCorpus = store.select(col("doc_id"), col("text"))
@@ -209,7 +209,7 @@ object Dedup {
   def candidatePairs(corpus: DataFrame): DataFrame = {
     // one materialization for the two self-join sides (same argument as
     // [[minhashLsh]]'s index checkpoint)
-    val b = lshBands(corpus).localCheckpoint(true)
+    val b = Pin(lshBands(corpus)).df
     b.select(col("band"), col("key"), col("doc_id").as("a"))
       .join(b.select(col("band"), col("key"), col("doc_id").as("b")),
         Seq("band", "key"))
@@ -244,7 +244,7 @@ object Dedup {
     // un-materialized caller plan (e.g. the LSH banding aggregate) would
     // be evaluated up to 4× (r6 before-plan evidence); materialize each
     // exactly once
-    val b = blocks.select(col("block"), col("id")).localCheckpoint(true)
+    val b = Pin(blocks.select(col("block"), col("id"))).df
     val pairs0 = b.select(col("block"), col("id").as("a"))
       .join(b.select(col("block"), col("id").as("b")), Seq("block"))
       .filter(col("a") < col("b"))
@@ -256,7 +256,7 @@ object Dedup {
       .filter(col("w") >= minShared)
     if (topKPerNode <= 0) pairs0
     else {
-      val pairs = pairs0.localCheckpoint(true)
+      val pairs = Pin(pairs0).df
       val view = pairs
         .select(col("a").as("node"), col("b").as("other"), col("w"), col("a"), col("b"))
         .unionAll(pairs
@@ -293,11 +293,10 @@ object Dedup {
     * cap and the gate proves equality to ground truth. */
   def similarityJoin(corpus: DataFrame, tauMicros: Long = 800000L): DataFrame = {
     require(tauMicros >= 1 && tauMicros <= 1000000L, s"tauMicros=$tauMicros")
-    val sh = TextOps.shingleArrays(corpus)
-      .select(col("doc_id"), explode(col("hs")).as("h")).localCheckpoint(true)
+    val sh = Pin(TextOps.shingleArrays(corpus)
+      .select(col("doc_id"), explode(col("hs")).as("h"))).df
     val freq = sh.groupBy("h").agg(count(lit(1)).as("f"))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    val sizes = Pin(sh.groupBy("doc_id").agg(count(lit(1)).as("n"))).df
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(col("f"), col("h"))
     val pref = sh.join(freq, Seq("h")).join(sizes, Seq("doc_id"))
@@ -349,34 +348,30 @@ object Dedup {
     * round: one endpoint-keyed min aggregate + two anti-joins, no
     * windows, no driver state beyond the loop counter. */
   def maximalMatching(pairs0: DataFrame, maxRounds: Int = 48): DataFrame = {
-    var live = pairs0.select(col("a"), col("b"), col("w"))
+    var live = Pin(pairs0.select(col("a"), col("b"), col("w"))
       .filter(col("a") =!= col("b"))
       .groupBy("a", "b").agg(max(col("w")).as("w")) // dedup keeps best
-      .withColumn("rk", struct((-col("w")).as("nw"), col("a"), col("b")))
-      .localCheckpoint(true)
+      .withColumn("rk", struct((-col("w")).as("nw"), col("a"), col("b"))))
     var out: DataFrame = null
     var round = 0
-    var remaining = live.count()
-    while (remaining > 0) {
+    while (live.rows > 0) {
       round += 1
       if (round > maxRounds)
         throw new IllegalStateException(s"matching not maximal after $maxRounds rounds")
-      val inc = live.select(col("a").as("node"), col("rk"))
-        .unionAll(live.select(col("b").as("node"), col("rk")))
+      val inc = live.df.select(col("a").as("node"), col("rk"))
+        .unionAll(live.df.select(col("b").as("node"), col("rk")))
       val best = inc.groupBy("node").agg(min(col("rk")).as("bst"))
-      val winners = live
+      val winners = Pin(live.df
         .join(best.select(col("node").as("a"), col("bst").as("ba")), Seq("a"))
         .join(best.select(col("node").as("b"), col("bst").as("bb")), Seq("b"))
         .filter(col("rk") === col("ba") && col("rk") === col("bb"))
-        .select(col("a"), col("b"), col("w")).localCheckpoint(true)
+        .select(col("a"), col("b"), col("w"))).df
       val taken = winners.select(col("a").as("node"))
         .unionAll(winners.select(col("b").as("node"))).distinct()
-      live = live
+      live = Pin(live.df
         .join(taken.withColumnRenamed("node", "a"), Seq("a"), "left_anti")
-        .join(taken.withColumnRenamed("node", "b"), Seq("b"), "left_anti")
-        .localCheckpoint(true)
+        .join(taken.withColumnRenamed("node", "b"), Seq("b"), "left_anti"))
       out = if (out == null) winners else out.unionAll(winners)
-      remaining = live.count()
     }
     if (out == null) pairs0.select(col("a"), col("b"), col("w")).limit(0)
     else out
@@ -398,19 +393,17 @@ object Dedup {
     * intersections and counts are keyed joins + one-row aggregates. */
   def blockingQuality(corpus: DataFrame, tau: Double): DataFrame = {
     val spark = corpus.sparkSession
-    val cand = candidatePairs(corpus).localCheckpoint(true)
+    val cand = Pin(candidatePairs(corpus))
     val sh = TextOps.shingleArrays(corpus)
       .select(col("doc_id"), explode(col("hs")).as("h"))
     val sharing = sh.select(col("h"), col("doc_id").as("a"))
       .join(sh.select(col("h"), col("doc_id").as("b")), Seq("h"))
       .filter(col("a") < col("b")).select(col("a"), col("b")).distinct()
-    val truth = jaccardOf(corpus, sharing, atLeast = Some(tau))
-      .filter(col("jaccard") >= tau).select(col("a"), col("b"))
-      .localCheckpoint(true)
+    val truth = Pin(jaccardOf(corpus, sharing, atLeast = Some(tau))
+      .filter(col("jaccard") >= tau).select(col("a"), col("b")))
     val n = corpus.count()
-    val nc = cand.count()
-    val nt = truth.count()
-    val tp = truth.join(cand, Seq("a", "b"), "left_semi").count()
+    val (nc, nt) = (cand.rows, truth.rows)
+    val tp = truth.df.join(cand.df, Seq("a", "b"), "left_semi").count()
     val allPairs = n * (n - 1) / 2
     spark.range(1).select(
       lit(n).as("n_records"),

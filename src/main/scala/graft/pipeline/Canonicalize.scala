@@ -165,10 +165,9 @@ object Canonicalize {
     require(window >= 1 && maxDist >= 0, "window >= 1, maxDist >= 0")
     val bucket = (ascii(substring(col("name"), 1, 1)) * 256 +
       coalesce(ascii(substring(col("name"), 2, 1)), lit(0))).cast("long")
-    val ranked = graft.core.Ranks.rankByBucketedOrder(
+    val ranked = Pin(graft.core.Ranks.rankByBucketedOrder(
         entities.select(col(idCol).as("id"), col(nameCol).as("name")),
-        bucket, Seq(col("name"), col("id")), "rnk")
-      .localCheckpoint(true)
+        bucket, Seq(col("name"), col("id")), "rnk")).df
     val probes = ranked.select(col("id"), col("name"),
       explode(array((1 to window).map(j => col("rnk") + lit(j.toLong)): _*)).as("rnk2"))
     probes.join(ranked.select(col("id").as("v"), col("name").as("name_v"),
@@ -189,7 +188,7 @@ object Canonicalize {
     * unconditional broadcast hint would force a driver-killing build at
     * 10⁸+ entities regardless of AQE/statistics).
     *
-    * Durability note: localCheckpoint blocks live on executors (same
+    * Durability note: pinned blocks live on executors (same
     * contract as the CC rounds feeding this map — the engine-wide trade of
     * bounded lineage for executor-loss recompute, documented since r1).
     * A production LONG-RUNNING streaming deployment points the map at a
@@ -244,13 +243,14 @@ object ConnectedComponents {
     * (the alias catalog's few hundred edges, or any graph up to
     * `spark.sql.autoBroadcastJoinThreshold` bytes) it solves via driver
     * union-find over the rows the pin job returns ([[Pin.withRows]]) — one
-    * job instead of ~20 tiny barrier jobs through the star rounds. Above it, alternating star rounds. Both pick each
-    * component's minimum in Spark's order (strings as UTF-8 bytes), so the
-    * representative does not depend on the input's size. Every round is
-    * localCheckpointed: the convergence check (count + exceptAll) and the
-    * next round each re-read the round's edge set, so an unmaterialized
-    * round would evaluate its star chain three times. */
-  def run(edges: DataFrame, maxIter: Int = 40, checkpointEvery: Int = 1): DataFrame = {
+    * job instead of ~20 tiny barrier jobs through the star rounds. Above
+    * it, alternating star rounds. Both pick each component's minimum in
+    * Spark's order (strings as UTF-8 bytes), so the representative does
+    * not depend on the input's size. Every round is pinned: the
+    * convergence check compares the two pins' counted rows, then runs the
+    * one-way `exceptAll`, and the next round re-reads the round's edge
+    * set, so an unmaterialized round would evaluate its star chain twice. */
+  def run(edges: DataFrame, maxIter: Int = 40): DataFrame = {
     def canon(e: DataFrame) = e
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
@@ -274,21 +274,20 @@ object ConnectedComponents {
     val ord = driverOrdering(e0)
     val (pinned, rows) = if (ord.isDefined) Pin.withRows(e0) else (Pin(e0), None)
     if (rows.isDefined) return driverRun(pinned.df, rows.get, ord.get)
-    var e = pinned.df
+    var e = pinned
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
       i += 1
-      val next0 = smallStar(largeStar(e))
-      val next = if (i % checkpointEvery == 0) next0.localCheckpoint(true) else next0
+      val next = Pin(smallStar(largeStar(e.df)))
       // set equality: same cardinality + one-way difference empty
-      converged = next.count() == e.count() && next.exceptAll(e).isEmpty
+      converged = next.rows == e.rows && next.df.exceptAll(e.df).isEmpty
       e = next
     }
     if (!converged)
       throw new IllegalStateException(s"connected components not converged after $maxIter rounds")
     // fixpoint is a union of stars rooted at each component's min id
-    val s = sym(e)
+    val s = sym(e.df)
     s.groupBy("u").agg(min(col("v")).as("mv"))
       .select(col("u").as("id"), least(col("u"), col("mv")).as("component"))
   }

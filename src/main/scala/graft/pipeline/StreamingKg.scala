@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -269,13 +270,13 @@ object StreamingKg {
       if (io.exists(s"$prefix/compacted_ids"))
         io.read(s"$prefix/compacted_ids").unionAll(ids).distinct()
       else ids
-    val folded = hostGraphFromStore(io, prefix)
+    // pinned: the overwrite below replaces its own input scan
+    val folded = Pin(hostGraphFromStore(io, prefix)
       .withColumn("batch_id", lit(-1L))
-      .select("src_host", "dst_host", "n_links", "batch_id")
-      .localCheckpoint(true) // pin: the overwrite below replaces its own input scan
-    val keep = prevIds.localCheckpoint(true)
+      .select("src_host", "dst_host", "n_links", "batch_id"))
+    val keep = Pin(prevIds).df
     io.write(keep, s"$prefix/compacted_ids")
-    io.write(folded, table, Seq("batch_id"))
-    folded.count()
+    io.write(folded.df, table, Seq("batch_id"))
+    folded.rows
   }
 }

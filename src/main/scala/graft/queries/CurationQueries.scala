@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Pin
 import graft.text.{Classifier, Curation, Lm, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -213,7 +214,7 @@ object CurationQueries {
   def curationFilter(s: SparkSession, d: String): DataFrame = {
     // four consumers (keeper agg, repetition signals, decontamination,
     // the token-count filter) — materialize the corpus union once
-    val corpus = TrainingDataQueries.corpus(s, d).localCheckpoint(true)
+    val corpus = Pin(TrainingDataQueries.corpus(s, d)).df
     val keepers = corpus.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     val rep = Curation.repetitionSignals(corpus)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Pin
 import graft.sources.{TpchKg, TpchKgSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, countDistinct, expr, lit}
@@ -33,7 +34,7 @@ object KgQueries {
     // gap anywhere lands on the wrong node id and the hash breaks
     "kg_adjacency_codec" -> ((s, d) => {
       val kb = TpchKg.load(s, d)
-      val dict = graft.sources.AdjCodec.dictionary(kb.nodes).localCheckpoint(true)
+      val dict = Pin(graft.sources.AdjCodec.dictionary(kb.nodes)).df
       graft.sources.AdjCodec.decode(
         graft.sources.AdjCodec.encode(kb.edges, dict), dict)
     }),
@@ -55,7 +56,7 @@ object KgQueries {
     // hash-equal the full-edge-table oracle exactly
     "kg_adjacency_merge" -> ((s, d) => {
       val kb = TpchKg.load(s, d)
-      val dict = graft.sources.AdjCodec.dictionary(kb.nodes).localCheckpoint(true)
+      val dict = Pin(graft.sources.AdjCodec.dictionary(kb.nodes)).df
       val stored = graft.sources.AdjCodec.encode(
         kb.edges.filter(col("pred").isin("inNation", "inRegion", "placedBy")), dict)
       val merged = graft.sources.AdjCodec.mergeIncrement(stored,
@@ -201,7 +202,7 @@ object KgQueries {
       graft.sample.GraphMetrics.cooccurrence(TpchKg.load(s, d).edges, "contains"),
       k = 80)),
     // 6-truss of the projection — the edge-strength companion of kg_kcore
-    // (TrussProbe: 6 peel rounds at sf0.01 / 7 at sf0.1 with non-trivial
+    // (recorded: 6 peel rounds at sf0.01 / 7 at sf0.1 with non-trivial
     // survivors, 114170 of 115729 edges at sf0.01); the oracle replays
     // each round's triangle enumeration + support filter, unrolled with
     // margin over the measured depth
@@ -245,8 +246,7 @@ object KgQueries {
       // seed derivation and the undirected edge set — materialize it once
       // (r6; the two-consumer rule). undirected() over it is unchanged:
       // the pred filter is a no-op on the pre-filtered rows.
-      val contains = kb.edges.filter(col("pred") === "contains")
-        .localCheckpoint(true)
+      val contains = Pin(kb.edges.filter(col("pred") === "contains")).df
       val seeds = contains
         .select(col("src").as("id")).distinct()
         .filter(expr("CAST(substr(id, 3) AS BIGINT) % 997 = 0"))
@@ -361,7 +361,7 @@ object KgQueries {
     "kg_tri_sampled" -> ((s, d) => graft.sample.GraphMetrics.sampledTriangleMoments(
       graft.sample.GraphMetrics.cooccurrence(TpchKg.load(s, d).edges, "contains"),
       keepBelowHex = "400000000000")),
-    // Luby maximal independent set on the projection (MisProbe: 7 rounds
+    // Luby maximal independent set on the projection (recorded: 7 rounds
     // at sf0.01 AND sf0.1; oracle unrolls 12 — empty rounds past the
     // fixpoint are no-ops, a deeper engine run mismatches loudly)
     "kg_mis" -> ((s, d) => graft.sample.GraphMetrics.maximalIndependentSet(
@@ -1053,7 +1053,7 @@ object KgQueries {
     * triangle support over the three canonical edge pairs of each
     * triangle, and keeps edges with support ≥ k−2; an edge in no triangle
     * has no support row and drops implicitly — exactly
-    * GraphMetrics.kTrussPeel's round op. */
+    * GraphMetrics.kTruss's round op. */
   private def ktrussCtes(k: Int, rounds: Int): String = {
     val roundCtes = (1 to rounds).map { i =>
       s"""xd$i AS MATERIALIZED (

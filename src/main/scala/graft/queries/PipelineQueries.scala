@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Pin
 import graft.pipeline._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -730,13 +731,11 @@ object PipelineQueries {
     "fe_changeset_apply" -> ((s, d) => {
       val docs = s.read.parquet(s"$d/documents.parquet")
       val als = Pages.aliases(s)
-      val v1 = KgPipeline.triplesOf(
-        Pages.fromDocuments(docs.filter(col("doc_id") % 5 =!= 4)), als)
-        .localCheckpoint(true)
-      val v2 = KgPipeline.triplesOf(
-        Pages.fromDocuments(docs.filter(col("doc_id") % 7 =!= 3)), als)
-        .localCheckpoint(true)
-      val cs = Materialize.changeset(v1, v2).localCheckpoint(true)
+      val v1 = Pin(KgPipeline.triplesOf(
+        Pages.fromDocuments(docs.filter(col("doc_id") % 5 =!= 4)), als)).df
+      val v2 = Pin(KgPipeline.triplesOf(
+        Pages.fromDocuments(docs.filter(col("doc_id") % 7 =!= 3)), als)).df
+      val cs = Pin(Materialize.changeset(v1, v2)).df
       val rolledBack = Materialize.applyChangeset(v2,
         Materialize.invertChangeset(cs))
       require(Materialize.changeset(rolledBack, v1).isEmpty,

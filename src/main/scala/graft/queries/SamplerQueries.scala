@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Determinism
+import graft.core.{Determinism, Pin}
 import graft.sample._
 import graft.sources.{TpchKg, TpchKgSql}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -33,8 +33,7 @@ object SamplerQueries {
     val nodes = kb.nodes.filter(
       substring(col("id"), 1, 2).isin("c:", "s:", "n:", "r:"))
     val edges = kb.edges.filter(col("pred").isin("inNation", "inRegion"))
-    val neg = KgeNegatives.negatives(nodes, edges, k = 1, seed = Seed)
-      .localCheckpoint(true)
+    val neg = Pin(KgeNegatives.negatives(nodes, edges, k = 1, seed = Seed)).df
     val (ent, rel) = Transe.train(nodes, edges, neg, TranseGateCfg)
     (edges, neg, ent, rel)
   }

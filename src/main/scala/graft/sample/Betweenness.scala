@@ -138,19 +138,19 @@ object Betweenness {
   def accumulate(und0: DataFrame, sp0: DataFrame,
                  scaleNumer: Long = 1L, scaleDenom: Long = 1L): DataFrame = {
     require(scaleNumer >= 1 && scaleDenom >= 1, "bad scale")
-    val und = und0.select(col("u"), col("v")).localCheckpoint(true)
-    val sym = und.unionAll(und.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
-    val sp = sp0.localCheckpoint(true)
+    val und = Pin(und0.select(col("u"), col("v"))).df
+    val sym = Pin(und.unionAll(und.select(col("v").as("u"), col("u").as("v")))).df
+    val pinned = Pin(sp0)
+    val sp = pinned.df
     // empty seed set / empty graph: max(dist) would be NULL and the getInt
     // below an opaque NPE — return the empty (id, bc) frame instead
-    if (sp.isEmpty)
+    if (pinned.rows == 0)
       return sp.select(col("node").as("id"), lit(0.0).as("bc")).limit(0)
     val maxR = sp.agg(max(col("dist"))).head().getInt(0)
     // δ rows start all-zero at the deepest level; walk levels upward
-    var delta = sp.filter(col("dist") === maxR)
+    var delta = Pin(sp.filter(col("dist") === maxR)
       .select(col("src"), col("node"), col("sigma"),
-        lit(0.0).as("delta")).localCheckpoint(true)
+        lit(0.0).as("delta"))).df
     for (r <- (maxR - 1) to 0 by -1) {
       val lvl = sp.filter(col("dist") === r)
       // v at level r pulls from adjacent w at level r+1 (w's δ just final)
@@ -167,7 +167,7 @@ object Betweenness {
       val zero = lvl.join(pulled.select(col("src"), col("node")),
           Seq("src", "node"), "left_anti")
         .select(col("src"), col("node"), col("sigma"), lit(0.0).as("delta"))
-      delta = delta.unionAll(pulled).unionAll(zero).localCheckpoint(true)
+      delta = Pin(delta.unionAll(pulled).unionAll(zero)).df
     }
     delta.filter(col("src") =!= col("node"))
       .groupBy(col("node").as("id"))
@@ -198,15 +198,14 @@ object Betweenness {
     * the [[spCounts]] shape without the settled anti-join. */
   def katzScaled(edges0: DataFrame, nodes0: DataFrame, k: Int = 4): DataFrame = {
     require(k >= 1 && k <= 62, s"k=$k")
-    val e = edges0.select(col("src"), col("dst")).distinct()
-      .filter(col("src") =!= col("dst")).localCheckpoint(true)
-    var t = nodes0.select(col("id")).distinct()
-      .withColumn("t", lit(1L)).localCheckpoint(true)
+    val e = Pin(edges0.select(col("src"), col("dst")).distinct()
+      .filter(col("src") =!= col("dst"))).df
+    var t = Pin(nodes0.select(col("id")).distinct()
+      .withColumn("t", lit(1L))).df
     var acc: DataFrame = null
     for (r <- 1 to k) {
-      t = e.join(t.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(sum(col("t")).as("t"))
-        .localCheckpoint(true)
+      t = Pin(e.join(t.withColumnRenamed("id", "src"), Seq("src"))
+        .groupBy(col("dst").as("id")).agg(sum(col("t")).as("t"))).df
       val w = t.select(col("id"), (col("t") * (1L << (k - r))).as("w"))
       acc = if (acc == null) w else acc.unionAll(w)
     }

@@ -1,5 +1,6 @@
 package graft.sample
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -35,65 +36,60 @@ object Boruvka {
     * `(u, v, w)`. Self-loops dropped; of duplicate (u, v) rows the
     * minimum weight wins. Raises past `maxRounds` outer rounds. */
   def minimumSpanningForest(edges0: DataFrame, maxRounds: Int = 32): DataFrame = {
-    val base = edges0.select(col("u"), col("v"), col("w"))
+    val base = Pin(edges0.select(col("u"), col("v"), col("w"))
       .filter(col("u") =!= col("v"))
-      .groupBy("u", "v").agg(min(col("w")).as("w")).localCheckpoint(true)
-    var comp = base.select(col("u").as("id"))
+      .groupBy("u", "v").agg(min(col("w")).as("w"))).df
+    var comp = Pin(base.select(col("u").as("id"))
       .unionAll(base.select(col("v").as("id"))).distinct()
-      .select(col("id"), col("id").as("c")).localCheckpoint(true)
+      .select(col("id"), col("id").as("c"))).df
     var forest: DataFrame = null
     var round = 0
     while (true) {
       round += 1
       if (round > maxRounds)
         throw new IllegalStateException(s"Boruvka not done after $maxRounds rounds")
-      val labeled = base
+      val labeled = Pin(base
         .join(comp.select(col("id").as("u"), col("c").as("cu")), Seq("u"))
         .join(comp.select(col("id").as("v"), col("c").as("cv")), Seq("v"))
-        .filter(col("cu") =!= col("cv")).localCheckpoint(true)
-      if (labeled.isEmpty)
+        .filter(col("cu") =!= col("cv")))
+      if (labeled.rows == 0)
         return if (forest == null) base.limit(0) else forest
       // min outgoing edge per component under the (w, u, v) total order
-      val sym = labeled.select(col("cu").as("comp"), col("cv").as("other"),
+      val sym = labeled.df.select(col("cu").as("comp"), col("cv").as("other"),
           col("w"), col("u"), col("v"))
-        .unionAll(labeled.select(col("cv").as("comp"), col("cu").as("other"),
+        .unionAll(labeled.df.select(col("cv").as("comp"), col("cu").as("other"),
           col("w"), col("u"), col("v")))
-      val picks = sym.groupBy("comp")
+      val picks = Pin(sym.groupBy("comp")
         .agg(min(struct(col("w"), col("u"), col("v"), col("other"))).as("m"))
         .select(col("comp"), col("m.u").as("u"), col("m.v").as("v"),
-          col("m.w").as("w"), col("m.other").as("t"))
-        .localCheckpoint(true)
+          col("m.w").as("w"), col("m.other").as("t"))).df
       val chosen = picks.select(col("u"), col("v"), col("w")).distinct()
-      forest = (if (forest == null) chosen else forest.unionAll(chosen))
-        .localCheckpoint(true)
+      forest = Pin(if (forest == null) chosen else forest.unionAll(chosen)).df
       // pointer c → t; tt = t(t(c)) via one unique lookup (picks has one
       // row per comp); mutual pairs (tt = c) break toward the smaller id
-      var ptr = picks.select(col("comp"), col("t"))
+      var ptr = Pin(picks.select(col("comp"), col("t"))
         .join(picks.select(col("comp").as("t"), col("t").as("tt")),
           Seq("t"), "left_outer")
         .select(col("comp"),
           when(col("tt") === col("comp") && col("comp") < col("t"), col("comp"))
-            .otherwise(col("t")).as("t"))
-        .localCheckpoint(true)
+            .otherwise(col("t")).as("t"))).df
       var settled = false
       var hops = 0
       while (!settled) {
         hops += 1
         if (hops > maxRounds)
           throw new IllegalStateException("pointer doubling diverged")
-        val nxt = ptr
+        val nxt = Pin(ptr
           .join(ptr.select(col("comp").as("t"), col("t").as("t2")),
             Seq("t"), "left_outer")
-          .select(col("comp"), coalesce(col("t2"), col("t")).as("t"))
-          .localCheckpoint(true)
+          .select(col("comp"), coalesce(col("t2"), col("t")).as("t"))).df
         settled = nxt.join(ptr.withColumnRenamed("t", "old"), Seq("comp"))
           .filter(col("t") =!= col("old")).isEmpty
         ptr = nxt
       }
-      comp = comp.join(ptr.select(col("comp").as("cj"), col("t")),
+      comp = Pin(comp.join(ptr.select(col("comp").as("cj"), col("t")),
           comp("c") === col("cj"), "left_outer")
-        .select(col("id"), coalesce(col("t"), col("c")).as("c"))
-        .localCheckpoint(true)
+        .select(col("id"), coalesce(col("t"), col("c")).as("c"))).df
     }
     throw new IllegalStateException("unreachable")
   }

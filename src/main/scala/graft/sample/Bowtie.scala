@@ -1,5 +1,6 @@
 package graft.sample
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,7 +23,7 @@ import org.apache.spark.sql.functions._
   * then four multi-source semi-naive reachability sweeps (forward/backward
   * from CORE, forward from IN, backward from OUT). Each sweep is one
   * keyed join + anti per round, rounds bounded by the graph diameter,
-  * frontier/visited state localCheckpointed so lineage never grows — the
+  * frontier/visited state pinned so lineage never grows — the
   * same 100-TB shape as ConnectedComponents/Scc. Nothing is ever
   * collected to the driver; region labels fall out of anti-join algebra
   * over the five node sets.
@@ -33,29 +34,27 @@ object Bowtie {
     * once. Ties for the largest SCC break on the max scc id (deterministic
     * at any parallelism). */
   def regions(edges0: DataFrame, nodes0: DataFrame, maxRounds: Int = 64): DataFrame = {
-    val edges = edges0.select("src", "dst").distinct()
-      .filter(col("src") =!= col("dst")).localCheckpoint(true)
-    val nodes = nodes0.select(col("id")).distinct().localCheckpoint(true)
+    val edges = Pin(edges0.select("src", "dst").distinct()
+      .filter(col("src") =!= col("dst"))).df
+    val nodes = Pin(nodes0.select(col("id")).distinct()).df
 
-    val scc = Scc.compute(edges, nodes, maxRounds).localCheckpoint(true)
+    val scc = Pin(Scc.compute(edges, nodes, maxRounds)).df
     // largest SCC, ties → max id: one aggregate, one driver row
     val coreRow = scc.groupBy(col("scc")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("scc").desc).limit(1).head()
     val coreId = coreRow.getString(0)
-    val core = scc.filter(col("scc") === coreId).select(col("id")).localCheckpoint(true)
+    val core = Pin(scc.filter(col("scc") === coreId).select(col("id"))).df
 
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
     val fwdCore = reach(edges, core, maxRounds)
     val bwdCore = reach(rev, core, maxRounds)
-    val outSet = fwdCore.join(core, Seq("id"), "anti").localCheckpoint(true)
-    val inSet = bwdCore.join(core, Seq("id"), "anti").localCheckpoint(true)
-    val rest = nodes.join(core, Seq("id"), "anti")
+    val outSet = Pin(fwdCore.join(core, Seq("id"), "anti")).df
+    val inSet = Pin(bwdCore.join(core, Seq("id"), "anti")).df
+    val rest = Pin(nodes.join(core, Seq("id"), "anti")
       .join(outSet, Seq("id"), "anti")
-      .join(inSet, Seq("id"), "anti").localCheckpoint(true)
-    val fromIn = reach(edges, inSet, maxRounds).join(rest, Seq("id"), "left_semi")
-      .localCheckpoint(true)
-    val toOut = reach(rev, outSet, maxRounds).join(rest, Seq("id"), "left_semi")
-      .localCheckpoint(true)
+      .join(inSet, Seq("id"), "anti")).df
+    val fromIn = Pin(reach(edges, inSet, maxRounds).join(rest, Seq("id"), "left_semi")).df
+    val toOut = Pin(reach(rev, outSet, maxRounds).join(rest, Seq("id"), "left_semi")).df
 
     def tag(s: DataFrame, r: String) = s.select(col("id"), lit(r).as("region"))
     val tube = fromIn.join(toOut, Seq("id"), "left_semi")
@@ -74,18 +73,18 @@ object Bowtie {
     * expands only the previous frontier and anti-joins the visited set, so
     * per-round work is O(|frontier ⋈ edges|), not O(|reached|). */
   private def reach(edges: DataFrame, seeds: DataFrame, maxRounds: Int): DataFrame = {
-    var visited = seeds.select(col("id")).localCheckpoint(true)
-    var frontier = visited
+    val seeded = Pin(seeds.select(col("id")))
+    var visited = seeded.df
+    var frontier = seeded
     var round = 0
-    while (!frontier.isEmpty) {
+    while (frontier.rows > 0) {
       round += 1
       require(round <= maxRounds, s"reachability did not converge in $maxRounds rounds")
-      frontier = edges.join(frontier.withColumnRenamed("id", "src"), Seq("src"))
+      frontier = Pin(edges.join(frontier.df.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "anti")
-        .localCheckpoint(true)
-      if (!frontier.isEmpty)
-        visited = visited.unionAll(frontier).localCheckpoint(true)
+        .join(visited, Seq("id"), "anti"))
+      if (frontier.rows > 0)
+        visited = Pin(visited.unionAll(frontier.df)).df
     }
     visited
   }

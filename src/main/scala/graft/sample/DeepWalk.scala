@@ -1,6 +1,6 @@
 package graft.sample
 
-import graft.core.Kb
+import graft.core.{Kb, Pin}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * see [[graft.core.Determinism]]).
   *
   * Dead-end walks terminate (no row at later steps). Every step's state is
-  * localCheckpoint-materialized: the corpus unions every step's positions,
+  * pinned: the corpus unions every step's positions,
   * so a lazy state made later branches re-derive all prior steps
   * (O(steps²) joins in the executed plan — r6 finding); materializing per
   * step also hands AQE the frontier's exact size for its per-step join
@@ -49,13 +49,11 @@ object DeepWalk {
   def corpus(kb: Kb, starts: DataFrame, reps: Int = 2, steps: Int = 5,
              seed: Long = 42L): DataFrame = {
     require(reps >= 1 && steps >= 0, s"reps=$reps steps=$steps")
-    val edges = kb.edges.select(col("src"), col("pred"), col("dst"))
-      .localCheckpoint(true)
-    var state = starts
+    val edges = Pin(kb.edges.select(col("src"), col("pred"), col("dst"))).df
+    var state = Pin(starts
       .join(broadcast(kb.spark.range(0, reps).withColumnRenamed("id", "r")))
       .select(concat(col("id"), lit("#"), col("r").cast("string")).as("walk_id"),
-        col("id").as("cur"))
-      .localCheckpoint(true)
+        col("id").as("cur"))).df
     var out = state.select(col("walk_id"), lit(0).as("step"), col("cur").as("node"))
     var i = 1
     while (i <= steps) {
@@ -69,11 +67,10 @@ object DeepWalk {
       // gives AQE an exact size, so the join picks broadcast vs shuffle per
       // step from real statistics (frontiers shrink as walks dead-end).
       val cand = state.join(edges, state("cur") === edges("src"))
-      state = cand
+      state = Pin(cand
         .groupBy(col("walk_id"))
         .agg(min(struct(pickHash(seed, i).as("h"), col("pred"), col("dst"))).as("m"))
-        .select(col("walk_id"), col("m.dst").as("cur"))
-        .localCheckpoint(true)
+        .select(col("walk_id"), col("m.dst").as("cur"))).df
       out = out.unionAll(
         state.select(col("walk_id"), lit(i).as("step"), col("cur").as("node")))
       i += 1
@@ -144,7 +141,7 @@ object DeepWalk {
     * (≳10⁹·10⁹ co-occurrences) move both to decimal(38,0) — the comparison
     * is unaffected. */
   def ppmiPairs(pairs0: DataFrame): DataFrame = {
-    val pairs = pairs0.localCheckpoint(true)
+    val pairs = Pin(pairs0).df
     val total = pairs.agg(sum(col("cnt")).as("total"))
     val centerSums = pairs.groupBy("center").agg(sum(col("cnt")).as("center_sum"))
     val contextSums = pairs.groupBy("context").agg(sum(col("cnt")).as("context_sum"))

@@ -1,5 +1,6 @@
 package graft.sample
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -42,33 +43,31 @@ object Densest {
     * cluster). */
   def densestSubgraph(und0: DataFrame, maxRounds: Int = 64): DataFrame = {
     require(maxRounds >= 1, s"maxRounds=$maxRounds")
-    val und = und0.select(col("u"), col("v")).localCheckpoint(true)
-    var verts = und.select(col("u").as("id"))
-      .unionAll(und.select(col("v").as("id"))).distinct().localCheckpoint(true)
+    val und = Pin(und0.select(col("u"), col("v")))
+    var verts = Pin(und.df.select(col("u").as("id"))
+      .unionAll(und.df.select(col("v").as("id"))).distinct())
     var edges = und
     var peeled: DataFrame = null
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    var n = verts.count()
     var i = 0
-    while (n > 0) {
+    // n and e are the two pins' counted rows
+    while (verts.rows > 0) {
       require(i < maxRounds, s"densestSubgraph still peeling after $maxRounds rounds")
-      val e = edges.count()
+      val (n, e) = (verts.rows, edges.rows)
       stats += ((i, n, e))
-      val sym = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
+      val sym = edges.df.unionAll(edges.df.select(col("v").as("u"), col("u").as("v")))
       val deg = sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
       // isolated survivors have degree 0 (left join), and ARE counted in n
-      val rm = verts.join(deg, Seq("id"), "left_outer")
+      val rm = Pin(verts.df.join(deg, Seq("id"), "left_outer")
         .filter(coalesce(col("deg"), lit(0L)) * n <= lit(4L) * e)
-        .select(col("id")).localCheckpoint(true)
+        .select(col("id"))).df
       val tagged = rm.withColumn("peel_round", lit(i))
-      peeled = (if (peeled == null) tagged else peeled.unionAll(tagged))
-        .localCheckpoint(true)
-      verts = verts.join(rm, Seq("id"), "left_anti").localCheckpoint(true)
-      edges = edges
+      peeled = Pin(if (peeled == null) tagged else peeled.unionAll(tagged)).df
+      verts = Pin(verts.df.join(rm, Seq("id"), "left_anti"))
+      edges = Pin(edges.df
         .join(rm.withColumnRenamed("id", "u"), Seq("u"), "left_anti")
         .join(rm.withColumnRenamed("id", "v"), Seq("v"), "left_anti")
-        .select(col("u"), col("v")).localCheckpoint(true)
-      n = verts.count()
+        .select(col("u"), col("v")))
       i += 1
     }
     // argmax e_i/n_i by cross-multiplication, earliest round on ties —

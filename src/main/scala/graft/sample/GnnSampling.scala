@@ -1,5 +1,6 @@
 package graft.sample
 
+import graft.core.Pin
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -100,13 +101,12 @@ object GnnSampling {
     val e = edges.select(col("src"), col("pred"), col("dst"))
     // symmetrized candidate table, cached once per call — every layer
     // probes it with a (small) frontier broadcast
-    val sym = e.select(col("src").as("node"), col("pred"), col("dst").as("nbr"),
+    val sym = Pin(e.select(col("src").as("node"), col("pred"), col("dst").as("nbr"),
         lit("f").as("dir"))
       .unionAll(e.select(col("dst").as("node"), col("pred"), col("src").as("nbr"),
-        lit("r").as("dir")))
-      .localCheckpoint(true)
+        lit("r").as("dir")))).df
 
-    var frontier = seeds.select(col("id").as("node")).distinct().localCheckpoint(true)
+    var frontier = Pin(seeds.select(col("id").as("node")).distinct()).df
     var out: DataFrame = null
     fanouts.zipWithIndex.foreach { case (f, li) =>
       val layer = li + 1
@@ -116,7 +116,7 @@ object GnnSampling {
       val rk = md5(concat_ws("|", lit(seed), lit(layer), col("dir"),
         col("node"), col("pred"), col("nbr")))
       val minK = udaf(new MinKStrings(f), Encoders.STRING)
-      val sampled = cand
+      val sampled = Pin(cand
         .select(col("node"),
           concat_ws(Sep, rk, col("pred"), col("nbr"), col("dir")).as("t"))
         .groupBy("node").agg(minK(col("t")).as("tops"))
@@ -124,10 +124,9 @@ object GnnSampling {
         .select(lit(layer).as("layer"), col("node"),
           split(col("t"), Sep).getItem(1).as("pred"),
           split(col("t"), Sep).getItem(2).as("nbr"),
-          split(col("t"), Sep).getItem(3).as("dir"))
-        .localCheckpoint(true)
+          split(col("t"), Sep).getItem(3).as("dir"))).df
       out = if (out == null) sampled else out.unionAll(sampled)
-      frontier = sampled.select(col("nbr").as("node")).distinct().localCheckpoint(true)
+      frontier = Pin(sampled.select(col("nbr").as("node")).distinct()).df
     }
     out
   }

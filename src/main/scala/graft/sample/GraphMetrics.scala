@@ -3,7 +3,7 @@ package graft.sample
 import graft.core.{LocalGraph, Pin}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** Exact distributed triangle counting + clustering metrics — the standard
   * structure-preservation measures of the sampling literature (Leskovec &
@@ -60,8 +60,8 @@ object GraphMetrics {
       minSupport: Long,
       maxBasketSize: Int = 1024): DataFrame = {
     // materialized once: consumed by the size filter and both join sides
-    val e = edges.filter(col("pred") === pred)
-      .select(col("src"), col("dst")).distinct().localCheckpoint(true)
+    val e = Pin(edges.filter(col("pred") === pred)
+      .select(col("src"), col("dst")).distinct()).df
     val ok = e.groupBy("src").agg(count(lit(1)).as("sz"))
       .filter(col("sz") <= maxBasketSize).select(col("src"))
     val bounded = e.join(ok, Seq("src"), "left_semi")
@@ -108,12 +108,12 @@ object GraphMetrics {
     *
     * The edge list is consumed three times (degrees, orientation, wedge
     * close) and the oriented list three more (both wedge sides + the
-    * closing probe), so both are materialized once (localCheckpoint —
-    * same bounded-lineage trade as the CC rounds) instead of re-deriving
-    * a possibly-expensive upstream projection per consumer. */
+    * closing probe), so both are pinned once (the same bounded-lineage
+    * trade as the CC rounds) instead of re-deriving a possibly-expensive
+    * upstream projection per consumer. */
   def triangleRows(und0: DataFrame): DataFrame = {
-    val und = und0.localCheckpoint(true)
-    val o = orient(und, degrees(und)).localCheckpoint(true)
+    val und = Pin(und0).df
+    val o = Pin(orient(und, degrees(und))).df
     // wedge at a: ordered out-neighbor pairs (b1 < b2 by (deg, id)); the
     // closing undirected edge {b1, b2} — if present — is oriented b1→b2 by
     // the same total order, so ONE equi-join against o closes the wedge
@@ -139,7 +139,7 @@ object GraphMetrics {
     * bit-equal. Same two-shuffle budget as [[triangleCounts]] plus one
     * co-keyed left join on `id` — no new scan of the edge table. */
   def localClustering(und0: DataFrame): DataFrame = {
-    val und = und0.localCheckpoint(true)
+    val und = Pin(und0).df
     degrees(und).filter(col("deg") >= 2)
       .join(triangleCounts(und), Seq("id"), "left")
       .na.fill(0L, Seq("tri_cnt"))
@@ -163,9 +163,9 @@ object GraphMetrics {
   def sampledTriangleMoments(und0: DataFrame, keepBelowHex: String,
                              seed: Long = 23L): DataFrame = {
     require(keepBelowHex.length == 12, s"need 12 hex chars, got '$keepBelowHex'")
-    val kept = und0.filter(
+    val kept = Pin(und0.filter(
       substring(md5(concat_ws("|", lit(seed.toString), col("u"), col("v"))), 1, 12)
-        < lit(keepBelowHex)).localCheckpoint(true)
+        < lit(keepBelowHex))).df
     triangleRows(kept).agg(count(lit(1)).as("tri_sampled"))
       .crossJoin(kept.agg(count(lit(1)).as("kept_edges")))
       .select(col("kept_edges"), col("tri_sampled"))
@@ -178,7 +178,7 @@ object GraphMetrics {
     * active node whose priority is a strict local minimum among its
     * ACTIVE neighbors, then retires winners and their neighbors. O(log n)
     * rounds w.h.p.; each round is one neighbor-min aggregate plus
-    * semi/anti prunes of the (checkpointed) active tables — no global
+    * semi/anti prunes of the (pinned) active tables — no global
     * sort, no driver data. Returns `(id, mis_round)` for the members;
     * independence and maximality are structural (every admitted node
     * beat all active neighbors; every retired non-member lost to an
@@ -186,48 +186,54 @@ object GraphMetrics {
     * trivially in any MIS — add them downstream if the caller tracks
     * them). Raises past maxRounds instead of truncating. */
   def maximalIndependentSet(und0: DataFrame, seed: Long = 11L,
-                            maxRounds: Int = 40): DataFrame = {
+                            maxRounds: Int = 40): DataFrame =
+    priorityRounds(und0, seed, maxRounds, "mis_round", retireCovered = true)
+
+  /** The priority-round loop of [[maximalIndependentSet]] and
+    * [[greedyColoring]]: per round every active node whose md5(seed|id)+id
+    * priority is below all its active neighbors' wins and is emitted with
+    * the round in `roundCol`; winners retire (with `retireCovered`, their
+    * neighbors too) and the edge set is pruned to the active nodes. The
+    * loop stops on the active pin's counted rows. An empty input yields
+    * `(id typed as und0's u, roundCol int)` with no rows. */
+  private def priorityRounds(und0: DataFrame, seed: Long, maxRounds: Int,
+                             roundCol: String, retireCovered: Boolean): DataFrame = {
     val spark = und0.sparkSession
-    var edges = und0.select(col("u"), col("v")).localCheckpoint(true)
-    var active = edges.select(col("u").as("id")).unionAll(edges.select(col("v").as("id")))
-      .distinct()
+    var edges = Pin(und0.select(col("u"), col("v"))).df
+    var active = Pin(edges.select(col("u").as("id"))
+      .unionAll(edges.select(col("v").as("id"))).distinct()
       .withColumn("prio",
-        concat(md5(concat_ws("|", lit(seed.toString), col("id"))), col("id")))
-      .localCheckpoint(true)
-    var out: DataFrame = null
+        concat(md5(concat_ws("|", lit(seed.toString), col("id"))), col("id"))))
+    var out = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+      StructField("id", und0.schema("u").dataType),
+      StructField(roundCol, IntegerType, nullable = false))))
     var round = 0
-    var remaining = active.count()
-    while (remaining > 0) {
+    while (active.rows > 0) {
       round += 1
       if (round > maxRounds)
-        throw new IllegalStateException(s"MIS not converged after $maxRounds rounds")
+        throw new IllegalStateException(
+          s"priority rounds ($roundCol) not converged after $maxRounds rounds")
       val sym = edges.select(col("u").as("a"), col("v").as("b"))
         .unionAll(edges.select(col("v").as("a"), col("u").as("b")))
       val nbrMin = sym
-        .join(active.select(col("id").as("b"), col("prio").as("bp")), Seq("b"))
+        .join(active.df.select(col("id").as("b"), col("prio").as("bp")), Seq("b"))
         .groupBy(col("a").as("id")).agg(min(col("bp")).as("nmin"))
-      val winners = active.join(nbrMin, Seq("id"), "left_outer")
+      val winners = Pin(active.df.join(nbrMin, Seq("id"), "left_outer")
         .filter(col("nmin").isNull || col("prio") < col("nmin"))
-        .select(col("id"), lit(round).as("mis_round")).localCheckpoint(true)
-      val covered = sym.join(winners.select(col("id").as("a")), Seq("a"), "left_semi")
-        .select(col("b").as("id")).distinct()
-      val retired = winners.select(col("id")).unionAll(covered).distinct()
-      active = active.join(retired, Seq("id"), "left_anti").localCheckpoint(true)
-      edges = edges
-        .join(active.select(col("id").as("u")), Seq("u"), "left_semi")
-        .join(active.select(col("id").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v")).localCheckpoint(true)
-      out = if (out == null) winners else out.unionAll(winners)
-      remaining = active.count()
+        .select(col("id"), lit(round).as(roundCol))).df
+      val retired =
+        if (!retireCovered) winners.select(col("id"))
+        else winners.select(col("id")).unionAll(
+          sym.join(winners.select(col("id").as("a")), Seq("a"), "left_semi")
+            .select(col("b").as("id"))).distinct()
+      active = Pin(active.df.join(retired, Seq("id"), "left_anti"))
+      edges = Pin(edges
+        .join(active.df.select(col("id").as("u")), Seq("u"), "left_semi")
+        .join(active.df.select(col("id").as("v")), Seq("v"), "left_semi")
+        .select(col("u"), col("v"))).df
+      out = if (round == 1) winners else out.unionAll(winners)
     }
-    if (out == null)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            und0.schema("u").dataType),
-          org.apache.spark.sql.types.StructField("mis_round",
-            org.apache.spark.sql.types.IntegerType, nullable = false))))
-    else out
+    out
   }
 
   /** Greedy distance-1 graph coloring by iterated priority minima — the
@@ -248,45 +254,13 @@ object GraphMetrics {
     * rounds — expected O(log n) for hash priorities (the JP analysis);
     * raises past `maxRounds`. */
   def greedyColoring(und0: DataFrame, seed: Long = 11L,
-                     maxRounds: Int = 96): DataFrame = {
-    var edges = und0.select(col("u"), col("v")).localCheckpoint(true)
-    var active = edges.select(col("u").as("id"))
-      .unionAll(edges.select(col("v").as("id"))).distinct()
-      .withColumn("prio",
-        concat(md5(concat_ws("|", lit(seed.toString), col("id"))), col("id")))
-      .localCheckpoint(true)
-    var out: DataFrame = null
-    var round = 0
-    var remaining = active.count()
-    while (remaining > 0) {
-      round += 1
-      if (round > maxRounds)
-        throw new IllegalStateException(s"coloring not done after $maxRounds rounds")
-      val sym = edges.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(edges.select(col("v").as("a"), col("u").as("b")))
-      val nbrMin = sym
-        .join(active.select(col("id").as("b"), col("prio").as("bp")), Seq("b"))
-        .groupBy(col("a").as("id")).agg(min(col("bp")).as("nmin"))
-      val winners = active.join(nbrMin, Seq("id"), "left_outer")
-        .filter(col("nmin").isNull || col("prio") < col("nmin"))
-        .select(col("id"), lit(round).as("color")).localCheckpoint(true)
-      active = active.join(winners, Seq("id"), "left_anti").localCheckpoint(true)
-      edges = edges
-        .join(active.select(col("id").as("u")), Seq("u"), "left_semi")
-        .join(active.select(col("id").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v")).localCheckpoint(true)
-      out = if (out == null) winners else out.unionAll(winners)
-      remaining = active.count()
-    }
-    if (out == null) und0.sparkSession.emptyDataFrame
-      .withColumn("id", lit("")).withColumn("color", lit(0)).limit(0)
-    else out
-  }
+                     maxRounds: Int = 96): DataFrame =
+    priorityRounds(und0, seed, maxRounds, "color", retireCovered = false)
 
   /** Global structure metrics as exact integers: total triangles T and
     * wedges W = Σ deg·(deg−1)/2. Transitivity = 3T/W, derived by callers. */
   def globalMetrics(und0: DataFrame): DataFrame = {
-    val und = und0.localCheckpoint(true)
+    val und = Pin(und0).df
     val t = triangleRows(und).agg(count(lit(1)).as("triangles"))
     val w = degrees(und)
       .agg(sum(expr("(deg * (deg - 1)) div 2")).as("wedges"))
@@ -310,7 +284,7 @@ object GraphMetrics {
     * by symmetry; both are emitted so the oracle equality checks the
     * symmetry too. One degree join per endpoint + a single aggregate. */
   def degreeMomentRow(und0: DataFrame): DataFrame = {
-    val und = und0.localCheckpoint(true)
+    val und = Pin(und0).df
     val deg = degrees(und)
     val sym = und.select(col("u"), col("v"))
       .unionAll(und.select(col("v").as("u"), col("u").as("v")))
@@ -337,7 +311,7 @@ object GraphMetrics {
     * id, so at 100 TB they are plain shuffle-hash joins AQE sizes; no
     * iteration, no window. */
   def modularityMoments(und0: DataFrame, labels: DataFrame): DataFrame = {
-    val und = und0.localCheckpoint(true)
+    val und = Pin(und0).df
     val lu = labels.select(col("id").as("u"), col("lbl").as("lu"))
     val lv = labels.select(col("id").as("v"), col("lbl").as("lv"))
     val intra = und.join(lu, Seq("u")).join(lv, Seq("v"))
@@ -363,16 +337,11 @@ object GraphMetrics {
     * (the 100-TB refinement — recount only edges whose triangles were
     * touched — changes the constant, not the shape). Returns the
     * surviving edges with their in-truss support `(u, v, sup)`. */
-  def kTruss(und0: DataFrame, k: Int, maxRounds: Int = 100): DataFrame =
-    kTrussPeel(und0, k, maxRounds)._1
-
-  /** [[kTruss]] plus the converged round count — the probe/evidence
-    * surface the oracle's fixed unroll depth is calibrated from. */
-  private[graft] def kTrussPeel(und0: DataFrame, k: Int,
-                                maxRounds: Int = 100): (DataFrame, Int) = {
+  def kTruss(und0: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
     require(k >= 3, s"k=$k")
-    var und = und0.select(col("u"), col("v")).localCheckpoint(true)
-    var n = und.count()
+    val in = Pin(und0.select(col("u"), col("v")))
+    var und = in.df
+    var n = in.rows
     var rounds = 0
     var sup = und.withColumn("sup", lit(0L)).limit(0)
     var done = n == 0L
@@ -385,14 +354,14 @@ object GraphMetrics {
         .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
         .unionAll(tri.select(least(col("x"), col("z")).as("u"), greatest(col("x"), col("z")).as("v")))
         .unionAll(tri.select(least(col("y"), col("z")).as("u"), greatest(col("y"), col("z")).as("v")))
-      sup = triEdges.groupBy("u", "v").agg(count(lit(1)).as("sup"))
-        .filter(col("sup") >= k - 2).localCheckpoint(true)
-      val m = sup.count()
-      done = m == n
-      n = m
+      val kept = Pin(triEdges.groupBy("u", "v").agg(count(lit(1)).as("sup"))
+        .filter(col("sup") >= k - 2))
+      done = kept.rows == n
+      n = kept.rows
+      sup = kept.df
       und = sup.select(col("u"), col("v"))
     }
-    (sup, rounds)
+    sup
   }
 
   /** k-core: the maximal subgraph in which every node has degree ≥ k
@@ -406,25 +375,22 @@ object GraphMetrics {
     * `(id, deg)` — core members with their in-core degree. */
   def kCore(und0: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
     require(k >= 1, s"k=$k")
-    var und = und0.localCheckpoint(true)
-    var n = und.count()
+    var und = Pin(und0)
     var rounds = 0
-    var done = n == 0L
+    var done = und.rows == 0L
     while (!done) {
       rounds += 1
       if (rounds > maxRounds)
         throw new IllegalStateException(s"k-core peel not converged after $maxRounds rounds")
-      val keep = degrees(und).filter(col("deg") >= k).select("id")
-      val pruned = und
+      val keep = degrees(und.df).filter(col("deg") >= k).select("id")
+      val pruned = Pin(und.df
         .join(keep.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v")).localCheckpoint(true)
-      val m = pruned.count()
-      done = m == n
-      n = m
+        .select(col("u"), col("v")))
+      done = pruned.rows == und.rows
       und = pruned
     }
-    degrees(und).filter(col("deg") >= k)
+    degrees(und.df).filter(col("deg") >= k)
   }
 
   /** Exact neighborhood function (Palmer, Gibbons & Faloutsos, "ANF: a
@@ -433,26 +399,25 @@ object GraphMetrics {
     * radius r = 1..R, `reach_cnt` = |{w ≠ v : dist(v, w) ≤ r}| over the
     * undirected `(u, v)` u<v edge set. Per round one equi-join of the
     * current reach set against the symmetrized edges + a distinct — the
-    * reach set is materialized once per round (localCheckpoint, the CC
-    * rounds' bounded-lineage trade). Exact distinct state is O(Σ|B(v,r)|)
+    * reach set is pinned once per round (the CC rounds' bounded-lineage
+    * trade). Exact distinct state is O(Σ|B(v,r)|)
     * rows — the gate-scale, oracle-replayable form (a fixed unroll of the
     * same recurrence); at 100 TB the state itself is the bottleneck, which
     * is what [[hyperBall]] solves with O(|V|·2^logm) mergeable registers. */
   def neighborhoodExact(und0: DataFrame, maxR: Int): DataFrame = {
     require(maxR >= 1, s"maxR=$maxR")
-    val und = und0.localCheckpoint(true)
-    val sym = und.select(col("u"), col("v"))
-      .unionAll(und.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
-    var reach = sym.select(col("u").as("id"), col("v").as("w")).localCheckpoint(true)
+    val und = Pin(und0).df
+    val sym = Pin(und.select(col("u"), col("v"))
+      .unionAll(und.select(col("v").as("u"), col("u").as("v")))).df
+    var reach = Pin(sym.select(col("u").as("id"), col("v").as("w"))).df
     var out = reach.groupBy("id")
       .agg(count(lit(1)).as("reach_cnt")).withColumn("r", lit(1))
     for (r <- 2 to maxR) {
-      reach = reach.unionAll(
+      reach = Pin(reach.unionAll(
           reach.join(sym.withColumnRenamed("u", "w"), Seq("w"))
             .filter(col("v") =!= col("id"))
             .select(col("id"), col("v").as("w")))
-        .distinct().localCheckpoint(true)
+        .distinct()).df
       out = out.unionAll(reach.groupBy("id")
         .agg(count(lit(1)).as("reach_cnt")).withColumn("r", lit(r)))
     }
@@ -499,10 +464,9 @@ object GraphMetrics {
   def hyperBall(und0: DataFrame, maxR: Int, logm: Int = 6, seed: Long = 7L): DataFrame = {
     require(maxR >= 1 && logm >= 4 && logm <= 12, s"maxR=$maxR logm=$logm")
     val m = 1 << logm
-    val und = und0.localCheckpoint(true)
-    val sym = und.select(col("u"), col("v"))
-      .unionAll(und.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
+    val und = Pin(und0).df
+    val sym = Pin(und.select(col("u"), col("v"))
+      .unionAll(und.select(col("v").as("u"), col("u").as("v")))).df
     val nodes = sym.select(col("u").as("id")).distinct()
     // one register row per node: j = low logm hash bits, rho = rank of the
     // leftmost 1-bit of the remaining w = 64 − logm bits (w + 1 if all
@@ -532,15 +496,14 @@ object GraphMetrics {
             .otherwise(round(raw, 3)).as("est"))
     }
     // round r: pull every neighbor's registers, keep per-(id, j) max
-    var cur = nodes.select(col("id"), pmod(h, lit(m.toLong)).cast("int").as("j"), rho.as("rho"))
-      .localCheckpoint(true)
+    var cur = Pin(nodes.select(col("id"),
+      pmod(h, lit(m.toLong)).cast("int").as("j"), rho.as("rho"))).df
     (1 to maxR).map { r =>
-      cur = cur.unionAll(
+      cur = Pin(cur.unionAll(
           cur.join(sym.withColumnRenamed("u", "w").withColumnRenamed("v", "id2"),
               col("id") === col("w"))
             .select(col("id2").as("id"), col("j"), col("rho")))
-        .groupBy("id", "j").agg(max(col("rho")).as("rho"))
-        .localCheckpoint(true)
+        .groupBy("id", "j").agg(max(col("rho")).as("rho"))).df
       estimate(cur, r)
     }.reduce(_ unionAll _)
   }
@@ -694,7 +657,7 @@ object GraphMetrics {
     * the post-blocking / post-sampling graph. */
   def butterflies(bip0: DataFrame, maxPivotDeg: Int = 64): DataFrame = {
     require(maxPivotDeg >= 2, s"maxPivotDeg=$maxPivotDeg")
-    val bip = bip0.select(col("u"), col("v")).distinct().localCheckpoint(true)
+    val bip = Pin(bip0.select(col("u"), col("v")).distinct()).df
     val ok = bip.join(
         bip.groupBy("v").agg(count(lit(1)).as("vdeg")), Seq("v"))
       .filter(col("vdeg") <= maxPivotDeg).select(col("u"), col("v"))

@@ -1,5 +1,6 @@
 package graft.sample
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,7 +28,7 @@ import org.apache.spark.sql.functions._
   * rescaling yields the identical direction in exact arithmetic), so
   * sweeps stay lazy and the rescale runs every `normalizeEvery`
   * iterations — each segment's whole plan executes exactly ONCE inside
-  * its boundary localCheckpoint, giving 4 driver actions per segment
+  * its boundary pin, giving 4 driver actions per segment
   * instead of 4 per iteration (the fixture gate is job-floor-bound; data
   * cost is unchanged). `normalizeEvery` bounds the unrescaled growth at
   * λ(AᵀA)^normalizeEvery — with the default 5 even a max-degree-10⁶ web
@@ -54,7 +55,7 @@ object Hits {
       // the next segment plans on top of the checkpointed rows — without
       // this the segment re-executes once for the norm and again for the
       // next boundary (measured 2.5× on the gate)
-      val scores = scores0.localCheckpoint(true)
+      val scores = Pin(scores0).df
       val n2 = scores.agg(sum(col(c) * col(c))).head().getDouble(0)
       // an all-zero vector only happens on an empty edge set; guard the
       // division so the fixture edge cases stay NaN-free
@@ -80,13 +81,12 @@ object Hits {
     }
 
     val ids = srcNodes.unionAll(dstNodes).distinct()
-    val out = ids
+    val out = Pin(ids
       .join(hub, Seq("id"), "left_outer")
       .join(auth, Seq("id"), "left_outer")
       .select(col("id"),
         coalesce(col("hub"), lit(0.0)).as("hub"),
-        coalesce(col("auth"), lit(0.0)).as("auth"))
-      .localCheckpoint(true)
+        coalesce(col("auth"), lit(0.0)).as("auth"))).df
     bySrc.unpersist(); byDst.unpersist()
     out
   }

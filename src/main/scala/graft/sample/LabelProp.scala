@@ -1,5 +1,6 @@
 package graft.sample
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,7 +24,7 @@ import org.apache.spark.sql.functions._
   * Per round: one labels⋈edges equi-join + one two-key count aggregate +
   * one min-of-struct pick aggregate (both map-side combinable, no window
   * sort) — scales like the frontier-expansion joins of the samplers.
-  * Labels are localCheckpointed per round (bounded lineage). Only
+  * Labels are pinned per round (bounded lineage). Only
   * edge-incident nodes appear (same contract as ConnectedComponents).
   */
 object LabelProp {
@@ -31,22 +32,20 @@ object LabelProp {
   /** `(id, lbl)` after `rounds` synchronous sweeps; initial label = own id. */
   def run(und0: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds=$rounds")
-    val und = und0.localCheckpoint(true)
+    val und = Pin(und0).df
     val sym = und.select(col("u"), col("v"))
       .unionAll(und.select(col("v").as("u"), col("u").as("v")))
-    var labels = sym.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(true)
+    var labels = Pin(sym.select(col("u").as("id")).distinct()
+      .select(col("id"), col("id").as("lbl"))).df
     for (_ <- 1 to rounds) {
-      labels = sym
+      labels = Pin(sym
         .join(labels.withColumnRenamed("id", "v"), Seq("v"))
         .groupBy(col("u").as("id"), col("lbl"))
         .agg(count(lit(1)).as("c"))
         .groupBy("id")
         // max count, then smallest label: min of (-c, lbl) structs
         .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
-        .select(col("id"), col("m.lbl").as("lbl"))
-        .localCheckpoint(true)
+        .select(col("id"), col("m.lbl").as("lbl"))).df
     }
     labels
   }

@@ -1,6 +1,6 @@
 package graft.sample
 
-import graft.core.Kb
+import graft.core.{Kb, Pin}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * window cumulative sum + threshold filter — the same windowed
   * inverse-CDF pick [[WalkSampler]] uses for PageRank-weighted choice.
   * First step has no `prev`: uniform pick via the same machinery with all
-  * weights equal. Lineage truncates via localCheckpoint every
+  * weights equal. Lineage truncates via a pin every
   * every step (the [[DeepWalk.corpus]] materialization argument).
   */
 object Node2Vec {
@@ -50,16 +50,13 @@ object Node2Vec {
              seed: Long = 42L): DataFrame = {
     require(reps >= 1 && steps >= 0, s"reps=$reps steps=$steps")
     require(wReturn >= 1 && wNear >= 1 && wFar >= 1, "weights must be >= 1")
-    val edges = kb.edges.select(col("src"), col("pred"), col("dst"))
-      .localCheckpoint(true)
-    val pairSet = edges.select(col("src").as("p_src"), col("dst").as("p_dst")).distinct()
-      .localCheckpoint(true)
+    val edges = Pin(kb.edges.select(col("src"), col("pred"), col("dst"))).df
+    val pairSet = Pin(edges.select(col("src").as("p_src"), col("dst").as("p_dst")).distinct()).df
 
-    var state = starts
+    var state = Pin(starts
       .join(broadcast(kb.spark.range(0, reps).withColumnRenamed("id", "r")))
       .select(concat(col("id"), lit("#"), col("r").cast("string")).as("walk_id"),
-        lit(null).cast("string").as("prev"), col("id").as("cur"))
-      .localCheckpoint(true)
+        lit(null).cast("string").as("prev"), col("id").as("cur"))).df
     var out = state.select(col("walk_id"), lit(0).as("step"), col("cur").as("node"))
 
     var i = 1
@@ -86,9 +83,8 @@ object Node2Vec {
       // per-step materialization — same fix as [[DeepWalk.corpus]]: a lazy
       // state made every later step's union branch re-derive all prior
       // steps (O(steps²) join cascade in the executed plan)
-      state = picked
-        .select(col("walk_id"), col("cur").as("prev"), col("dst").as("cur"))
-        .localCheckpoint(true)
+      state = Pin(picked
+        .select(col("walk_id"), col("cur").as("prev"), col("dst").as("cur"))).df
       out = out.unionAll(
         state.select(col("walk_id"), lit(i).as("step"), col("cur").as("node")))
       i += 1

@@ -33,9 +33,8 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   * any init rows all fit, the sweeps run on the driver as plain array
   * sweeps over an in-link CSR of dense ids (the flat layout
   * [[graft.core.LocalGraph]] uses): the whole call is those pin jobs and a
-  * local relation back in the caller's session — no session clone, cache
-  * or checkpoint. Its sums
-  * run in an order fixed by the edge multiset, so its ranks are
+  * local relation back in the caller's session — no cache and no sweep
+  * pin. Its sums run in an order fixed by the edge multiset, so its ranks are
   * bit-identical at any parallelism; the Spark form's Jacobi sums run in
   * shuffle order, so the two forms agree to rounding (PageRankSpec holds
   * them within 1e-12·(1+pr) and to the same residual-stop sweep count).
@@ -48,8 +47,8 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   * run only over the in-linked subgraph (on web-shaped graphs the
   * source-only fraction is large: in the TPC-H KG it is ~80% of nodes and
   * ~97% of edges). Each sweep is one shuffle on `dst`; lineage is
-  * truncated with localCheckpoint every 10 sweeps, and every sweep under a
-  * residual stop (the residual job reads the sweep anyway).
+  * truncated with a pin every 10 sweeps, and every sweep under a residual
+  * stop (the residual job reads the sweep anyway).
   *
   * That form runs with AQE off, in a CLONED session (shared SparkContext
   * and cache, isolated SQLConf), so queries running concurrently on the
@@ -144,28 +143,34 @@ object PageRank {
     * envelope and holds no null, the node ids and then the init rows are
     * pinned the same way, and the sweeps run on the driver
     * ([[localLoop]]). Otherwise the Spark form ([[sparkLoop]]) runs over
-    * the pins taken so far. */
+    * the pins taken so far. The pins run in the Spark form's AQE-off
+    * session clone: under AQE every exchange of an un-materialized input
+    * derivation would run as a job of its own. */
   private def sweepLoop(nodes0: DataFrame, edges0: DataFrame, d: Double,
                         seeds: Seq[String], init: Option[DataFrame],
                         sweeps: Int, tol: Option[Double]): (DataFrame, Int) = {
     require(sweeps >= 0, s"sweeps=$sweeps")
-    val nodeIds = nodes0.select("id")
+    val caller = nodes0.sparkSession
+    val scoped = GraftSessions.cloneWithConf(caller, "spark.sql.adaptive.enabled" -> "false")
+    def bound(df: DataFrame) = GraftSessions.bind(df, scoped)
+    val nodeIds = bound(nodes0.select("id"))
     val typed = Seq(edges0.schema("src"), edges0.schema("dst"), nodeIds.schema("id"))
         .forall(_.dataType == StringType) && edges0.schema("w").dataType == DoubleType &&
       init.forall(_.schema("id").dataType == StringType)
-    val (edges, edgeRows) = if (typed) pinRows(edges0) else (Pin(edges0), None)
+    val (edges, edgeRows) = if (typed) pinRows(bound(edges0)) else (Pin(bound(edges0)), None)
     val nodes = edgeRows.map(_ => pinRows(nodeIds))
     val starts = for (rows <- init; _ <- nodes.flatMap(_._2))
-      yield pinRows(rows.select(col("id"), coalesce(col("pr"), lit(1.0)).as("pr")))
+      yield pinRows(bound(rows.select(col("id"), coalesce(col("pr"), lit(1.0)).as("pr"))))
     val local = for {
       es <- edgeRows
       ns <- nodes.flatMap(_._2)
       // Some(None) without an init; None when its rows are not held
       is <- if (init.isEmpty) Some(None) else starts.flatMap(_._2).map(Some(_))
-      out <- localLoop(nodes0.sparkSession, ns.map(_.getString(0)), es, is, d, seeds, sweeps, tol)
+      out <- localLoop(caller, ns.map(_.getString(0)), es, is, d, seeds, sweeps, tol)
     } yield out
-    local.getOrElse(sparkLoop(nodes.fold(nodeIds)(_._1.df), nodes.map(_._1.rows), edges, d,
-      seeds, starts.map(_._1.df).orElse(init), sweeps, tol))
+    local.getOrElse(sparkLoop(scoped, caller, nodes.fold(nodeIds)(_._1.df),
+      nodes.map(_._1.rows), edges, d, seeds, starts.map(_._1.df).orElse(init.map(bound)),
+      sweeps, tol))
   }
 
   /** [[Pin.withRows]], keeping the rows only when none holds a null: a null
@@ -262,15 +267,14 @@ object PageRank {
   private val RankSchema = StructType(Seq(StructField("id", StringType),
     StructField("pr", DoubleType, nullable = false)))
 
-  /** The sweeps as Spark plans over the pinned edges, in a session clone
-    * with AQE off. `nodes0` holds the node ids, `n` their row count when
-    * already counted. */
-  private def sparkLoop(nodes0: DataFrame, n: Option[Long], edges: Pinned, d: Double,
+  /** The sweeps as Spark plans over the pinned edges in `scoped`, a
+    * session clone with AQE off that every input is bound to; the ranks
+    * come back in the `caller`'s session. `nodes` holds the node ids, `n`
+    * their row count when already counted. */
+  private def sparkLoop(scoped: SparkSession, caller: SparkSession, nodes: DataFrame,
+                        n: Option[Long], edgesW: Pinned, d: Double,
                         seeds: Seq[String], init: Option[DataFrame],
                         sweeps: Int, tol: Option[Double]): (DataFrame, Int) = {
-    val caller = nodes0.sparkSession
-    val scoped = GraftSessions.cloneWithConf(caller, "spark.sql.adaptive.enabled" -> "false")
-    val nodes = GraftSessions.bind(nodes0, scoped)
     val s: Column => Column = id =>
       when(id.isin(seeds: _*), lit(1.0 / seeds.size)).otherwise(lit(0.0))
     val tele: Column => Column =
@@ -282,15 +286,14 @@ object PageRank {
     // un-materialized it was re-evaluated 2-3× (for the TPC-H KG: a 6-way
     // union with two lineitem-scale distincts per evaluation; r6 stage
     // evidence)
-    val edgesW = edges.copy(df = GraftSessions.bind(edges.df, scoped))
     scoped.conf.set("spark.sql.shuffle.partitions",
       math.max(1L, math.min(65536L, edgesW.rows / RowsPerSweepPartition)))
 
     // a per-node vector: a column over the node id, or (id, pr) rows
     val start: Either[Column => Column, DataFrame] = init match {
-      case Some(rows) => Right(nodes
-        .join(GraftSessions.bind(rows.select(col("id"), col("pr")), scoped), Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("pr"), lit(1.0)).as("pr")).localCheckpoint(true))
+      case Some(rows) => Right(Pin(nodes
+        .join(rows.select(col("id"), col("pr")), Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("pr"), lit(1.0)).as("pr"))).df)
       case None => Left(if (seeds.isEmpty) _ => lit(1.0) else s)
     }
     val startRows = start.fold(f => nodes.select(col("id"), f(col("id")).as("pr")), identity)
@@ -342,8 +345,8 @@ object PageRank {
     // sweep 1 reads the start vector through a base of its own, consumed
     // once, so it stays lazy and the sweep is materialized on its own; from
     // sweep 2 on the source-only nodes sit at tele, and that base is reused
-    // every sweep → checkpoint-materialized once
-    lazy val base = baseOf(Left(tele)).localCheckpoint(true)
+    // every sweep → pinned once
+    lazy val base = Pin(baseOf(Left(tele))).df
     var ranks = startRows
     var t = 0
     var resid = Double.MaxValue
@@ -351,7 +354,7 @@ object PageRank {
       val next = sweep(ranks, if (t == 0) baseOf(start) else base)
       t += 1
       val pinned = if (tol.isDefined || t == 1 || t % MaterializeEvery == 0 || t == sweeps)
-        next.localCheckpoint(true) else next
+        Pin(next).df else next
       if (tol.isDefined) resid = residual(ranks, pinned)
       ranks = pinned
     }
@@ -359,7 +362,7 @@ object PageRank {
     // final ranks: evolving dst-set ranks ∪ source-only nodes at tele
     val sourceOnly = nodes.join(dstNodes, Seq("id"), "left_anti")
       .select(col("id"), tele(col("id")).as("pr"))
-    val out = ranks.unionAll(sourceOnly).localCheckpoint(true)
+    val out = Pin(ranks.unionAll(sourceOnly)).df
     adj.unpersist(); adjIter.unpersist(); dstNodes.unpersist()
     (GraftSessions.bind(out, caller), t)
   }

@@ -1,5 +1,6 @@
 package graft.sample
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,9 +31,9 @@ import org.apache.spark.sql.functions._
   * bowtie; the TPC-H KG is a 4-level DAG); inner rounds by the graph
   * diameter. `maxRounds` guards both: like ConnectedComponents, a
   * non-converged decomposition raises instead of returning wrong labels.
-  * All per-round state is O(|live|), localCheckpointed to truncate
-  * lineage; joins are keyed equi-joins throughout — no cartesian, no
-  * driver-side graph.
+  * All per-round state is O(|live|), pinned to truncate lineage (the
+  * live and backward loops stop on the pins' counted rows); joins are
+  * keyed equi-joins throughout — no cartesian, no driver-side graph.
   */
 object Scc {
 
@@ -41,18 +42,18 @@ object Scc {
     * join-free to compute). Every node appears exactly once. */
   def compute(edges0: DataFrame, nodes0: DataFrame, maxRounds: Int = 64): DataFrame = {
     val spark = edges0.sparkSession
-    var live = nodes0.select(col("id")).distinct().localCheckpoint(true)
-    var liveEdges = edges0.select("src", "dst").distinct()
-      .filter(col("src") =!= col("dst")).localCheckpoint(true)
+    var live = Pin(nodes0.select(col("id")).distinct())
+    var liveEdges = Pin(edges0.select("src", "dst").distinct()
+      .filter(col("src") =!= col("dst"))).df
     var result: DataFrame = null
     var outer = 0
 
-    while (!live.isEmpty) {
+    while (live.rows > 0) {
       outer += 1
       require(outer <= maxRounds, s"SCC did not peel in $maxRounds outer rounds")
 
       // 1. forward max-color fixpoint, semi-naive
-      var colors = live.select(col("id"), col("id").as("color")).localCheckpoint(true)
+      var colors = Pin(live.df.select(col("id"), col("id").as("color"))).df
       var frontier = colors
       var inner = 0
       while (!frontier.isEmpty) {
@@ -61,11 +62,10 @@ object Scc {
         val cand = liveEdges
           .join(frontier.withColumnRenamed("id", "src"), Seq("src"))
           .groupBy(col("dst").as("id")).agg(max(col("color")).as("cand"))
-        val merged = colors.join(cand, Seq("id"), "left_outer")
+        val merged = Pin(colors.join(cand, Seq("id"), "left_outer")
           .select(col("id"),
             greatest(col("color"), coalesce(col("cand"), col("color"))).as("color"),
-            (col("cand").isNotNull && col("cand") > col("color")).as("changed"))
-          .localCheckpoint(true)
+            (col("cand").isNotNull && col("cand") > col("color")).as("changed"))).df
         frontier = merged.filter(col("changed")).select("id", "color")
         colors = merged.select("id", "color")
       }
@@ -73,32 +73,32 @@ object Scc {
       // 2. backward reachability from the roots within each color class
       val roots = colors.filter(col("color") === col("id"))
         .select(col("id"), col("id").as("scc"))
-      var members = roots.localCheckpoint(true)
+      var members = Pin(roots)
       var back = members
       inner = 0
-      while (!back.isEmpty) {
+      while (back.rows > 0) {
         inner += 1
         require(inner <= maxRounds, s"SCC backward pass did not converge in $maxRounds rounds")
         val reached = liveEdges
-          .join(back.withColumnRenamed("id", "dst"), Seq("dst"))
+          .join(back.df.withColumnRenamed("id", "dst"), Seq("dst"))
           .select(col("src").as("id"), col("scc")).distinct()
           // stay inside the color class: u joins scc c only if c reaches u
           .join(colors.withColumnRenamed("color", "scc"), Seq("id", "scc"), "left_semi")
-        back = reached.join(members, Seq("id"), "left_anti").localCheckpoint(true)
-        members = members.unionAll(back).localCheckpoint(true)
+        back = Pin(reached.join(members.df, Seq("id"), "left_anti"))
+        members = Pin(members.df.unionAll(back.df))
       }
 
       // 3. peel
-      result = if (result == null) members else result.unionAll(members)
-      live = live.join(members, Seq("id"), "left_anti").localCheckpoint(true)
-      liveEdges = liveEdges
-        .join(live.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .join(live.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        .select("src", "dst").localCheckpoint(true)
+      result = if (result == null) members.df else result.unionAll(members.df)
+      live = Pin(live.df.join(members.df, Seq("id"), "left_anti"))
+      liveEdges = Pin(liveEdges
+        .join(live.df.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+        .join(live.df.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+        .select("src", "dst")).df
     }
 
     if (result == null) nodes0.select(col("id"), col("id").as("scc")).limit(0)
-    else result.localCheckpoint(true)
+    else Pin(result).df
   }
 
   /** Topological LAYERS of the SCC condensation: `(id, scc, layer)` with
@@ -115,13 +115,13 @@ object Scc {
     * any graph that condensed at all). */
   def dagLayers(edges0: DataFrame, nodes0: DataFrame, maxRounds: Int = 64): DataFrame = {
     val scc = compute(edges0, nodes0, maxRounds)
-    val ce = edges0.select("src", "dst")
+    val ce = Pin(edges0.select("src", "dst")
       .join(scc.select(col("id").as("src"), col("scc").as("csrc")), Seq("src"))
       .join(scc.select(col("id").as("dst"), col("scc").as("cdst")), Seq("dst"))
       .select(col("csrc"), col("cdst"))
-      .filter(col("csrc") =!= col("cdst")).distinct().localCheckpoint(true)
-    var layer = scc.select(col("scc")).distinct()
-      .withColumn("layer", lit(0L)).localCheckpoint(true)
+      .filter(col("csrc") =!= col("cdst")).distinct()).df
+    var layer = Pin(scc.select(col("scc")).distinct()
+      .withColumn("layer", lit(0L))).df
     var changed = true
     var i = 0
     while (changed) {
@@ -130,10 +130,9 @@ object Scc {
       val relax = layer.join(ce.withColumnRenamed("csrc", "scc"), Seq("scc"))
         .groupBy(col("cdst").as("scc"))
         .agg(max(col("layer") + 1).as("cand"))
-      val nxt = layer.join(relax, Seq("scc"), "left_outer")
+      val nxt = Pin(layer.join(relax, Seq("scc"), "left_outer")
         .select(col("scc"),
-          greatest(col("layer"), coalesce(col("cand"), lit(0L))).as("layer"))
-        .localCheckpoint(true)
+          greatest(col("layer"), coalesce(col("cand"), lit(0L))).as("layer"))).df
       changed = !nxt.join(layer.withColumnRenamed("layer", "old"), Seq("scc"))
         .filter(col("layer") =!= col("old")).isEmpty
       layer = nxt

@@ -1,6 +1,6 @@
 package graft.sample
 
-import graft.core.Determinism
+import graft.core.{Determinism, Pin}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * (id, dim, δ) and reduce via ONE map-side-combinable groupBy each; the
   * update is a keyed left join + zip_with. Embedding tables are |V|·d and
   * |R|·d longs — never broadcast, never collected; per-epoch lineage is
-  * cut by localCheckpoint so E epochs stay E independent shuffles deep.
+  * cut by a pin so E epochs stay E independent shuffles deep.
   */
 object Transe {
 
@@ -140,17 +140,16 @@ object Transe {
   /** Train `cfg.epochs` full-batch epochs. `negatives` in the
     * [[KgeNegatives]] shape (src, pred, dst, i, neg_src, neg_dst) — each
     * row one training pair. Returns (entities(id, emb),
-    * relations(pred, remb)), both localCheckpointed. */
+    * relations(pred, remb)), both pinned. */
   def train(nodes: DataFrame, edges: DataFrame, negatives: DataFrame,
             cfg: Config = Config()): (DataFrame, DataFrame) = {
-    val pairs = negatives.select("src", "pred", "dst", "neg_src", "neg_dst")
-      .localCheckpoint(true)
-    var ent = initEntities(nodes, cfg).localCheckpoint(true)
-    var rel = initRelations(edges, cfg).localCheckpoint(true)
+    val pairs = Pin(negatives.select("src", "pred", "dst", "neg_src", "neg_dst")).df
+    var ent = Pin(initEntities(nodes, cfg)).df
+    var rel = Pin(initRelations(edges, cfg)).df
     for (_ <- 1 to cfg.epochs) {
       val (e2, r2) = epoch(pairs, ent, rel, cfg)
-      ent = e2.localCheckpoint(true)
-      rel = r2.localCheckpoint(true)
+      ent = Pin(e2).df
+      rel = Pin(r2).df
     }
     (ent, rel)
   }

@@ -210,7 +210,7 @@ final class WalkSampler(
     // PageRank.compute returns materialized ranks (the in-linked ranks ∪
     // the source-only nodes at d/n) in the caller's session — a local
     // relation when its graph fits the broadcast envelope, the sweep
-    // loop's final localCheckpoint above it — so this projection is a
+    // loop's final pin above it — so this projection is a
     // cheap scan.
     //
     // The rank table is joined INTO the neighbor table ONCE per draw (one

@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.core.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -160,7 +161,7 @@ object Ann {
                         iters: Int = 0): DataFrame = {
     var cents = ivfCentroids(embeddings, nlist, seed)
     if (iters > 0) {
-      cents = cents.localCheckpoint(true)
+      cents = Pin(cents).df
       for (_ <- 1 to iters) {
         val members = embeddings.join(assignTo(embeddings, cents), Seq("vec_id"))
           .select(col("cid"), posexplode(col("embedding")).as(Seq("i", "x")))
@@ -172,10 +173,9 @@ object Ann {
             array_sort(collect_list(struct(col("i"),
               (col("q").cast("double") / (col("c").cast("double") * 1000000.0)).as("v")))),
             e => e.getField("v")).as("ce"))
-        cents = cents.select(col("cid"), col("ce").as("prev"))
+        cents = Pin(cents.select(col("cid"), col("ce").as("prev"))
           .join(next, Seq("cid"), "left")
-          .select(col("cid"), coalesce(col("ce"), col("prev")).as("ce"))
-          .localCheckpoint(true)
+          .select(col("cid"), coalesce(col("ce"), col("prev")).as("ce"))).df
       }
     }
     cents
@@ -268,11 +268,11 @@ object Ann {
                seed: Long = 97L, lloyd: Int = 0): DataFrame = {
     val cents = ivfCentroidsLloyd(embeddings, nlist, seed, lloyd)
     val w = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
-    val assign = embeddings.crossJoin(broadcast(cents))
+    val assign = Pin(embeddings.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("embedding"), col("cid"),
         round(cosine(col("embedding"), col("ce")), 6).as("csim"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("rn").localCheckpoint(true)
+      .drop("rn")).df
     val lhs = assign.select(col("cid"), col("vec_id").as("a"),
       col("embedding").as("ea"), col("csim").as("ca"))
     val rhs = assign.select(col("cid"), col("vec_id").as("b"),

@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.core.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -64,10 +65,9 @@ object Pq {
       .toDF("vec_id", "code")
     val seeds = embeddings.join(broadcast(codeDf), Seq("vec_id"))
       .select(col("vec_id"), col("embedding"), col("code"))
-    var books = subParts(seeds.select(col("vec_id"), col("embedding")), m, dim)
+    var books = Pin(subParts(seeds.select(col("vec_id"), col("embedding")), m, dim)
       .join(seeds.select(col("vec_id"), col("code")), Seq("vec_id"))
-      .select(col("sub"), col("code"), col("j"), col("x").as("cx"))
-      .localCheckpoint(true)
+      .select(col("sub"), col("code"), col("j"), col("x").as("cx"))).df
     for (_ <- 1 to lloyd) {
       // assign on the current books, recompute each code's subvector mean
       // on integer-quantized sums; codes that lose all members keep their
@@ -80,10 +80,9 @@ object Pq {
           count(lit(1)).as("c"))
         .select(col("sub"), col("code"), col("j"),
           (col("q").cast("double") / (col("c").cast("double") * 1000000.0)).as("nx"))
-      books = books.join(next, Seq("sub", "code", "j"), "left_outer")
+      books = Pin(books.join(next, Seq("sub", "code", "j"), "left_outer")
         .select(col("sub"), col("code"), col("j"),
-          coalesce(col("nx"), col("cx")).as("cx"))
-        .localCheckpoint(true)
+          coalesce(col("nx"), col("cx")).as("cx"))).df
     }
     books
   }

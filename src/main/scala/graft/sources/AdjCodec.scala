@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.{Determinism, Ranks}
+import graft.core.{Determinism, Pin, Ranks}
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -156,7 +156,7 @@ object AdjCodec {
     val incPairs = incEdges.select("src", "dst")
       .join(s, Seq("src")).join(d, Seq("dst"))
       .select(col("src_nid"), col("dst_nid"))
-    val touched = incPairs.select("src_nid").distinct().localCheckpoint(true)
+    val touched = Pin(incPairs.select("src_nid").distinct()).df
     val reEnc = nidPairs(stored.join(touched, Seq("src_nid"), "left_semi"))
       .unionAll(incPairs)
       .groupBy(col("src_nid"))

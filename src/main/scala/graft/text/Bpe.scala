@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,8 +18,8 @@ import org.apache.spark.sql.functions._
   *     explode-adjacent-pairs + groupBy-sum + TakeOrdered(1) to pick the
   *     most frequent symbol pair, and one pure map to splice the merge
   *     into the segmentations. The per-iteration words table is
-  *     localCheckpoint-truncated so neither lineage nor expression depth
-  *     grows with the merge count.
+  *     pinned, which truncates it, so neither lineage nor expression
+  *     depth grows with the merge count.
   *
   * Segmentations are separator-delimited strings with LEADING AND TRAILING
   * separators ("low"), so a pair (x, y) occurs as
@@ -128,15 +129,13 @@ object Bpe {
   def train(docs: DataFrame, k: Int, textCol: String = "text",
             driverMaxWords: Long = DriverTrainMaxWords): Model = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val words0 = wordCounts(docs, textCol)
-      .withColumn("seg", initSeg(col("word")))
-      .localCheckpoint(true)
-    if (words0.count() <= driverMaxWords) trainLocal(words0, k)
-    else trainDistributed(words0, k)
+    val words0 = Pin(wordCounts(docs, textCol).withColumn("seg", initSeg(col("word"))))
+    if (words0.rows <= driverMaxWords) trainLocal(words0.df, k)
+    else trainDistributed(words0.df, k)
   }
 
   /** distributed merge loop (above-gate path): one pair-count + argmax job
-    * and one checkpoint-materializing merge-apply job per merge */
+    * and one pinned merge-apply job per merge */
   private def trainDistributed(words0: DataFrame, k: Int): Model = {
     var words = words0
     val merges = Seq.newBuilder[Merge]
@@ -151,9 +150,7 @@ object Bpe {
       else {
         val (x, y, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += Merge(rank, x, y, c)
-        words = words
-          .withColumn("seg", applyMerge(col("seg"), x, y))
-          .localCheckpoint(true)
+        words = Pin(words.withColumn("seg", applyMerge(col("seg"), x, y))).df
         rank += 1
       }
     }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -58,7 +59,7 @@ object Dsir {
     * self-contained. */
   def featureSurface(docs: DataFrame, targetPred: Column,
                      buckets: Int = 512): DataFrame = {
-    val f = features(docs, buckets).localCheckpoint(true)
+    val f = Pin(features(docs, buckets)).df
     val flags = docs.select(col("doc_id"), targetPred.as("is_tgt"))
     val ff = f.join(flags, Seq("doc_id"))
     val totals = ff.groupBy("bucket").agg(
@@ -75,7 +76,7 @@ object Dsir {
     * not oracled). Higher ⇒ more target-like. */
   def weights(docs: DataFrame, targetPred: Column, buckets: Int = 512,
               alpha: Double = 1.0): DataFrame = {
-    val surf = featureSurface(docs, targetPred, buckets).localCheckpoint(true)
+    val surf = Pin(featureSurface(docs, targetPred, buckets)).df
     val g = surf.select(col("bucket"), col("tgt_cnt"), col("raw_cnt")).distinct()
       .agg(sum(col("tgt_cnt")).as("t_tot"), sum(col("raw_cnt")).as("r_tot"))
       .collect()(0)

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,7 +51,7 @@ object Retrieval {
     val p = postings(docs).join(
       broadcast(queryTerms.distinct.toDF("term")), Seq("term"))
     val df = p.groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
-    val lens = docLengths(docs).localCheckpoint(true)
+    val lens = Pin(docLengths(docs)).df
     val consts = lens.agg(count(lit(1)).as("n_docs"), sum(col("doclen")).as("len_sum"))
     p.join(broadcast(df), Seq("term"))
       .join(lens, Seq("doc_id"))
@@ -91,7 +92,7 @@ object Retrieval {
   def jaccardRank(docs: DataFrame, queryIds: Seq[Long], topK: Int): DataFrame = {
     require(queryIds.nonEmpty, "jaccardRank needs at least one query id")
     val g2 = Curation.wordNgramsAll(docs, 2).distinct()
-    val sizes = g2.groupBy("doc_id").agg(count(lit(1)).as("n")).localCheckpoint(true)
+    val sizes = Pin(g2.groupBy("doc_id").agg(count(lit(1)).as("n"))).df
     // query grams are user-scale (|queryIds| × grams-per-doc) — declared
     // broadcast so the candidate join never shuffles the corpus gram table
     val qg = broadcast(g2.filter(col("doc_id").isin(queryIds: _*))

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -43,7 +44,7 @@ object TextRank {
     * spec-pinned downstream of the [[wordGraph]] gate. */
   def keywords(docs: DataFrame, d: Double = 0.15,
                iterations: Int = 30): DataFrame = {
-    val g = wordGraph(docs).localCheckpoint(true)
+    val g = Pin(wordGraph(docs)).df
     val sym = g.select(col("u").as("src"), col("v").as("dst"), col("cnt").as("w"))
       .unionAll(g.select(col("v").as("src"), col("u").as("dst"),
         col("cnt").as("w")))

@@ -86,6 +86,21 @@ class EntailmentSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet === got)
   }
 
+  test("transitiveClosure: a doubling round's pin is its only action") {
+    val s = spark
+    import s.implicits._
+    // a path of n edges closes in ⌈log₂ n⌉ doubling rounds plus one that
+    // adds nothing. A round's jobs are its pin's and the AQE stages under
+    // it (a bare checkpoint plus count() ran 7 per round on this input)
+    def chain(n: Int) = (0 until n).map(i => (f"c$i%02d", f"c${i + 1}%02d")).toDF("src", "dst")
+    def jobs(n: Int) = org.apache.spark.graftshim.JobCount(s.sparkContext)(
+      Entailment.transitiveClosure(chain(n)).collect())
+    val (short, jShort) = jobs(4)    // 3 rounds
+    val (long, jLong) = jobs(16)     // 5 rounds
+    assert(short.length === 10 && long.length === 16 * 17 / 2)
+    assert(jLong - jShort <= 2 * 3, s"two more rounds ran ${jLong - jShort} more jobs")
+  }
+
   test("transitiveClosure: path, cycle, branching — hand-traced; idempotent") {
     val s = spark
     import s.implicits._

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** [[Pin]]: the counted size is the real size, the planner reads it, and
   * every operator that dropped its hand-written broadcast hint in favour of
-  * pinned stats returns the same rows when nothing may broadcast. */
+  * pinned stats, or whose round state is pinned, returns the same rows
+  * when nothing may broadcast. */
 class PinSpec extends SparkSpec {
 
   private def recountBytes(df: DataFrame): Long =
@@ -113,5 +114,29 @@ class PinSpec extends SparkSpec {
     val rep = spark.range(0, 100).select(concat(lit("p"), col("id")).as("id"),
       concat(lit("p"), col("id") % 10).as("rep"))
     sameUnderNoBroadcast("sameAsRewrite")(Entailment.sameAsRewrite(triples, rep))
+    // the round loops whose per-round state is now pinned with counted stats
+    import graft.sample.{Boruvka, GraphMetrics, LabelProp, Scc}
+    sameUnderNoBroadcast("kCore")(GraphMetrics.kCore(und, 2))
+    sameUnderNoBroadcast("kTruss")(GraphMetrics.kTruss(cooc, 3))
+    sameUnderNoBroadcast("maximalIndependentSet")(GraphMetrics.maximalIndependentSet(und))
+    sameUnderNoBroadcast("LabelProp")(LabelProp.run(cooc, rounds = 3))
+    // orders below o15 also point back at their parts: cyclic SCCs
+    val directed = edges.select(col("src"), col("dst")).unionAll(
+      edges.filter(col("src") < lit("o15")).select(col("dst").as("src"), col("src").as("dst")))
+    val nodes = directed.select(col("src").as("id")).unionAll(directed.select(col("dst").as("id")))
+      .distinct()
+    sameUnderNoBroadcast("Scc")(Scc.compute(directed, nodes))
+    sameUnderNoBroadcast("Boruvka")(Boruvka.minimumSpanningForest(
+      cooc.withColumn("w", pmod(xxhash64(col("u"), col("v")), lit(50L)))))
+    sameUnderNoBroadcast("maximalMatching")(graft.dedup.Dedup.maximalMatching(
+      cooc.select(col("u").as("a"), col("v").as("b"), pmod(xxhash64(col("u")), lit(9L)).as("w"))))
+    val types = spark.range(0, 100).select(concat(lit("p"), col("id")).as("node"),
+      concat(lit("C"), col("id") % 4).as("cls"))
+    sameUnderNoBroadcast("wlColors")(KgStats.wlColors(edges, types, 2))
+    // a 60-node chain with doubling shortcuts
+    val chain = spark.range(0, 59).select(concat(lit("n"), col("id")).as("src"),
+      concat(lit("n"), col("id") + 1).as("dst")).unionAll(spark.range(1, 30)
+      .select(concat(lit("n"), col("id")).as("src"), concat(lit("n"), col("id") * 2).as("dst")))
+    sameUnderNoBroadcast("transitiveClosure")(Entailment.transitiveClosure(chain))
   }
 }

@@ -236,6 +236,20 @@ class GraphMetricsSpec extends SparkSpec {
       GraphMetrics.kCore(wide, 2).collect().toSet)
   }
 
+  test("k-core: a peel round's pin is its only action; counted stats keep its joins off SMJ") {
+    // a path of n edges loses its two end edges per 2-core round: ⌈n/2⌉
+    // peel rounds plus one that removes nothing. A round is one pin: its
+    // jobs are the pin's and the AQE stages under it (a bare checkpoint
+    // plus count() ran 5 per round on this input)
+    def chain(n: Int) = (0 until n).map(i => (f"c$i%02d", f"c${i + 1}%02d")).toDF("u", "v")
+    val sc = s.sparkContext
+    def jobs(n: Int) = org.apache.spark.graftshim.JobCount(sc)(GraphMetrics.kCore(chain(n), 2).collect())
+    val (short, jShort) = jobs(6)   // 4 rounds
+    val (long, jLong) = jobs(10)    // 6 rounds
+    assert(short.isEmpty && long.isEmpty)
+    assert(jLong - jShort <= 2 * 3, s"two more rounds ran ${jLong - jShort} more jobs")
+  }
+
   test("sampler-quality usage: transitivity of a sample is comparable to the original") {
     val kb = graft.fixtures.HepatitisLikeKb.kb(s)
     // "knows" has a hub (p1 knows 2..30) — the projection is non-trivial
@@ -318,6 +332,18 @@ class GraphMetricsSpec extends SparkSpec {
     assert(GraphMetrics.linkPredFeatures(star, maxZDeg = 2, minSupport = 1)
       .collect().isEmpty)
   })
+
+  test("MIS and coloring of an empty edge set: typed empty frames, id typed as u") {
+    import org.apache.spark.sql.types._
+    for (g <- Seq(Seq.empty[(String, String)].toDF("u", "v"), Seq.empty[(Long, Long)].toDF("u", "v"))) {
+      def schema(roundCol: String) = StructType(Seq(StructField("id", g.schema("u").dataType),
+        StructField(roundCol, IntegerType, nullable = false)))
+      val mis = GraphMetrics.maximalIndependentSet(g)
+      val colors = GraphMetrics.greedyColoring(g)
+      assert(mis.schema === schema("mis_round") && mis.collect().isEmpty)
+      assert(colors.schema === schema("color") && colors.collect().isEmpty)
+    }
+  }
 
   test("greedyColoring: proper, complete, contiguous colors, deterministic") {
     val rnd = new scala.util.Random(7)

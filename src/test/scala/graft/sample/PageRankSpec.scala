@@ -365,6 +365,26 @@ class PageRankSpec extends SparkSpec {
     }
   }
 
+  test("sf0.001 raw load: the pins run with AQE off, no exchange runs as a job of its own") {
+    // an un-pinned load: every entry point pins the edge derivation itself
+    val kb = graft.sources.TpchKg.load(spark, "/root/testdata/sf0.001")
+    val sc = spark.sparkContext
+    val seeds = seedsOf(kb)
+    val init = initOf(kb)
+    // (entry point, driver-form jobs: one per pin, Spark-form jobs); pinned
+    // under the caller's AQE they were 4/4/5 and 9/8/18
+    val cases = Seq[(String, () => DataFrame, Int, Int)](
+      ("compute", () => PageRank.compute(kb, iterations = 10), 2, 7),
+      ("personalized", () => PageRank.personalized(kb, seeds, iterations = 10), 2, 6),
+      ("computeFrom", () => PageRank.computeFrom(kb, init)._1, 3, 16))
+    for ((name, op, budget, sparkBudget) <- cases) {
+      val (_, jobs) = JobCount(sc)(op().collect())
+      val (_, sparkJobs) = noBroadcast(JobCount(sc)(op().collect()))
+      assert(jobs <= budget, s"$name ran $jobs jobs under the envelope")
+      assert(sparkJobs <= sparkBudget, s"$name: the Spark form ran $sparkJobs jobs")
+    }
+  }
+
   test("sf0.001: ≤ 2 jobs per entry point under the envelope, ≤ 3 with an init frame") {
     val kb = tpch
     val sc = spark.sparkContext
