@@ -28,8 +28,7 @@ import org.apache.spark.sql.functions._
   * O(|E|) tables. The raw-types subtree appears twice in the plan
   * (raw ∪ raw⋈⊑c): deliberately NOT checkpointed — at scale that is two
   * pipelined scans of the fact tables, strictly cheaper than
-  * materializing an O(|facts|) intermediate (ExplainAudit
-  * `entailed_types` shows the shape).
+  * materializing an O(|facts|) intermediate.
   */
 object Entailment {
 

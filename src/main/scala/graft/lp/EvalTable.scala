@@ -92,12 +92,8 @@ object EvalTable {
         val (winName, winCe) = fit match {
           case Some(f) => f(sampled, elpS)
           case None => // stand-in: best-F1 pool candidate (ties → lowest idx)
-            pool.zipWithIndex.map { case ((cn, ce), idx) =>
-              val q = LearningProblem.evaluateConcept(sampled, ce, F1, elpS)._2
-              (q, idx, cn, ce)
-            }.minBy { case (q, idx, _, _) => (-q, idx) } match {
-              case (_, _, cn, ce) => (cn, ce)
-            }
+            val q = LearningProblem.evaluateConceptsBatch(sampled, pool.map(_._2), F1, elpS).map(_._2)
+            pool(q.indices.minBy(i => (-q(i), i)))
         }
         sampled.unpersist()
         // reference :170-185 — score the winner on the ORIGINAL graph with

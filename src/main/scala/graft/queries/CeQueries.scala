@@ -88,7 +88,10 @@ object CeQueries {
         .select("src").distinct().collect().map(_.getString(0)).toSeq.sorted
       val neg = inN.filter(col("dst") === "n:1" && col("src").startsWith("s:"))
         .select("src").distinct().collect().map(_.getString(0)).toSeq.sorted
-      val elp = LearningProblem.encode(kb, Lp(pos, neg))
+      // sf0.001 has no nation-1 supplier: neg is empty and encode samples
+      // |pos| negatives (reference knowledge_base.py:686-688) in the
+      // portable LCG order the oracle mirrors
+      val elp = LearningProblem.encode(kb, Lp(pos, neg), keyed = Some(TpchKg.nodesWithKey(s, d)))
       val retrieved = Eval(kb, HasValue("inNation", "n:1"))
       val (tp, fn, fp, tn) = LearningProblem.confusion(retrieved, elp)
       val rows = Seq((tp, fn, fp, tn,
@@ -378,9 +381,15 @@ object CeQueries {
          |  FROM nodesk) r
          |WHERE rn <= (SELECT COUNT(*) FROM customer WHERE c_custkey % 100 = 1)""".stripMargin),
     "lp_eval_metrics" -> TpchKgSql.withKg(
-      """retrieved AS (SELECT DISTINCT src AS id FROM edges WHERE pred = 'inNation' AND dst = 'n:1'),
+      s"""retrieved AS (SELECT DISTINCT src AS id FROM edges WHERE pred = 'inNation' AND dst = 'n:1'),
         |pos AS (SELECT DISTINCT src AS id FROM edges WHERE pred = 'inNation' AND dst IN ('n:1','n:2') AND src LIKE 'c:%'),
-        |neg AS (SELECT DISTINCT src AS id FROM edges WHERE pred = 'inNation' AND dst = 'n:1' AND src LIKE 's:%'),
+        |neg0 AS (SELECT DISTINCT src AS id FROM edges WHERE pred = 'inNation' AND dst = 'n:1' AND src LIKE 's:%'),
+        |neg AS (SELECT id FROM neg0
+        |  UNION ALL
+        |  SELECT id FROM (
+        |    SELECT id, row_number() OVER (ORDER BY ${Determinism.lcgDuck("k", 42L)}, id) AS rn
+        |    FROM nodesk) r
+        |  WHERE rn <= (SELECT COUNT(*) FROM pos) AND NOT EXISTS (SELECT 1 FROM neg0)),
         |c AS (SELECT
         |  CAST((SELECT COUNT(*) FROM pos WHERE id IN (SELECT id FROM retrieved)) AS BIGINT) AS tp,
         |  CAST((SELECT COUNT(*) FROM pos WHERE id NOT IN (SELECT id FROM retrieved)) AS BIGINT) AS fn,

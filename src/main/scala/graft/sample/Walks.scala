@@ -408,9 +408,9 @@ object WalkSampler {
     * prioritized (one O(|E|) join per draw; every step then reads ONLY
     * this table — no per-step rank probe), plain edges otherwise. Natural
     * partitioning is kept deliberately: a bucketed repartition was
-    * measured strictly slower (see the SparkSteps comment). Exposed so plan
-    * audits (ExplainAudit, PlanShapeSpec) exercise the exact shape the
-    * engine caches. Callers cache the result. */
+    * measured strictly slower (see the SparkSteps comment). Exposed so
+    * PlanShapeSpec audits the exact shape the engine caches. Callers cache
+    * the result. */
   private[graft] def neighborTable(
       kb: graft.core.Kb,
       ranks: Option[org.apache.spark.sql.DataFrame]): org.apache.spark.sql.DataFrame = {

@@ -310,7 +310,7 @@ object Curation {
     * filtered to count > 1, then the seed stream semi-joins it on gram —
     * a saturated gram ("the the the…" pathologies) lands on one reducer
     * only as a 1-row build side; AQE skew-split handles the probe side.
-    * The measured alternative (tools/DupSpanProbe, sf0.1 × 32 cores): a
+    * The measured alternative (as recorded at sf0.1 × 32 cores): a
     * single window `count over (partition by gram)` is 1.34 s vs this
     * shape's 2.22 s — one exchange instead of two — but a window sort
     * partition cannot be skew-split, so one hot gram would serialize an

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Executed-plan regression guards for the shapes the 100-TB story rests
-  * on (ExplainAudit prints them; these asserts keep them from silently
-  * regressing). Plan-string checks are pinned to Spark 4.1.2. */
+  * on: these asserts keep them from silently regressing. Plan-string
+  * checks are pinned to Spark 4.1.2. */
 class PlanShapeSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -24,14 +24,9 @@ class PlanShapeSpec extends SparkSpec {
     val kb = graft.sources.TpchKg.load(spark, sf)
     val elp = graft.lp.LearningProblem.encode(kb,
       graft.lp.Lp(Seq("c:1", "c:2"), Seq("s:1")))
-    val tagged = Seq(graft.expr.Named("Customer"), graft.expr.Named("Supplier"))
-      .zipWithIndex.map { case (ce, i) =>
-        graft.expr.Eval(kb, ce).select(lit(i).as("cid"), col("id"))
-      }.reduce(_.union(_)).distinct()
-      .join(broadcast(elp.kbPos.select(col("id"), lit(1L).as("p"))), Seq("id"), "left")
-      .join(broadcast(elp.kbNeg.select(col("id"), lit(1L).as("n"))), Seq("id"), "left")
-      .groupBy("cid").agg(count(lit(1)).as("cnt"))
-    val plan = tagged.queryExecution.executedPlan.toString
+    val frame = graft.lp.LearningProblem.scoringFrame(
+      Seq(graft.expr.Named("Customer"), graft.expr.Named("Supplier")).map(graft.expr.Eval(kb, _)), elp)
+    val plan = frame.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"))
     assert(!plan.contains("SortMergeJoin"),
       "LP-scale sides must not sort-merge against the retrieval stream")

@@ -69,6 +69,53 @@ class EvalSpec extends SparkSpec {
     assert((tp, fn, fp, tn) === ((2L, 0L, 0L, 2L)))
   }
 
+  // set semantics (reference abstracts.py:52-61): duplicate or shared
+  // pos/neg ids count once, through every scoring entry point
+  test("every scoring entry point gives the set-algebra confusion") {
+    val metrics = Seq(F1, Accuracy, Precision, Recall, WeightedAccuracy)
+    val males = FamilyKb.males.toSet
+    for (lp <- Seq(Lp(Seq("m1"), Seq("m1", "m1", "f1")),
+                   Lp(Seq("m1", "m1"), Seq("m1", "f1")),
+                   Lp(Seq("m1", "m2", "m1"), Seq("f1", "f2")))) {
+      val (p, n) = (lp.pos.toSet, lp.neg.toSet)
+      val expected = ((p & males).size.toLong, (p -- males).size.toLong,
+        (n & males).size.toLong, (n -- males).size.toLong)
+      val (tp, fn, fp, tn) = expected
+      val scores = metrics.map(_.score2(tp, fn, fp, tn))
+      val elp = LearningProblem.encode(kb, lp)
+      assert(LearningProblem.confusion(Eval(kb, Named("male")), elp) === expected, lp)
+      assert(LearningProblem.evaluateConceptAll(kb, Named("male"), metrics, elp) === scores, lp)
+      assert(metrics.map(LearningProblem.evaluateConcept(kb, Named("male"), _, elp)) === scores, lp)
+      val batch = metrics.map(LearningProblem.evaluateConceptsBatch(kb, Seq(Named("male")), _, elp).head)
+      assert(batch.map(b => (b._1, b._2)) === scores, lp)
+      assert(batch.map(_._3).toSet === Set(males.size.toLong), lp)
+    }
+  }
+
+  test("empty retrieval: (false, 0) per metric, confusion (0, |pos|, 0, |neg|)") {
+    val elp = LearningProblem.encode(kb, Lp(Seq("m1", "m2", "m1"), Seq("f1", "f2", "f3")))
+    assert(LearningProblem.confusion(Eval(kb, Bottom), elp) === ((0L, 2L, 0L, 3L)))
+    val metrics = Seq(F1, Accuracy, Precision, Recall, WeightedAccuracy)
+    val none = metrics.map(_ => (false, 0.0))
+    assert(LearningProblem.evaluateConceptAll(kb, Bottom, metrics, elp) === none)
+    assert(metrics.map(LearningProblem.evaluateConcept(kb, Bottom, _, elp)) === none)
+    assert(metrics.map(LearningProblem.evaluateConceptsBatch(kb, Seq(Bottom), _, elp).head) ===
+      metrics.map(_ => (false, 0.0, 0L)))
+  }
+
+  test("scoring one concept is one aggregate pass (JobCount)") {
+    val elp = LearningProblem.encode(kb, Lp(Seq("m1", "m2"), Seq("f1", "f2")))
+    val ce = Exists("hasChild", Named("female"))
+    LearningProblem.evaluateConceptAll(kb, ce, Seq(F1, Accuracy), elp) // warm
+    val sc = spark.sparkContext
+    val (_, all) = org.apache.spark.graftshim.JobCount(sc)(
+      LearningProblem.evaluateConceptAll(kb, ce, Seq(F1, Accuracy), elp))
+    val (_, one) = org.apache.spark.graftshim.JobCount(sc)(
+      LearningProblem.evaluateConcept(kb, ce, F1, elp))
+    info(s"evaluateConceptAll $all jobs, evaluateConcept $one jobs")
+    assert(all <= 11 && one <= 11, s"evaluateConceptAll $all, evaluateConcept $one jobs")
+  }
+
   test("negative sampling when neg empty: |neg| = |pos|, deterministic") {
     val elp = LearningProblem.encode(kb, Lp(Seq("m1", "m2", "m3"), Nil), seed = 7L)
     val neg1 = ids(elp.kbNeg)
