@@ -112,8 +112,13 @@ class EvalSpec extends SparkSpec {
       LearningProblem.evaluateConceptAll(kb, ce, Seq(F1, Accuracy), elp))
     val (_, one) = org.apache.spark.graftshim.JobCount(sc)(
       LearningProblem.evaluateConcept(kb, ce, F1, elp))
-    info(s"evaluateConceptAll $all jobs, evaluateConcept $one jobs")
+    val (_, batch) = org.apache.spark.graftshim.JobCount(sc)(
+      LearningProblem.evaluateConceptsBatch(kb, Seq(ce), F1, elp))
+    info(s"evaluateConceptAll $all jobs, evaluateConcept $one jobs, evaluateConceptsBatch $batch jobs")
     assert(all <= 11 && one <= 11, s"evaluateConceptAll $all, evaluateConcept $one jobs")
+    // every entry point is the same pass, so they pay the same job bill
+    assert(one === all && batch === all,
+      s"evaluateConceptAll $all, evaluateConcept $one, evaluateConceptsBatch $batch jobs")
   }
 
   test("negative sampling when neg empty: |neg| = |pos|, deterministic") {
