@@ -2,6 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftPin
+import org.apache.spark.storage.StorageLevel
 
 /** The knowledge base: four ABox fact tables + TBox metadata.
   *
@@ -237,46 +239,97 @@ final case class Kb(
     * survive (reference _base.py:178-180; SURVEY §7.3 #5). `keep` must have
     * a single column named `id`.
     *
-    * Two forms of one restriction, picked by the broadcast envelope
-    * ([[Pin.collectIfFits]]): when `keep` fits, its ids are collected once
+    * Three forms of one restriction, picked by the broadcast envelope.
+    * When `keep` fits ([[Pin.collectIfFits]]), its ids are collected once
     * (eagerly) and the four tables are IN-set filtered — a probe of a
     * driver-sized hash set needs no exchange, and the set rides in the
-    * task binary; otherwise `keep` is distinct'ed and semi-joined. */
+    * task binary. Above the envelope `keep` is distinct'ed and
+    * semi-joined. A cached KB ([[cache]]: a KB its user reads again, such
+    * as a sampling user drawing many samples from it) whose four tables
+    * fit the envelope together also keeps them on the driver
+    * ([[imageIfFits]], [[KbImage]]), from its first restriction on, and
+    * filters their rows there into four local relations whenever the
+    * sample ids are on the driver: the IN-set form's rows in its order,
+    * with no job. An uncached KB never builds the image, so a one-shot
+    * sample of it runs the IN-set form's jobs and no more. */
   def restrictedTo(keep: DataFrame): Kb = {
     val id = keep.select(col("id"))
-    // rows of `df` whose column `c` is a kept id
-    val kept: (DataFrame, String) => DataFrame = Pin.collectIfFits(id) match {
-      case Some(rows) =>
-        val ids = rows.map(_.get(0)).distinct.toSeq
-        (df, c) => df.filter(col(c).isInCollection(ids))
-      case None =>
-        val k = id.distinct()
-        (df, c) => df.join(k.withColumnRenamed("id", c), Seq(c), "left_semi")
+    val ids = Pin.collectIfFits(id).map(_.map(_.get(0)))
+    (ids, ids.flatMap(_ => imageIfFits)) match {
+      case (Some(v), Some(img)) =>
+        val Seq(n, e, a, t) = img.restrictedTo(spark, v.iterator)
+        Kb(n, e, a, t, tbox)
+      case _ =>
+        // rows of `df` whose column `c` is a kept id
+        val kept: (DataFrame, String) => DataFrame = ids match {
+          case Some(v) =>
+            val set = v.distinct.toSeq
+            (df, c) => df.filter(col(c).isInCollection(set))
+          case None =>
+            val k = id.distinct()
+            (df, c) => df.join(k.withColumnRenamed("id", c), Seq(c), "left_semi")
+        }
+        Kb(
+          nodes = kept(nodes, "id"),
+          edges = kept(kept(edges, "src"), "dst").select(col("src"), col("pred"), col("dst")),
+          attrs = kept(attrs, "node"),
+          types = kept(types, "node"),
+          tbox = tbox)
     }
-    Kb(
-      nodes = kept(nodes, "id"),
-      edges = kept(kept(edges, "src"), "dst").select(col("src"), col("pred"), col("dst")),
-      attrs = kept(attrs, "node"),
-      types = kept(types, "node"),
-      tbox = tbox)
   }
 
+  /** the optimizer's estimate of the four tables an image holds, summed
+    * once per instance; None when they cannot be imaged */
+  @transient private[graft] lazy val imageBytes: Option[BigInt] =
+    KbImage.tables(this).map(_.map(t => GraftPin.estimate(t)._1).sum)
+  @transient @volatile private var image: KbImage = _
+
+  /** This KB's driver image when every table is cached or local (what
+    * [[cache]] leaves) and the optimizer estimates the four together
+    * within the envelope now: built by one collect per table on first
+    * use, then held until [[unpersist]] — across every sample drawn from
+    * the instance. None, with no job, otherwise. The bound is the
+    * estimate, not the bytes the image holds. */
+  private[graft] def imageIfFits: Option[KbImage] =
+    if (!Seq(nodes, edges, attrs, types).forall(Kb.isCached) ||
+        !imageBytes.exists(_ <= GraftPin.threshold(spark))) None
+    else synchronized {
+      if (image == null) image = KbImage(this)
+      Some(image)
+    }
+
+  /** whether [[imageIfFits]] has built the image */
+  private[graft] def imageBuilt: Boolean = image != null
+
   /** Drop data-property declarations with no remaining assertion
-    * (reference _base.py:278-291). One job: each partition emits its set
-    * of props and the driver unions them — bounded by partitions ×
-    * |dataProps|, driver-scale. */
+    * (reference _base.py:278-291). Local attributes (a restriction's
+    * image form) are read on the driver with no job; otherwise one job:
+    * each partition emits its set of props and the driver unions them —
+    * bounded by partitions × |dataProps|, driver-scale. */
   def pruneUnusedDataProps(): Kb = {
-    val used = attrs.select(col("prop"))
-      .mapPartitions((it: Iterator[Row]) => it.map(_.getString(0)).toSet.iterator)(Encoders.STRING)
-      .collect().toSet
+    val props = attrs.select(col("prop"))
+    val used =
+      if (attrs.isLocal) props.collect().map(_.getString(0)).toSet
+      else props.mapPartitions((it: Iterator[Row]) => it.map(_.getString(0)).toSet.iterator)(Encoders.STRING)
+        .collect().toSet
     copy(tbox = tbox.copy(props = tbox.props.filter(p => p.kind != "data" || used(p.prop))))
   }
 
-  def cache(): Kb = Kb(nodes.cache(), edges.cache(), attrs.cache(), types.cache(), tbox)
-  def unpersist(): Unit = { nodes.unpersist(); edges.unpersist(); attrs.unpersist(); types.unpersist() }
+  /** Cache the four tables; a local relation already lives on the driver
+    * and is left as it is (caching it would only add a job per table). */
+  def cache(): Kb = Kb(Kb.cached(nodes), Kb.cached(edges), Kb.cached(attrs), Kb.cached(types), tbox)
+
+  /** Unpersist the four tables and drop the driver image. */
+  def unpersist(): Unit = {
+    Seq(nodes, edges, attrs, types).filterNot(_.isLocal).foreach(_.unpersist())
+    synchronized { image = null }
+  }
 }
 
 object Kb {
+  private def cached(df: DataFrame): DataFrame = if (df.isLocal) df else df.cache()
+  private def isCached(df: DataFrame): Boolean = df.isLocal || df.storageLevel != StorageLevel.NONE
+
   /** Empty KB bound to a session (unit-test convenience). */
   def empty(spark: SparkSession): Kb = {
     def df(s: org.apache.spark.sql.types.StructType) =

@@ -1,8 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.graftshim.GraftPin
+import org.apache.spark.sql.types.StructType
 
 /** A materialized frame that knows its own size: `df` reads the checkpointed
   * rows through a plan leaf whose statistics are the COUNTED `rows` and
@@ -59,4 +60,9 @@ object Pin {
     val (estimate, threshold) = GraftPin.estimate(df)
     if (estimate <= threshold) Some(df.collect()) else None
   }
+
+  /** Driver-held `rows` as a local relation: planned as a LocalTableScan,
+    * collected with no job, and sized exactly by the optimizer. */
+  def local(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 }

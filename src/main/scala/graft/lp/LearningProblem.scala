@@ -1,6 +1,6 @@
 package graft.lp
 
-import graft.core.{Determinism, Kb}
+import graft.core.{Determinism, Kb, Pin}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ object LearningProblem {
     * from kb_all with |neg| = |pos| (reference :686-688 `random.sample`) —
     * here via the seeded data-keyed LCG order over `keyed` (id, k), so the
     * draw is deterministic across parallelism levels; the sampled node ids
-    * are already distinct. */
+    * are already distinct, and are drawn here, in one job. */
   def encode(kb: Kb, lp: Lp, keyed: Option[DataFrame] = None, seed: Long = 42L): EncodedLp = {
     require(lp.pos.nonEmpty, "0 < |pos| required (reference knowledge_base.py:679)")
     val spark = kb.spark
@@ -34,10 +34,13 @@ object LearningProblem {
         val k = keyed.getOrElse(
           all.withColumn("k", abs(xxhash64(col("id")))))
         // global top-|pos| via TakeOrderedAndProject — NOT a row_number over
-        // an unpartitioned window, which would single-task-sort all nodes
-        k.orderBy(Determinism.lcg(col("k"), seed), col("id"))
+        // an unpartitioned window, which would single-task-sort all nodes —
+        // collected once into a local relation of |pos| rows, so the scoring
+        // passes and kb_diff do not re-plan the top-|pos| over every node
+        val drawn = k.orderBy(Determinism.lcg(col("k"), seed), col("id"))
           .limit(pos.size)
           .select("id")
+        Pin.local(spark, drawn.collect(), drawn.schema)
       }
     EncodedLp(
       kbPos = posDf,

@@ -261,7 +261,7 @@ object PageRank {
       else dsts.map(v => Row(ids(v), next(v)))
     val rows = if (sweeps == 0) ranks
       else ranks ++ nodeIds.map(dense).filterNot(isDst).map(u => Row(ids(u), tele(u)))
-    Some((spark.createDataFrame(java.util.Arrays.asList(rows: _*), RankSchema), t))
+    Some((Pin.local(spark, rows, RankSchema), t))
   }
 
   private val RankSchema = StructType(Seq(StructField("id", StringType),

@@ -26,8 +26,12 @@ final case class DrawStats(steps: Int)
 object Samplers {
 
   /** get_subgraph_by_remove (reference _base.py:158-196), purely
-    * functionally: derive nodes'/edges'/attrs'/types' by semi joins; apply
-    * the dpp quirk; prune unused data-property declarations.
+    * functionally: derive nodes'/edges'/attrs'/types' by [[Kb.restrictedTo]];
+    * apply the dpp quirk; prune unused data-property declarations. When the
+    * restriction comes back as local relations (the KB's driver image),
+    * the selected-edge probe and the pruning run on the driver as well, so
+    * a walk or fire sample at dpp 1.0 is finalized and collected with no
+    * Spark job.
     *
     * dpp semantics (reference _base.py:264-276, SURVEY M2): dpp is the
     * fraction REMOVED per node — nr_to_remove = int(dpp·cnt) — and
@@ -43,14 +47,19 @@ object Samplers {
       case None => base.edges // include_all_edges=True: induced
       case Some(sel) =>
         // under the envelope the selected edges are de-duplicated on the
-        // driver and probed as a local relation, otherwise distinct'ed
+        // driver: probed there when the restricted edges are local too (the
+        // image form), else probed as a local relation; above it distinct'ed
         val triples = sel.select("src", "pred", "dst")
-        val selected = Pin.collectIfFits(triples) match {
+        Pin.collectIfFits(triples) match {
+          case Some(rows) if base.edges.isLocal =>
+            // a null key matches nothing, as in the semi-join
+            val selected = rows.filterNot(_.anyNull).map(_.toSeq).toSet
+            Pin.local(kb.spark, base.edges.collect().filter(r => selected(r.toSeq)), base.edges.schema)
           case Some(rows) =>
-            kb.spark.createDataFrame(java.util.Arrays.asList(rows.distinct: _*), triples.schema)
-          case None => triples.distinct()
+            base.edges.join(Pin.local(kb.spark, rows.distinct, triples.schema), Seq("src", "pred", "dst"), "left_semi")
+          case None =>
+            base.edges.join(triples.distinct(), Seq("src", "pred", "dst"), "left_semi")
         }
-        base.edges.join(selected, Seq("src", "pred", "dst"), "left_semi")
     }
     val attrs =
       if (dpp >= 1.0) base.attrs // reference no-op quirk at dpp=1.0

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{DataFrame, Row, classic}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
@@ -70,6 +70,7 @@ object GraftPin {
     (ds.queryExecution.optimizedPlan.stats.sizeInBytes, threshold(ds.sparkSession))
   }
 
-  private def threshold(session: classic.SparkSession): Long =
-    session.sessionState.conf.autoBroadcastJoinThreshold
+  /** The session's autoBroadcastJoinThreshold: the one broadcast envelope. */
+  def threshold(session: SparkSession): Long =
+    session.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 }

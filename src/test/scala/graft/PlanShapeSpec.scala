@@ -477,24 +477,51 @@ class PlanShapeSpec extends SparkSpec {
       s"a connected ordered pattern must stay equi-joins:\n$plan")
   }
 
+  /** the sf TPC-H KG with materialized tables (TpchKg's edge table is
+    * itself a distinct over lineitem), pinned rather than cached — a fresh
+    * instance per call */
+  private def materializedTpchKb(): graft.core.Kb = {
+    val k = graft.sources.TpchKg.load(spark, sf)
+    def pin(df: org.apache.spark.sql.DataFrame) = graft.core.Pin(df).df
+    k.copy(nodes = pin(k.nodes), edges = pin(k.edges), attrs = pin(k.attrs), types = pin(k.types))
+  }
+
+  private def finalizedPlans(s: graft.core.Kb) = Seq("nodes" -> s.nodes, "edges" -> s.edges,
+    "attrs" -> s.attrs, "types" -> s.types).map { case (t, df) => t -> df.queryExecution.executedPlan.toString }
+
   test("finalized fire sample: IN-set filters under the envelope, no exchange; semi-joins above") {
-    // materialized tables, as a sampling user caches them (TpchKg's edge
-    // table is itself a distinct over lineitem)
-    val kb = {
-      val k = graft.sources.TpchKg.load(spark, sf)
-      def pin(df: org.apache.spark.sql.DataFrame) = graft.core.Pin(df).df
-      k.copy(nodes = pin(k.nodes), edges = pin(k.edges), attrs = pin(k.attrs), types = pin(k.types))
-    }
+    val kb = materializedTpchKb()
     val drawn = new graft.sample.ForestFireSampler(kb, seed = 3).draw(100)
-    def plans(s: graft.core.Kb) = Seq("nodes" -> s.nodes, "edges" -> s.edges,
-      "attrs" -> s.attrs, "types" -> s.types).map { case (t, df) => t -> df.queryExecution.executedPlan.toString }
-    for ((t, plan) <- plans(graft.sample.Samplers.finalizeSample(kb, drawn))) {
+    // an uncached KB holds no driver image: IN-set filters, whether or not it fits
+    for ((t, plan) <- finalizedPlans(graft.sample.Samplers.finalizeSample(kb, drawn))) {
       assert(!plan.contains("Exchange"), s"$t: a fitting sample needs no exchange:\n$plan")
       assert(plan.contains("INSET") && !plan.contains("Join"), s"$t: IN-set filter form:\n$plan")
     }
     noBroadcast {
-      for ((t, plan) <- plans(graft.sample.Samplers.finalizeSample(kb, drawn)))
+      for ((t, plan) <- finalizedPlans(graft.sample.Samplers.finalizeSample(kb, drawn)))
         assert(plan.contains("LeftSemi") && !plan.contains("INSET"), s"$t: semi-join form:\n$plan")
     }
+  }
+
+  test("finalized fire sample from a cached KB: a driver gather when the KB fits, IN-set filters when only the sample does") {
+    val kb = materializedTpchKb().cache()
+    try {
+      val drawn = new graft.sample.ForestFireSampler(kb, seed = 3).draw(100)
+      // the KB's four tables fit the envelope: local relations filtered from its image
+      for ((t, plan) <- finalizedPlans(graft.sample.Samplers.finalizeSample(kb, drawn))) {
+        assert(plan.contains("LocalTableScan"), s"$t: image form:\n$plan")
+        assert(!plan.contains("Exchange") && !plan.contains("Join") && !plan.contains("INSET"),
+          s"$t: a gathered sample plans no exchange, join or IN-set:\n$plan")
+      }
+      // a threshold the sample fits and the KB does not: IN-set filters
+      val kbBytes = kb.imageBytes.get
+      assert(graft.core.Pin.collectIfFits(drawn.sampledNodes.select("id")).isDefined)
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> (kbBytes - 1).toString) {
+        for ((t, plan) <- finalizedPlans(graft.sample.Samplers.finalizeSample(kb, drawn))) {
+          assert(!plan.contains("Exchange"), s"$t: a fitting sample needs no exchange:\n$plan")
+          assert(plan.contains("INSET") && !plan.contains("Join"), s"$t: IN-set filter form:\n$plan")
+        }
+      }
+    } finally kb.unpersist()
   }
 }

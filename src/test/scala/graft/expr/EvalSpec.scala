@@ -121,6 +121,20 @@ class EvalSpec extends SparkSpec {
       s"evaluateConceptAll $all, evaluateConcept $one, evaluateConceptsBatch $batch jobs")
   }
 
+  test("sampled negatives are drawn once in encode: an empty-neg pass costs an explicit one's jobs (JobCount)") {
+    val ce = Exists("hasChild", Named("female"))
+    val explicit = LearningProblem.encode(kb, Lp(Seq("m1", "m2"), Seq("f1", "f2")))
+    val sampled = LearningProblem.encode(kb, Lp(Seq("m1", "m2"), Nil), seed = 7L)
+    assert(sampled.kbNeg.isLocal, "the sampled negative side is a local relation")
+    def pass(elp: EncodedLp) = LearningProblem.evaluateConceptAll(kb, ce, Seq(F1, Accuracy), elp)
+    pass(explicit); pass(sampled) // warm
+    val sc = spark.sparkContext
+    val (_, withNeg) = org.apache.spark.graftshim.JobCount(sc)(pass(explicit))
+    val (_, drawnNeg) = org.apache.spark.graftshim.JobCount(sc)(pass(sampled))
+    info(s"scoring pass: explicit neg $withNeg jobs, sampled neg $drawnNeg jobs")
+    assert(drawnNeg === withNeg, s"sampled neg $drawnNeg jobs, explicit neg $withNeg")
+  }
+
   test("negative sampling when neg empty: |neg| = |pos|, deterministic") {
     val elp = LearningProblem.encode(kb, Lp(Seq("m1", "m2", "m3"), Nil), seed = 7L)
     val neg1 = ids(elp.kbNeg)
@@ -149,18 +163,25 @@ class EvalSpec extends SparkSpec {
     assert(ids(Eval(view, Named("male"))) === FamilyKb.males.toSet)
   }
 
-  // both forms: IN-set filters (default threshold), semi-joins (-1)
+  // all three forms: the driver image (FamilyKb's tables are local
+  // relations, which a KB holding its image may be), IN-set filters (a
+  // threshold the sample fits and the KB does not), semi-joins (-1)
   test("restrictedTo drops dangling assertions on both endpoints") {
-    def check(): Unit = {
+    def check(local: Boolean): Unit = {
       val keep = spark.createDataset(Seq("m1", "f1", "m2"))(
         org.apache.spark.sql.Encoders.STRING).toDF("id")
       val sub = kb.restrictedTo(keep)
+      assert(Seq(sub.nodes, sub.edges, sub.attrs, sub.types).forall(_.isLocal) === local,
+        s"image form expected: $local")
       assert(sub.nodes.count() === 3)
       assert(sub.edges.collect().map(r => (r.getString(1), r.getString(0), r.getString(2))).toSet ===
         Set(("hasChild", "m1", "m2"), ("hasChild", "f1", "m2")))
       assert(sub.attrs.count() === 4) // m1 age+nickname, f1 age, m2 age
     }
-    check()
-    noBroadcast(check())
+    check(local = true)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> (kb.imageBytes.get - 1).toString) {
+      check(local = false)
+    }
+    noBroadcast(check(local = false))
   }
 }
